@@ -1,7 +1,7 @@
 package graft.functions
 
 import org.apache.spark.sql.{Column, SparkSession}
-import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression, ExpressionInfo}
+import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, BoundReference, Expression, ExpressionInfo, Literal, UnsafeArrayData}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.util.ArrayData
 import org.apache.spark.sql.functions.call_function
@@ -12,31 +12,28 @@ import org.apache.spark.sql.catalyst.FunctionIdentifier
 /** Native Catalyst cosine similarity over two `array<float|double>`
   * columns (the hot inner loop of vector search, SURVEY.md §7.2(6)).
   *
-  * The composed form (`zip_with` + `aggregate`, VectorSearch.cosineSim)
-  * materializes intermediate arrays and evaluates a lambda per
-  * element; this expression generates a single fused primitive loop
-  * via `doGenCode` — no allocations, no virtual calls — and stays
-  * inside whole-stage codegen. Interpreted `eval` is provided for
-  * non-codegen paths. Both accumulate left-to-right in double, so
-  * results are bit-identical to the composed form and to DuckDB's
+  * The one cosine kernel of the engine: `VectorSearch.cosineSim` (and
+  * through it the AnnSearch/IvfSearch reranks and the distributed top-k
+  * scan) builds this expression directly, and the resident top-k path
+  * evaluates it row by row through [[CosineSimilarity.bound]].
+  * `doGenCode` generates a single fused primitive loop — no
+  * allocations, no virtual calls — inside whole-stage codegen;
+  * interpreted `eval` runs the same loop. Both accumulate left-to-right
+  * in double, so they are bit-identical to each other and to DuckDB's
   * `list_cosine_similarity` on DOUBLE[].
   *
-  * Returns null for null inputs, length mismatch, or any null
-  * ELEMENT (the composed form's `x * y` null-poisons the whole
-  * aggregate — matched here by an explicit isNullAt check, instead
-  * of reading a garbage 0 out of the null slot); 0-norm inputs yield
-  * NaN (0/0), matching the composed form.
+  * Returns null for null inputs, length mismatch, or any null ELEMENT
+  * (an explicit isNullAt check, instead of reading a garbage 0 out of
+  * the null slot — the SQL null-propagation of an element-wise
+  * product); 0-norm inputs yield NaN (0/0).
   */
 case class CosineSimilarity(left: Expression, right: Expression)
     extends BinaryExpression {
 
   override def checkInputDataTypes(): org.apache.spark.sql.catalyst.analysis.TypeCheckResult = {
     import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
-    def ok(dt: DataType): Boolean = dt match {
-      case ArrayType(FloatType, _) | ArrayType(DoubleType, _) => true
-      case _ => false
-    }
-    if (ok(left.dataType) && ok(right.dataType)) TypeCheckResult.TypeCheckSuccess
+    if (CosineSimilarity.accepts(left.dataType) && CosineSimilarity.accepts(right.dataType))
+      TypeCheckResult.TypeCheckSuccess
     else TypeCheckResult.TypeCheckFailure(
       s"cosine_sim requires array<float|double> arguments, got ${left.dataType.sql} and ${right.dataType.sql}")
   }
@@ -98,6 +95,19 @@ case class CosineSimilarity(left: Expression, right: Expression)
   override protected def withNewChildrenInternal(
       newLeft: Expression, newRight: Expression): Expression =
     copy(left = newLeft, right = newRight)
+}
+
+object CosineSimilarity {
+  def accepts(dt: DataType): Boolean = dt match {
+    case ArrayType(FloatType, _) | ArrayType(DoubleType, _) => true
+    case _ => false
+  }
+
+  /** The kernel against a constant `query`, reading its vector from
+    * column `ordinal` (of type `dataType`) of the row passed to `eval`. */
+  def bound(ordinal: Int, dataType: DataType, query: Array[Double]): CosineSimilarity =
+    CosineSimilarity(BoundReference(ordinal, dataType, nullable = true),
+      Literal(UnsafeArrayData.fromPrimitiveArray(query), ArrayType(DoubleType, containsNull = false)))
 }
 
 /** Registration: `GraftExtensions` for `spark.sql.extensions` config,

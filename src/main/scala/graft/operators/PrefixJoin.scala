@@ -40,7 +40,7 @@ object PrefixJoin {
     * Jaccard lemma (first common token of a qualifying pair falls in
     * both prefixes) and the containment lemma (a set whose t-fraction
     * is covered must share a prefix token with its coverer). The
-    * result is persist()ed — both joins read it ≥3 times.
+    * result is persist()ed — both sides of the fused join read it.
     */
   private def rankedArrays(
       spark: SparkSession,
@@ -49,7 +49,7 @@ object PrefixJoin {
       textCol: String,
       threshold: Double,
       pretokenized: Option[DataFrame],
-      maxBroadcastVocab: Long): (DataFrame, Long, Long) = {
+      maxBroadcastVocab: Long): DataFrame = {
     import spark.implicits._
 
     // id kept in its NATIVE type (string ids are legal, as in
@@ -100,36 +100,16 @@ object PrefixJoin {
 
     // per-doc rank array, ascending = rarest-first; prefix size
     // p = nt − ceil(t·nt) + 1
-    val ranked = toks.join(rankSide, Seq("tok"))
+    toks.join(rankSide, Seq("tok"))
       .groupBy($"id")
       .agg(sort_array(collect_list($"r")).as("ranks"))
       .withColumn("nt", size($"ranks"))
       .withColumn("p", ($"nt" - ceil(lit(threshold) * $"nt") + 1).cast("int"))
-      // feeds candidates + two verify joins; storage released by the
-      // caller's clearCache between queries (Bench/Verify do), the
+      // both sides of the fused self-join read it; storage released by
+      // the caller's clearCache between queries (Bench/Verify do), the
       // repo-wide convention for operator-internal persists
       .persist()
-    // eager count: one tokenize/rank build feeds ≥3 readers, and the
-    // doc count + total token count gate the verify-side broadcast
-    // (the r14 ×10 probe found the verify joins falling to sort-merge
-    // past the 10 MB auto threshold — two full shuffles+sorts of the
-    // candidate stream, ×43 wall for ×10 data; an explicit size-gated
-    // hint keeps the doc-sized build side broadcast while it fits —
-    // and the r14 ADVICE found a row-count-only gate blind to a
-    // million docs each carrying a LARGE rank array)
-    val org.apache.spark.sql.Row(nDocs: Long, totalToks: Long) = ranked
-      .agg(count(lit(1)), coalesce(sum($"nt".cast("long")), lit(0L)))
-      .head()
-    (ranked, nDocs, totalToks)
   }
-
-  /** Estimated broadcast bytes for the ranked doc table: 8 bytes per
-    * long rank + ~64 bytes/row of array+id overhead, ×2 because the
-    * verify stage broadcasts TWO projections (the _a and _b sides are
-    * separate broadcast variables) — deliberately pessimistic (same
-    * convention as Dedup.jaccardPairs). */
-  private def estRankedBytes(nDocs: Long, totalToks: Long): Long =
-    2L * (totalToks * 8L + nDocs * 64L)
 
   /** All pairs with exact Jaccard(token sets) > threshold:
     * (id_a, id_b, jaccard), r4-rounded. Output is identical to the
@@ -143,9 +123,7 @@ object PrefixJoin {
       textCol: String,
       threshold: Double,
       pretokenized: Option[DataFrame] = None,
-      maxBroadcastVocab: Long = 10000000L,
-      maxBroadcastDocs: Long = 1000000L,
-      maxBroadcastBytes: Long = 1L << 30): DataFrame = {
+      maxBroadcastVocab: Long = 10000000L): DataFrame = {
     import spark.implicits._
     require(threshold > 0 && threshold < 1, "threshold in (0,1)")
     graft.functions.SortedIntersectCount.register(spark)
@@ -153,13 +131,12 @@ object PrefixJoin {
     graft.functions.FirstCommonBounded.register(spark)
     import graft.functions.FirstCommonBounded.first_common_bounded
 
-    val (ranked, _, _) = rankedArrays(spark, docs, idCol, textCol,
+    val ranked = rankedArrays(spark, docs, idCol, textCol,
       threshold, pretokenized, maxBroadcastVocab)
 
     // FULLY FUSED candidate + verify join (r19; supersedes the r14
-    // hydrate-then-verify shape — maxBroadcastDocs/Bytes kept in the
-    // signature for callers but no longer consulted, there is no
-    // verify join left to broadcast). Prefix rows carry their doc's
+    // hydrate-then-verify shape — no verify join is left to
+    // broadcast, so no doc or byte gate). Prefix rows carry their doc's
     // whole rank array (the array rides the SKINNY pre-join stream —
     // Σ prefix rows, linear — never the quadratic candidate stream),
     // so every filter runs INSIDE the join, cheapest first:
@@ -233,9 +210,7 @@ object PrefixJoin {
       threshold: Double,
       pretokenized: Option[DataFrame] = None,
       minSize: Int = 1,
-      maxBroadcastVocab: Long = 10000000L,
-      maxBroadcastDocs: Long = 1000000L,
-      maxBroadcastBytes: Long = 1L << 30): DataFrame = {
+      maxBroadcastVocab: Long = 10000000L): DataFrame = {
     import spark.implicits._
     require(threshold > 0 && threshold < 1, "threshold in (0,1)")
     graft.functions.SortedIntersectCount.register(spark)
@@ -243,7 +218,7 @@ object PrefixJoin {
 
     graft.functions.FirstCommonBounded.register(spark)
     import graft.functions.FirstCommonBounded.first_common_bounded
-    val (ranked, _, _) = rankedArrays(spark, docs, idCol, textCol,
+    val ranked = rankedArrays(spark, docs, idCol, textCol,
       threshold, pretokenized, maxBroadcastVocab)
     // the minSize floor applies to the COVEREE (A) side only: tiny
     // sets are trivially contained everywhere and would make the

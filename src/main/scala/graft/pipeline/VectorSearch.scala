@@ -1,7 +1,9 @@
 package graft.pipeline
 
-import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.{Column, DataFrame, GraftSqlBridge}
 import org.apache.spark.sql.functions._
+
+import graft.functions.CosineSimilarity
 
 /** Vector similarity scoring + top-k retrieval — the engine-side form
   * of the reference's hosted vector-search index + query (SURVEY
@@ -10,9 +12,18 @@ import org.apache.spark.sql.functions._
   * `:167-171` `similarity_search(..., num_results=5)`).
   *
   * The index is just a table (id, embedding) — the reference's
-  * delta-sync index materialized as first-class data. Query = score
-  * + top-k, planned by Catalyst as TakeOrderedAndProject over a scan:
-  * no global sort, partial top-k per partition, k rows to the driver.
+  * delta-sync index materialized as first-class data. Query = score +
+  * top-k, served one of two ways:
+  *  - a small file-backed index (a bare `spark.read` of files within
+  *    `spark.sql.autoBroadcastJoinThreshold`) is answered from rows the
+  *    driver keeps per data file ([[ResidentIndex]]), scored and ranked
+  *    at call time: the result is a local relation, so collecting it
+  *    runs no job, and a refresh costs one job over the new files only;
+  *  - anything else (filtered or joined frames, in-memory Datasets,
+  *    ANN candidates, large indexes) stays lazy and distributed —
+  *    Catalyst plans it as TakeOrderedAndProject over a scan: no
+  *    global sort, partial top-k per partition, k rows to the driver.
+  * Both rank by the same kernel and the same (sim desc, id) order.
   *
   * Scale path (100 TB): brute force is a full scan per query —
   * correct baseline, O(N). `graft.operators.AnnSearch` adds the
@@ -20,26 +31,24 @@ import org.apache.spark.sql.functions._
   */
 object VectorSearch {
 
-  /** Cosine similarity of two `array<float|double>` columns, computed
-    * entirely in Catalyst expressions (`zip_with` + `aggregate` —
-    * no UDF, stays codegen-friendly). Accumulates left-to-right in
-    * double, matching DuckDB's `list_cosine_similarity` on DOUBLE[]
+  /** Cosine similarity of two `array<float|double>` columns: the
+    * codegen [[graft.functions.CosineSimilarity]] kernel, built
+    * directly (no function-registry lookup). Accumulates left-to-right
+    * in double, matching DuckDB's `list_cosine_similarity` on DOUBLE[]
     * for oracle parity.
     */
-  def cosineSim(a: Column, b: Column): Column = {
-    val ad = transform(a, x => x.cast("double"))
-    val bd = transform(b, x => x.cast("double"))
-    val dot = aggregate(zip_with(ad, bd, (x, y) => x * y), lit(0.0), (acc, x) => acc + x)
-    val na = aggregate(transform(ad, x => x * x), lit(0.0), (acc, x) => acc + x)
-    val nb = aggregate(transform(bd, x => x * x), lit(0.0), (acc, x) => acc + x)
-    dot / (sqrt(na) * sqrt(nb))
-  }
+  def cosineSim(a: Column, b: Column): Column =
+    GraftSqlBridge.column(
+      CosineSimilarity(GraftSqlBridge.expression(a), GraftSqlBridge.expression(b)))
 
   /** Array literal column for a query vector. */
   def vecLit(v: Seq[Double]): Column = array(v.map(lit): _*)
 
-  /** Brute-force top-k by cosine against a constant query vector.
-    * Deterministic: ties broken by `idCol`.
+  /** Brute-force top-k by cosine against a constant query vector:
+    * the index columns plus `sim`, at most `k` rows ordered by (sim
+    * desc, `idCol`). Deterministic: ties broken by `idCol`. Served
+    * from resident rows when [[ResidentIndex]] applies, else planned
+    * lazily over the scan.
     */
   def topK(
       index: DataFrame,
@@ -47,16 +56,18 @@ object VectorSearch {
       idCol: String,
       query: Seq[Double],
       k: Int): DataFrame = {
-    index
-      .withColumn("sim", cosineSim(col(embeddingCol), vecLit(query)))
-      .orderBy(col("sim").desc, col(idCol))
-      .limit(k)
+    ResidentIndex.topK(index, embeddingCol, idCol, query, k).getOrElse(
+      index
+        .withColumn("sim", cosineSim(col(embeddingCol), vecLit(query)))
+        .orderBy(col("sim").desc, col(idCol))
+        .limit(k))
   }
 
   /** The reference's `similarity_search(query_text, …, num_results)`:
     * embed the query text with the same embedder that built the
     * index, then score+top-k. One driver-side embed call (a single
-    * text), then a fully distributed scan.
+    * text), then [[topK]]: resident rows for a small file-backed
+    * index, a distributed scan otherwise.
     */
   def searchText(
       index: DataFrame,

@@ -64,11 +64,24 @@ object IncrementalIndex {
       .option("checkpointLocation", checkpointDir)
       .foreachBatch { (batch: Dataset[Row], batchId: Long) =>
         Inference.embedChunks(batch.as[Chunk], embedder, batchSize)
+          .coalesce(outputFiles(batch))
           .write.mode("overwrite").parquet(s"$indexDir/batch=$batchId")
         ()
       }
       .start()
     query.awaitTermination()
+  }
+
+  /** Files to write a micro-batch as: one per
+    * `spark.sql.files.maxPartitionBytes` of its input, from planning
+    * statistics (no count job). Without it the batch is written one
+    * file per open-cost scan split — four files for a few kilobytes of
+    * new chunks — and every later index read lists and opens them all.
+    * Applied with `coalesce`, so no shuffle is added. */
+  private def outputFiles(batch: DataFrame): Int = {
+    val bytes = batch.queryExecution.optimizedPlan.stats.sizeInBytes
+    val per = BigInt(batch.sparkSession.sessionState.conf.filesMaxPartitionBytes)
+    ((bytes + per - 1) / per).max(1).min(Int.MaxValue).toInt
   }
 
   /** Streaming exact deduplication (D1 on a stream): content-hash

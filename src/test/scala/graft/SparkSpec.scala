@@ -1,5 +1,9 @@
 package graft
 
+import java.util.concurrent.{CountDownLatch, TimeUnit}
+import java.util.concurrent.atomic.AtomicInteger
+
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.SparkSession
 import org.scalatest.BeforeAndAfterAll
 import org.scalatest.funsuite.AnyFunSuite
@@ -7,9 +11,36 @@ import org.scalatest.funsuite.AnyFunSuite
 /** Shared local SparkSession for specs. */
 trait SparkSpec extends AnyFunSuite with BeforeAndAfterAll {
   lazy val spark: SparkSession = SparkSpec.session
+
+  /** Spark jobs submitted while `body` runs. Listener events arrive
+    * asynchronously but in order, so a marker job run after `body`
+    * (and not counted) proves every earlier job start was delivered. */
+  def jobsDuring(body: => Unit): Int = {
+    val sc = spark.sparkContext
+    val marker = java.util.UUID.randomUUID().toString
+    val jobs = new AtomicInteger
+    val flushed = new CountDownLatch(1)
+    val listener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit =
+        if (Option(e.properties).exists(p => marker == p.getProperty(SparkSpec.MarkerKey)))
+          flushed.countDown()
+        else jobs.incrementAndGet()
+    }
+    sc.addSparkListener(listener)
+    try {
+      body
+      sc.setLocalProperty(SparkSpec.MarkerKey, marker)
+      try sc.parallelize(Seq(1), 1).count()
+      finally sc.setLocalProperty(SparkSpec.MarkerKey, null)
+      assert(flushed.await(60, TimeUnit.SECONDS), "listener bus did not deliver the marker job")
+      jobs.get
+    } finally sc.removeSparkListener(listener)
+  }
 }
 
 object SparkSpec {
+  private val MarkerKey = "graft.spec.jobsDuring"
+
   lazy val session: SparkSession = {
     val s = SparkSession.builder()
       .master("local[4]")

@@ -2,24 +2,35 @@ package graft.functions
 
 import graft.SparkSpec
 import graft.pipeline.VectorSearch
-import org.apache.spark.sql.functions._
+import org.apache.spark.sql.catalyst.InternalRow
+import org.apache.spark.sql.catalyst.expressions.UnsafeArrayData
+import org.apache.spark.sql.types.{ArrayType, FloatType}
 
 class CosineSimilaritySpec extends SparkSpec {
 
-  test("native expression matches composed zip_with/aggregate form bit-for-bit") {
+  test("native kernel: codegen and eval match a double reference") {
     import spark.implicits._
-    GraftFunctions.register(spark)
     val r = new scala.util.Random(3)
-    val df = (0 until 200).map { i =>
+    val data = (0 until 200).map { i =>
       (i.toLong, Array.fill(64)(r.nextGaussian().toFloat), Array.fill(64)(r.nextGaussian().toFloat))
-    }.toDF("id", "a", "b")
-    val both = df.select(
-      GraftFunctions.cosine_sim($"a", $"b").as("native"),
-      VectorSearch.cosineSim($"a", $"b").as("composed")
-    ).collect()
-    both.foreach { row =>
-      assert(java.lang.Double.doubleToLongBits(row.getDouble(0)) ===
-        java.lang.Double.doubleToLongBits(row.getDouble(1)))
+    }
+    // repartition keeps the projection out of ConvertToLocalRelation,
+    // so it runs in whole-stage codegen
+    val codegen = data.toDF("id", "a", "b").repartition(2)
+      .select($"id", VectorSearch.cosineSim($"a", $"b"))
+      .collect().map(row => row.getLong(0) -> row.getDouble(1)).toMap
+    def bits(d: Double) = java.lang.Double.doubleToLongBits(d)
+    data.foreach { case (id, a, b) =>
+      var dot = 0.0; var na = 0.0; var nb = 0.0
+      for (i <- a.indices) {
+        val (x, y) = (a(i).toDouble, b(i).toDouble)
+        dot += x * y; na += x * x; nb += y * y
+      }
+      val reference = dot / (math.sqrt(na) * math.sqrt(nb))
+      val interpreted = CosineSimilarity.bound(0, ArrayType(FloatType), b.map(_.toDouble))
+        .eval(InternalRow(UnsafeArrayData.fromPrimitiveArray(a)))
+      assert(bits(codegen(id)) === bits(reference))
+      assert(bits(interpreted.asInstanceOf[Double]) === bits(reference))
     }
   }
 
@@ -43,7 +54,7 @@ class CosineSimilaritySpec extends SparkSpec {
         "array(CAST(1.0 AS DOUBLE), CAST(2.0 AS DOUBLE)) AS b")
     val native = df.select(GraftFunctions.cosine_sim($"a", $"b")).head()
     val composed = df.select(VectorSearch.cosineSim($"a", $"b")).head()
-    assert(composed.isNullAt(0))                  // zip_with null-poisons
+    assert(composed.isNullAt(0))                  // the VectorSearch route
     assert(native.isNullAt(0))                    // expression must agree
     // null on either side, interpreted path too
     val flipped = df.select(GraftFunctions.cosine_sim($"b", $"a")).head()
