@@ -1,7 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 /** Local plan-inspection tool: print the formatted physical plan of
   * one declared query and time its noop-sink execution —
   * `sbt "runMain graft.Explain <name> <sfDir>"`. The iteration loop
@@ -11,15 +9,8 @@ object Explain {
   def main(args: Array[String]): Unit = {
     val name = args(0)
     val sfDir = if (args.length > 1) args(1) else "/root/testdata/sf0.01"
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "8")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    // the session Bench and Verify run, optimizer rules included
+    val spark = Graft.mainSession("graft-explain")
     // timing covers query CONSTRUCTION too, exactly like Bench.once():
     // two-phase operators (q148's sketch pass, DSIR's LUT build) run
     // eager phase-1 jobs inside the builder, and excluding them would

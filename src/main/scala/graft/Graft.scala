@@ -4,9 +4,14 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 
 /** Public front door of the engine: one call to get a session with
   * the recommended scale configuration and every graft extension
-  * (native functions, optimizer rules, the custom as-of planner
-  * strategy) installed — the entry point a user of the reference
-  * pipeline switches to.
+  * (the SQL functions of [[functions.GraftFunctions.catalogue]], the
+  * optimizer rules, the custom as-of planner strategy) installed — the
+  * entry point a user of the reference pipeline switches to.
+  *
+  * DataFrame code needs no install: every graft function handle
+  * (`GraftFunctions.cosine_sim`, `SortedIntersectCount.sorted_intersect_count`,
+  * …) builds its expression directly. Install makes the same functions
+  * callable by name from `spark.sql`, and adds the optimizer rules.
   *
   * ```scala
   * val spark = Graft.session()              // or Graft.install(existing)
@@ -49,18 +54,41 @@ object Graft {
     spark
   }
 
-  /** Install graft's functions and optimizer rules on an existing
-    * session (idempotent).
+  /** Install graft's SQL functions and optimizer rules on an existing
+    * session — the same set `GraftExtensions` injects at session build.
+    * Idempotent: only what the session lacks is added, so a second
+    * call changes nothing.
     */
   def install(spark: SparkSession): SparkSession = {
-    functions.GraftFunctions.register(spark)
-    functions.SortedIntersectCount.register(spark)
-    functions.FirstBandCollision.register(spark)
-    functions.TextFunctions.registerSql(spark)
-    functions.HyperLogLog.registerSql(spark)
-    functions.CountMinSketch.registerSql(spark)
+    functions.GraftFunctions.install(spark)
     plans.GraftOptimizations.install(spark)
     spark
+  }
+
+  /** Cores of the command-line mains: `SPARK_GRAFT_CPUS`, else every
+    * core of the machine.
+    */
+  private[graft] def cpus: Int = sys.env.get("SPARK_GRAFT_CPUS").map(_.toInt)
+    .getOrElse(Runtime.getRuntime.availableProcessors())
+
+  /** The session every command-line main runs on: [[session]] on
+    * `local[cpus]` with `cpus` shuffle partitions, WARN logging.
+    */
+  private[graft] def mainSession(appName: String): SparkSession = {
+    val spark = session(s"local[$cpus]", Some(cpus), appName)
+    spark.sparkContext.setLogLevel("WARN")
+    spark
+  }
+
+  /** Free what one query persisted: cached Datasets, and every
+    * persistent RDD — including localCheckpoint blocks, which
+    * `clearCache()` alone leaves behind (they accumulated to an OOM
+    * across a full suite).
+    */
+  private[graft] def dropBlocks(spark: SparkSession): Unit = {
+    spark.catalog.clearCache()
+    spark.sparkContext.getPersistentRDDs.values
+      .foreach(_.unpersist(blocking = false))
   }
 
   /** The driver test-corpus tables (TESTDATA.md). */

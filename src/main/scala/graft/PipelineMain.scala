@@ -19,10 +19,7 @@ object PipelineMain {
     val sfDir = args.headOption.getOrElse("/root/testdata/sf0.001")
     val outDir = if (args.length > 1) args(1) else "/tmp/graft-pipeline"
     val queryText = if (args.length > 2) args(2) else "spark join performance"
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = Graft.session(master = s"local[$cpus]",
-      shufflePartitions = Some(cpus.toInt), appName = "graft-pipeline")
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Graft.mainSession("graft-pipeline")
     run(spark, sfDir, outDir, queryText)
     spark.stop()
   }

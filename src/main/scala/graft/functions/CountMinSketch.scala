@@ -90,13 +90,7 @@ object CountMinSketch {
   /** `cms_sketch(strCol)` aggregate column: one flattened d×w counter
     * array for the group.
     */
-  def sketch(c: Column): Column = udaf(SketchAgg).apply(c)
-
-  /** SQL registration (`cms_sketch(col)` in spark.sql) — installed by
-    * `Graft.install` so SQL-only users get the sketch too.
-    */
-  def registerSql(spark: org.apache.spark.sql.SparkSession): Unit =
-    spark.udf.register("cms_sketch", udaf(SketchAgg))
+  def sketch(c: Column): Column = udaf(SketchAgg).withName("cms_sketch").apply(c)
 
   /** Scalar estimate column over a sketch array column (procedural by
     * nature — d array probes per row; applied to k-sized frames, not

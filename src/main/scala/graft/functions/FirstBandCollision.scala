@@ -1,6 +1,7 @@
 package graft.functions
 
 import org.apache.spark.sql.Column
+import org.apache.spark.sql.GraftSqlBridge.{column, expression}
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
 import org.apache.spark.sql.catalyst.expressions.{Expression, QuaternaryExpression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
@@ -89,13 +90,6 @@ case class FirstBandCollision(
 }
 
 object FirstBandCollision {
-  def first_band_collision(ka: Column, kb: Column, megas: Column, band: Column): Column = {
-    import org.apache.spark.sql.functions.call_function
-    call_function("first_band_collision", ka, kb, megas, band)
-  }
-
-  def register(spark: org.apache.spark.sql.SparkSession): Unit =
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "first_band_collision",
-      exprs => FirstBandCollision(exprs(0), exprs(1), exprs(2), exprs(3)), "scala_udf")
+  def first_band_collision(ka: Column, kb: Column, megas: Column, band: Column): Column =
+    column(FirstBandCollision(expression(ka), expression(kb), expression(megas), expression(band)))
 }

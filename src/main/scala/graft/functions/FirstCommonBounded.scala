@@ -1,6 +1,7 @@
 package graft.functions
 
 import org.apache.spark.sql.Column
+import org.apache.spark.sql.GraftSqlBridge.{column, expression}
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
 import org.apache.spark.sql.catalyst.expressions.{Expression, QuaternaryExpression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
@@ -89,13 +90,6 @@ case class FirstCommonBounded(
 }
 
 object FirstCommonBounded {
-  def first_common_bounded(a: Column, b: Column, na: Column, nb: Column): Column = {
-    import org.apache.spark.sql.functions.call_function
-    call_function("first_common_bounded", a, b, na, nb)
-  }
-
-  def register(spark: org.apache.spark.sql.SparkSession): Unit =
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "first_common_bounded",
-      exprs => FirstCommonBounded(exprs(0), exprs(1), exprs(2), exprs(3)), "scala_udf")
+  def first_common_bounded(a: Column, b: Column, na: Column, nb: Column): Column =
+    column(FirstCommonBounded(expression(a), expression(b), expression(na), expression(nb)))
 }

@@ -93,13 +93,7 @@ object HyperLogLog {
   /** `hll_sketch(longCol)` aggregate column: the m-register array for
     * the group.
     */
-  def sketch(c: Column): Column = udaf(HllAgg).apply(c)
-
-  /** SQL registration (`hll_sketch(col)` in spark.sql) — installed by
-    * `Graft.install` so SQL-only users get the sketch too.
-    */
-  def registerSql(spark: org.apache.spark.sql.SparkSession): Unit =
-    spark.udf.register("hll_sketch", udaf(HllAgg))
+  def sketch(c: Column): Column = udaf(HllAgg).withName("hll_sketch").apply(c)
 
   /** Cardinality estimate from a register-array column, as a pure
     * Catalyst expression (r4-rounded): raw = α·m² / Σ 2^(−M_j) with

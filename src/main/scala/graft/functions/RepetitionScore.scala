@@ -1,6 +1,7 @@
 package graft.functions
 
 import org.apache.spark.sql.Column
+import org.apache.spark.sql.GraftSqlBridge.{column, expression}
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
 import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
@@ -135,14 +136,6 @@ object RepetitionScore {
     math.floor(x * 10000.0 + 0.5) / 10000.0
   }
 
-  def repetition_score(text: Column, n: Int): Column = {
-    import org.apache.spark.sql.functions.{call_function, lit}
-    call_function("repetition_score", text, lit(n))
-  }
-
-  def register(spark: org.apache.spark.sql.SparkSession): Unit =
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "repetition_score",
-      exprs => RepetitionScore(exprs(0),
-        exprs(1).eval().asInstanceOf[Number].intValue()), "scala_udf")
+  def repetition_score(text: Column, n: Int): Column =
+    column(RepetitionScore(expression(text), n))
 }

@@ -1,6 +1,7 @@
 package graft.functions
 
 import org.apache.spark.sql.Column
+import org.apache.spark.sql.GraftSqlBridge.{column, expression}
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
 import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
@@ -88,13 +89,6 @@ case class SortedIntersectCount(left: Expression, right: Expression)
 }
 
 object SortedIntersectCount {
-  def sorted_intersect_count(a: Column, b: Column): Column = {
-    import org.apache.spark.sql.functions.call_function
-    call_function("sorted_intersect_count", a, b)
-  }
-
-  def register(spark: org.apache.spark.sql.SparkSession): Unit =
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "sorted_intersect_count",
-      exprs => SortedIntersectCount(exprs(0), exprs(1)), "scala_udf")
+  def sorted_intersect_count(a: Column, b: Column): Column =
+    column(SortedIntersectCount(expression(a), expression(b)))
 }

@@ -1,6 +1,7 @@
 package graft.functions
 
 import org.apache.spark.sql.Column
+import org.apache.spark.sql.GraftSqlBridge.{column, expression}
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
 import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression}
@@ -131,13 +132,6 @@ case class SortedSpanMerge(left: Expression, right: Expression)
 }
 
 object SortedSpanMerge {
-  def sorted_span_merge(a: Column, b: Column): Column = {
-    import org.apache.spark.sql.functions.call_function
-    call_function("sorted_span_merge", a, b)
-  }
-
-  def register(spark: org.apache.spark.sql.SparkSession): Unit =
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "sorted_span_merge",
-      exprs => SortedSpanMerge(exprs(0), exprs(1)), "scala_udf")
+  def sorted_span_merge(a: Column, b: Column): Column =
+    column(SortedSpanMerge(expression(a), expression(b)))
 }

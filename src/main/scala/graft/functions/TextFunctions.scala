@@ -165,9 +165,7 @@ object TextFunctions {
     * Column combinator above through the Expression↔Column bridge, so
     * `spark.sql("SELECT token_count(text) ...")` runs the IDENTICAL
     * expression tree as the DataFrame API — one implementation, two
-    * surfaces. Registered on live sessions by [[registerSql]] /
-    * `Graft.install`, and injected at session build by
-    * `GraftExtensions`.
+    * surfaces. Part of [[GraftFunctions.catalogue]].
     */
   private[graft] val sqlFunctions: Seq[(String,
       Seq[org.apache.spark.sql.catalyst.expressions.Expression] =>
@@ -189,13 +187,4 @@ object TextFunctions {
           ExpressionUtils.column(exprs(0)),
           exprs(1).eval().asInstanceOf[Number].intValue))))
   }
-
-  /** Register every text function for SQL use on a live session
-    * (idempotent; `Graft.install` calls this).
-    */
-  def registerSql(spark: org.apache.spark.sql.SparkSession): Unit =
-    sqlFunctions.foreach { case (name, builder) =>
-      spark.sessionState.functionRegistry
-        .createOrReplaceTempFunction(name, builder, "scala_udf")
-    }
 }

@@ -143,7 +143,6 @@ object ImageDedup {
     // Hamming verify downstream pins identical output.
     def blockWidth(i: Int): Int = base + (if (i < rem) 1 else 0)
     def blockOffset(i: Int): Int = i * base + math.min(i, rem)
-    graft.functions.FirstBandCollision.register(hashed.sparkSession)
     import graft.functions.FirstBandCollision.first_band_collision
     // Block keys as ints: widths ≤ 31 bits always (blocks ≥ 2 ⇒
     // width ≤ ⌈56/2⌉; the blocks = 1 case folds through xor — a fold

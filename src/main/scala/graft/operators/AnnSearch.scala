@@ -178,7 +178,6 @@ object AnnSearch {
       threshold: Double,
       nFlip: Int = 4): DataFrame = {
     import spark.implicits._
-    graft.functions.GraftFunctions.register(spark)
     import graft.functions.GraftFunctions.cosine_sim
     val indexed = buildIndex(spark, embs, idCol, vecCol, lsh)
       .withColumnRenamed(idCol, "id").withColumnRenamed(vecCol, "vec")
@@ -234,7 +233,6 @@ object AnnSearch {
       bucketCap: Int = 10000): DataFrame = {
     import scala.util.hashing.MurmurHash3
     import spark.implicits._
-    graft.functions.GraftFunctions.register(spark)
     import graft.functions.GraftFunctions.cosine_sim
     require(lsh.nBits % bands == 0, "bands must divide nBits")
     val rowBits = lsh.nBits / bands
@@ -286,7 +284,8 @@ object AnnSearch {
     index
       .filter(col("bucket").isin(probes: _*))
       .withColumn("sim",
-        VectorSearch.cosineSim(col(vecCol), VectorSearch.vecLit(query.map(_.toDouble).toSeq)))
+        graft.functions.GraftFunctions.cosine_sim(
+          col(vecCol), VectorSearch.vecLit(query.map(_.toDouble).toSeq)))
       .orderBy(col("sim").desc, col(idCol))
       .limit(k)
       .select(col(idCol), col("sim"))

@@ -110,8 +110,6 @@ object Boilerplate {
     * corpus pass; r4-rounded for the cross-engine gate. Documents with
     * < n tokens score 0.
     */
-  def repetitionRatio(textCol: Column, n: Int): Column = {
-    graft.functions.RepetitionScore.register(org.apache.spark.sql.SparkSession.active)
+  def repetitionRatio(textCol: Column, n: Int): Column =
     graft.functions.RepetitionScore.repetition_score(textCol, n)
-  }
 }

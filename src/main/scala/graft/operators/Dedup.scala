@@ -119,7 +119,6 @@ object Dedup {
     import org.apache.spark.sql.expressions.Window
     val spark = keyed.sparkSession
     import spark.implicits._
-    graft.functions.FirstBandCollision.register(spark)
     import graft.functions.FirstBandCollision.first_band_collision
 
     val rows = keyed.select($"id", $"keys", posexplode($"keys").as(Seq("band", "key")))
@@ -407,7 +406,6 @@ object Dedup {
       prekeyed: Option[DataFrame] = None): DataFrame = {
     import spark.implicits._
     require(hasher.numHashes % bands == 0, "bands must divide numHashes")
-    graft.functions.SortedIntersectCount.register(spark)
     import graft.functions.SortedIntersectCount.sorted_intersect_count
 
     // tokens hashed to 64 bits ONCE per row, shared by signature
@@ -821,7 +819,6 @@ object Dedup {
       maxBroadcastDocs: Long = 1000000L,
       maxBroadcastBytes: Long = 1L << 30): DataFrame = {
     require(sizeBand > 0)
-    graft.functions.SortedIntersectCount.register(docs.sparkSession)
     import graft.functions.SortedIntersectCount.sorted_intersect_count
 
     // tokens computed ONCE per row; sorted so the pairwise intersect
@@ -949,7 +946,6 @@ object Dedup {
       threshold: Double,
       blockCol: Option[String] = None,
       grid: Int = 32): DataFrame = {
-    graft.functions.GraftFunctions.register(embs.sparkSession)
     import graft.functions.GraftFunctions.cosine_sim
     require(grid > 0)
     val blk = blockCol.map(col).getOrElse(lit(0))

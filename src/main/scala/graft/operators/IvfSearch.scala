@@ -175,7 +175,8 @@ object IvfSearch {
     index
       .filter(col("cell").isin(probes: _*))
       .withColumn("sim",
-        VectorSearch.cosineSim(col(vecCol), VectorSearch.vecLit(query.map(_.toDouble).toSeq)))
+        graft.functions.GraftFunctions.cosine_sim(
+          col(vecCol), VectorSearch.vecLit(query.map(_.toDouble).toSeq)))
       .orderBy(col("sim").desc, col(idCol))
       .limit(k)
       .select(col(idCol), col("sim"))

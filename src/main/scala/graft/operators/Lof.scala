@@ -48,7 +48,6 @@ object Lof {
       k: Int = 5): DataFrame = {
     require(k >= 1, "k >= 1")
     val spark = embs.sparkSession
-    graft.functions.GraftFunctions.register(spark)
     import graft.functions.GraftFunctions.cosine_sim
 
     val base = embs.select(col(idCol).cast("long").as("id"),

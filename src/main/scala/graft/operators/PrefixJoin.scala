@@ -126,9 +126,7 @@ object PrefixJoin {
       maxBroadcastVocab: Long = 10000000L): DataFrame = {
     import spark.implicits._
     require(threshold > 0 && threshold < 1, "threshold in (0,1)")
-    graft.functions.SortedIntersectCount.register(spark)
     import graft.functions.SortedIntersectCount.sorted_intersect_count
-    graft.functions.FirstCommonBounded.register(spark)
     import graft.functions.FirstCommonBounded.first_common_bounded
 
     val ranked = rankedArrays(spark, docs, idCol, textCol,
@@ -213,11 +211,9 @@ object PrefixJoin {
       maxBroadcastVocab: Long = 10000000L): DataFrame = {
     import spark.implicits._
     require(threshold > 0 && threshold < 1, "threshold in (0,1)")
-    graft.functions.SortedIntersectCount.register(spark)
     import graft.functions.SortedIntersectCount.sorted_intersect_count
-
-    graft.functions.FirstCommonBounded.register(spark)
     import graft.functions.FirstCommonBounded.first_common_bounded
+
     val ranked = rankedArrays(spark, docs, idCol, textCol,
       threshold, pretokenized, maxBroadcastVocab)
     // the minSize floor applies to the COVEREE (A) side only: tiny

@@ -19,13 +19,10 @@ object Retrieval {
     * backed by the native fused-loop expression
     * [[graft.functions.QuantL2]] (bit-identical to the composed
     * zip_with+aggregate form, spec-pinned; no per-row intermediate
-    * array). Registration is idempotent on the active session.
+    * array).
     */
-  def quantL2(a: Column, b: Column, quantum: Double = KMeans.DistQuantum.toDouble): Column = {
-    graft.functions.GraftFunctions.register(
-      org.apache.spark.sql.SparkSession.active)
+  def quantL2(a: Column, b: Column, quantum: Double = KMeans.DistQuantum.toDouble): Column =
     graft.functions.GraftFunctions.quant_l2(a, b, lit(quantum))
-  }
 
   /** The scalar twin of [[quantL2]] for driver-side bounded work. */
   def quantL2(a: Array[Float], b: Array[Float]): Long = {

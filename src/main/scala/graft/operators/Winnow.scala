@@ -149,7 +149,6 @@ object Winnow {
       minContainment: Double = 0.5,
       bucketCap: Int = 10000): DataFrame = {
     import spark.implicits._
-    graft.functions.SortedIntersectCount.register(spark)
     import graft.functions.SortedIntersectCount.sorted_intersect_count
 
     val fps = df.select(col(idCol).cast("long").as("id"), col(textCol).as("text"))
@@ -203,7 +202,6 @@ object Winnow {
       minContainment: Double = 0.5,
       bucketCap: Int = 10000): DataFrame = {
     import spark.implicits._
-    graft.functions.SortedSpanMerge.register(spark)
     import graft.functions.SortedSpanMerge.sorted_span_merge
 
     val spans = df.select(col(idCol).cast("long").as("id"), col(textCol).as("text"))

@@ -63,7 +63,6 @@ object SemanticChunker {
       threshold: Double = 0.35,
       batchSize: Int = 150): DataFrame = {
     import spark.implicits._
-    graft.functions.GraftFunctions.register(spark)
     val embedded = segments(docs, idCol, textCol, width)
       .as[(Long, Int, String)]
       .mapPartitions { it =>

@@ -1,9 +1,9 @@
 package graft.pipeline
 
-import org.apache.spark.sql.{Column, DataFrame, GraftSqlBridge}
+import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
-import graft.functions.CosineSimilarity
+import graft.functions.GraftFunctions.cosine_sim
 
 /** Vector similarity scoring + top-k retrieval — the engine-side form
   * of the reference's hosted vector-search index + query (SURVEY
@@ -31,16 +31,6 @@ import graft.functions.CosineSimilarity
   */
 object VectorSearch {
 
-  /** Cosine similarity of two `array<float|double>` columns: the
-    * codegen [[graft.functions.CosineSimilarity]] kernel, built
-    * directly (no function-registry lookup). Accumulates left-to-right
-    * in double, matching DuckDB's `list_cosine_similarity` on DOUBLE[]
-    * for oracle parity.
-    */
-  def cosineSim(a: Column, b: Column): Column =
-    GraftSqlBridge.column(
-      CosineSimilarity(GraftSqlBridge.expression(a), GraftSqlBridge.expression(b)))
-
   /** Array literal column for a query vector. */
   def vecLit(v: Seq[Double]): Column = array(v.map(lit): _*)
 
@@ -58,7 +48,7 @@ object VectorSearch {
       k: Int): DataFrame = {
     ResidentIndex.topK(index, embeddingCol, idCol, query, k).getOrElse(
       index
-        .withColumn("sim", cosineSim(col(embeddingCol), vecLit(query)))
+        .withColumn("sim", cosine_sim(col(embeddingCol), vecLit(query)))
         .orderBy(col("sim").desc, col(idCol))
         .limit(k))
   }

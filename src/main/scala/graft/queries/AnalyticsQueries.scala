@@ -28,8 +28,11 @@ object AnalyticsQueries {
           .filter(length($"word") > 0)
         val contexts = toks.select($"doc_id",
           explode(array($"pos" + 1, $"pos" + 2)).as("slot"), $"word".as("cword"))
-        val pairs = toks.join(contexts,
-            toks("doc_id") === contexts("doc_id") && toks("pos") === contexts("slot"))
+        // both sides descend from `toks`, so they are aliased: a
+        // `toks("doc_id") === contexts("doc_id")` predicate would name
+        // one attribute twice
+        val pairs = toks.as("t").join(contexts.as("c"),
+            $"t.doc_id" === $"c.doc_id" && $"t.pos" === $"c.slot")
           .select(least($"word", $"cword").as("word_a"),
             greatest($"word", $"cword").as("word_b"))
         val nAb = pairs.groupBy($"word_a", $"word_b").agg(count(lit(1)).as("n_ab"))

@@ -1329,9 +1329,10 @@ object BusinessQueries {
         val top = fresh.withColumn("rk", row_number().over(
             Window.partitionBy($"cust").orderBy($"score".desc, $"pb")))
           .filter($"rk" <= 10)
-        val hits = top.join(hold,
-            top("cust") === hold("cust") && top("pb") === hold("part"))
-          .select(top("cust")).distinct()
+        // aliased: `top` and `hold` share the `cust` attribute of `rn`
+        val hits = top.as("t").join(hold.as("h"),
+            $"t.cust" === $"h.cust" && $"t.pb" === $"h.part")
+          .select($"t.cust").distinct()
           .agg(count(lit(1)).as("n_hit"))
         val nEval = evalUsers.agg(count(lit(1)).as("n_eval"))
         nEval.crossJoin(hits).select($"n_eval", $"n_hit",

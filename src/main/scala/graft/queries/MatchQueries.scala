@@ -138,7 +138,6 @@ object MatchQueries {
       "q216_jaro_winkler_join",
       (s, d) => {
         import s.implicits._
-        graft.functions.GraftFunctions.register(s)
         val p = graft.Par.spread(Tables.part(s, d))
           .select($"p_partkey", $"p_name", $"p_size",
             split($"p_name", " ").getItem(0).as("blk"))
@@ -178,7 +177,6 @@ object MatchQueries {
       "q224_name_entities",
       (s, d) => {
         import s.implicits._
-        graft.functions.GraftFunctions.register(s)
         val p = graft.Par.spread(Tables.part(s, d))
           .select($"p_partkey", $"p_name", $"p_size",
             split($"p_name", " ").getItem(0).as("blk"))
@@ -234,7 +232,6 @@ object MatchQueries {
       "q282_blocking_quality",
       (s, d) => {
         import s.implicits._
-        graft.functions.GraftFunctions.register(s)
         val p = graft.Par.spread(Tables.part(s, d))
           .select($"p_partkey", $"p_name", $"p_size",
             split($"p_name", " ").getItem(0).as("blk"))

@@ -356,7 +356,6 @@ object PipelineQueries {
       (s, d) => {
         import s.implicits._
         import graft.functions.GraftFunctions
-        GraftFunctions.register(s)
         Tables.embeddings(s, d)
           .withColumn("sim", GraftFunctions.cosine_sim(
             $"embedding", VectorSearch.vecLit(queryVec).cast("array<double>")))
@@ -445,7 +444,6 @@ object PipelineQueries {
         import s.implicits._
         import graft.functions.GraftFunctions
         import graft.operators.{HybridSearch, TextSearch}
-        GraftFunctions.register(s)
         def r4(c: org.apache.spark.sql.Column) = graft.functions.TextFunctions.r4(c)
         val kw = TextSearch.bm25TopK(Tables.documents(s, d), "doc_id", "text",
           query = Seq("vector", "join", "stream"), k = 20)

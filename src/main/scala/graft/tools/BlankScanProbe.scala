@@ -1,7 +1,5 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
-
 /** Mega-bucket probe for [[graft.multimodal.ImageDedup.nearDupPairs]]
   * (r15 verdict #3): a NEAR-blank scan corpus — many DISTINCT dHashes
   * whose few set bits all avoid one pigeonhole block, so that block's
@@ -20,14 +18,7 @@ object BlankScanProbe {
     val n = if (args.length > 1) args(1).toInt else 40000
     val k = if (args.length > 2) args(2).toInt else 10
     val cap = if (args.length > 3) args(3).toInt else 8192
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = graft.Graft.mainSession("graft-blankscan-probe")
     import spark.implicits._
 
     // near-blank shape: 5 set bits drawn from [18, 56) — block 0 of

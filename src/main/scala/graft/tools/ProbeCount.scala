@@ -1,7 +1,5 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
-
 /** Scale-probe row counter: runs named declared queries against an
   * arbitrary corpus dir and prints `name,rows,seconds` — the
   * invariant side of a scale probe (e.g. the sf1 decade: q28's pair
@@ -16,15 +14,7 @@ object ProbeCount {
   def main(args: Array[String]): Unit = {
     val sfDir = args(0)
     val names = args.drop(1).toSeq
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "16")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = graft.Graft.mainSession("graft-probe-count")
     val qs = graft.SparkEntry.queries
     names.foreach { name =>
       val t0 = System.nanoTime()
@@ -33,11 +23,7 @@ object ProbeCount {
         println(f"[probe] $name,$n,${(System.nanoTime() - t0) / 1e9}%.1f")
       } catch { case e: Throwable =>
         println(s"[probe] $name,FAILED,${e.getMessage}")
-      } finally {
-        spark.catalog.clearCache()
-        spark.sparkContext.getPersistentRDDs.values
-          .foreach(_.unpersist(blocking = false))
-      }
+      } finally graft.Graft.dropBlocks(spark)
     }
     spark.stop()
   }

@@ -1,7 +1,5 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
-
 /** One-command decade probe (r13 verdict #6): builds (or reuses) a
   * ×K replica corpus via [[ScaleUp]], times the named queries and
   * artifact builds at BOTH scales through the noop sink (the Bench
@@ -48,16 +46,7 @@ object ScaleProbe {
       else longtailDocs.map(n => s"/tmp/graft-lt-$n-x$k")
         .getOrElse(s"/tmp/graft-sfx$k")
     val label = if (args.length > 5) Some(args(5)) else None
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    graft.Graft.install(spark)
+    val spark = graft.Graft.mainSession("graft-scale-probe")
 
     // build the probe corpora once; reuse across probes of the same
     // session/box (both builders are deterministic, so staleness can
@@ -82,18 +71,13 @@ object ScaleProbe {
         } else System.err.println(s"[probe] reusing x$k corpus at $dest")
     }
 
-    def dropBlocks(): Unit = {
-      spark.catalog.clearCache()
-      spark.sparkContext.getPersistentRDDs.values
-        .foreach(_.unpersist(blocking = false))
-    }
     /** (rows, wall): noop-sink materialization, Bench hygiene. */
     def timed(run: () => Long): (Long, Double) = {
-      dropBlocks(); System.gc(); Thread.sleep(100)
+      graft.Graft.dropBlocks(spark); System.gc(); Thread.sleep(100)
       val t0 = System.nanoTime()
       val rows = run()
       val wall = (System.nanoTime() - t0) / 1e9
-      dropBlocks()
+      graft.Graft.dropBlocks(spark)
       (rows, wall)
     }
 
@@ -152,7 +136,7 @@ object ScaleProbe {
     val probeName = label.map(l => s"x$k-$l").getOrElse(s"x$k")
     val json =
       s"""{"probe":"$probeName","round":$round,"src":"$src","dest":"$dest",""" +
-      s""""cpus":$cpus,"queries":{$body}}"""
+      s""""cpus":${graft.Graft.cpus},"queries":{$body}}"""
     val out = label.map(l => s"PROBE_r${round}_$l.json")
       .getOrElse(s"PROBE_r$round.json")
     java.nio.file.Files.write(java.nio.file.Paths.get(out),

@@ -1,7 +1,6 @@
 package graft.functions
 
 import graft.SparkSpec
-import graft.pipeline.VectorSearch
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions.UnsafeArrayData
 import org.apache.spark.sql.types.{ArrayType, FloatType}
@@ -17,7 +16,7 @@ class CosineSimilaritySpec extends SparkSpec {
     // repartition keeps the projection out of ConvertToLocalRelation,
     // so it runs in whole-stage codegen
     val codegen = data.toDF("id", "a", "b").repartition(2)
-      .select($"id", VectorSearch.cosineSim($"a", $"b"))
+      .select($"id", GraftFunctions.cosine_sim($"a", $"b"))
       .collect().map(row => row.getLong(0) -> row.getDouble(1)).toMap
     def bits(d: Double) = java.lang.Double.doubleToLongBits(d)
     data.foreach { case (id, a, b) =>
@@ -36,7 +35,7 @@ class CosineSimilaritySpec extends SparkSpec {
 
   test("SQL registration, nulls, length mismatch, double arrays") {
     import spark.implicits._
-    GraftFunctions.register(spark)
+    graft.Graft.install(spark)
     Seq((Seq(1.0, 0.0), Seq(1.0, 0.0))).toDF("a", "b").createOrReplaceTempView("v")
     assert(spark.sql("SELECT cosine_sim(a, b) FROM v").head().getDouble(0) === 1.0)
     val res = Seq((Seq(1.0f, 2.0f), Seq(1.0f, 2.0f, 3.0f))).toDF("a", "b")
@@ -48,14 +47,12 @@ class CosineSimilaritySpec extends SparkSpec {
 
   test("null ELEMENT null-poisons to null, matching the composed form") {
     import spark.implicits._
-    GraftFunctions.register(spark)
+    graft.Graft.install(spark)
     val df = spark.sql(
       "SELECT array(CAST(1.0 AS DOUBLE), CAST(NULL AS DOUBLE)) AS a, " +
         "array(CAST(1.0 AS DOUBLE), CAST(2.0 AS DOUBLE)) AS b")
     val native = df.select(GraftFunctions.cosine_sim($"a", $"b")).head()
-    val composed = df.select(VectorSearch.cosineSim($"a", $"b")).head()
-    assert(composed.isNullAt(0))                  // the VectorSearch route
-    assert(native.isNullAt(0))                    // expression must agree
+    assert(native.isNullAt(0))
     // null on either side, interpreted path too
     val flipped = df.select(GraftFunctions.cosine_sim($"b", $"a")).head()
     assert(flipped.isNullAt(0))
@@ -65,7 +62,7 @@ class CosineSimilaritySpec extends SparkSpec {
     val s2 = SparkSpec.session.newSession()
     new GraftExtensions().apply(
       new org.apache.spark.sql.SparkSessionExtensions) // construct smoke (injection API)
-    GraftFunctions.register(s2)
+    graft.Graft.install(s2)
     assert(s2.sql("SELECT cosine_sim(array(CAST(1.0 AS FLOAT)), array(CAST(1.0 AS FLOAT)))")
       .head().getDouble(0) === 1.0)
   }

@@ -34,7 +34,7 @@ class JaroWinklerSpec extends SparkSpec {
   }
 
   test("expression evaluates through codegen and SQL identically to the core") {
-    GraftFunctions.register(spark)
+    graft.Graft.install(spark)
     val df = cases.map { case (a, b, _) => (a, b) }.toDF("a", "b")
     val viaCol = df.select(GraftFunctions.jaro_winkler($"a", $"b"))
       .as[Double].collect()
@@ -44,7 +44,7 @@ class JaroWinklerSpec extends SparkSpec {
   }
 
   test("null inputs yield null, not an exception") {
-    GraftFunctions.register(spark)
+    graft.Graft.install(spark)
     val df = Seq(("x", Option.empty[String]), ("x", Some("x")))
       .toDF("a", "b")
     val got = df.selectExpr("jaro_winkler(a, b)").collect()

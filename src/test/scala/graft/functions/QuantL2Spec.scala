@@ -21,7 +21,7 @@ class QuantL2Spec extends SparkSpec {
 
   test("bit-identical to the composed form on corpus data") {
     import spark.implicits._
-    GraftFunctions.register(spark)
+    graft.Graft.install(spark)
     val embs = graft.Tables.embeddings(spark, "/root/testdata/sf0.001")
     val q = embs.filter($"vec_id" === 3L).select($"embedding")
       .as[Array[Float]].first()
@@ -34,7 +34,7 @@ class QuantL2Spec extends SparkSpec {
   }
 
   test("null semantics mirror the composed form's null-poisoning") {
-    GraftFunctions.register(spark)
+    graft.Graft.install(spark)
     val df = spark.sql(
       """SELECT
         |  quant_l2(CAST(NULL AS ARRAY<FLOAT>), array(1.0F), 1024.0D) AS null_in,
@@ -49,7 +49,7 @@ class QuantL2Spec extends SparkSpec {
 
   test("stays inside whole-stage codegen over a real scan") {
     import spark.implicits._
-    GraftFunctions.register(spark)
+    graft.Graft.install(spark)
     val embs = graft.Tables.embeddings(spark, "/root/testdata/sf0.001")
     val df = embs.select(
       GraftFunctions.quant_l2($"embedding", $"embedding", lit(Q)).as("d"))

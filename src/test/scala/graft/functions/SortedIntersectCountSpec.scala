@@ -8,7 +8,7 @@ class SortedIntersectCountSpec extends SparkSpec {
 
   test("equals size(array_intersect) on sorted distinct arrays — property") {
     import spark.implicits._
-    SortedIntersectCount.register(spark)
+    graft.Graft.install(spark)
     val gen = Gen.listOf(Gen.oneOf((1 to 40).map(i => s"w$i")))
     val prop = Prop.forAll(gen, gen) { (a, b) =>
       val df = Seq((a, b)).toDF("a", "b")
@@ -27,7 +27,7 @@ class SortedIntersectCountSpec extends SparkSpec {
 
   test("nulls, empties, SQL registration") {
     import spark.implicits._
-    SortedIntersectCount.register(spark)
+    graft.Graft.install(spark)
     val r = Seq((Seq("a", "b"), Seq.empty[String])).toDF("a", "b")
       .select(SortedIntersectCount.sorted_intersect_count($"a", $"b")).head()
     assert(r.getInt(0) === 0)

@@ -12,7 +12,7 @@ class SortedSpanMergeSpec extends SparkSpec {
   }
 
   private def merge(a: Seq[(Long, Int, Int)], b: Seq[(Long, Int, Int)]): Option[Row] = {
-    SortedSpanMerge.register(spark)
+    graft.Graft.install(spark)
     val rows = df(a, b)
       .select(SortedSpanMerge.sorted_span_merge(col("a"), col("b")).as("m"))
       .collect()
@@ -38,7 +38,7 @@ class SortedSpanMergeSpec extends SparkSpec {
   }
 
   test("codegen and interpreted paths agree on random sorted inputs") {
-    SortedSpanMerge.register(spark)
+    graft.Graft.install(spark)
     val rnd = new scala.util.Random(5)
     def rand(): Seq[(Long, Int, Int)] =
       (0 until rnd.nextInt(20)).map(_ => (rnd.nextInt(30).toLong, rnd.nextInt(100), rnd.nextInt(100)))
@@ -51,7 +51,7 @@ class SortedSpanMergeSpec extends SparkSpec {
       val s2 = spark.newSession()
       s2.conf.set("spark.sql.codegen.wholeStage", "false")
       s2.conf.set("spark.sql.codegen.factoryMode", "NO_CODEGEN")
-      SortedSpanMerge.register(s2)
+      graft.Graft.install(s2)
       val interp = s2.createDataFrame(frame.rdd, frame.schema).select(expr).collect().head
       assert(codegen === interp, s"a=$a b=$b")
     }

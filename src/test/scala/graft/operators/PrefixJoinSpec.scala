@@ -98,7 +98,7 @@ class PrefixJoinSpec extends SparkSpec {
 
   test("first_common_bounded: bounded sorted-merge first match, null when disjoint") {
     import spark.implicits._
-    graft.functions.FirstCommonBounded.register(spark)
+    graft.Graft.install(spark)
     import graft.functions.FirstCommonBounded.first_common_bounded
     import org.apache.spark.sql.functions._
     val df = Seq(

@@ -28,7 +28,7 @@ class VectorSearchSpec extends SparkSpec {
       (2L, Seq(1.0f, 0.0f), Seq(0.0f, 1.0f)),   // orthogonal → 0
       (3L, Seq(1.0f, 1.0f), Seq(-1.0f, -1.0f))  // opposite → -1
     ).toDF("id", "a", "b")
-    val out = df.select($"id", VectorSearch.cosineSim($"a", $"b").as("sim"))
+    val out = df.select($"id", graft.functions.GraftFunctions.cosine_sim($"a", $"b").as("sim"))
       .collect().map(r => r.getLong(0) -> r.getDouble(1)).toMap
     assert(math.abs(out(1L) - 1.0) < 1e-12)
     assert(math.abs(out(2L)) < 1e-12)
@@ -43,7 +43,7 @@ class VectorSearchSpec extends SparkSpec {
     val q = Seq(1.0, 0.0)
     val top = VectorSearch.topK(vecs, "embedding", "vec_id", q, 5)
       .select("vec_id").as[Long].collect()
-    val full = vecs.withColumn("sim", VectorSearch.cosineSim($"embedding", VectorSearch.vecLit(q)))
+    val full = vecs.withColumn("sim", graft.functions.GraftFunctions.cosine_sim($"embedding", VectorSearch.vecLit(q)))
       .orderBy($"sim".desc, $"vec_id").select("vec_id").as[Long].collect()
     assert(top.toSeq === full.take(5).toSeq)
     assert(top.head === 0L)  // cos(0) aligned with query

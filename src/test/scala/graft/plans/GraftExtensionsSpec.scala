@@ -13,7 +13,10 @@ import org.apache.spark.sql.functions._
   */
 class GraftExtensionsSpec extends SparkSpec {
 
-  test("extensions-built session runs the optimizer rules with no install() call") {
+  /** Runs `body` on a NEW session built with only `GraftExtensions`
+    * (no install() call), restoring the fixture as active/default after.
+    */
+  private def withExtensionsSession(body: SparkSession => Unit): Unit = {
     val fixture = spark              // force the shared session FIRST —
     // otherwise the getOrCreate below would CREATE the fixture and the
     // identity assertion compares a session to itself
@@ -27,6 +30,17 @@ class GraftExtensionsSpec extends SparkSpec {
         .withExtensions(new graft.functions.GraftExtensions())
         .getOrCreate()
       assert(s ne fixture, "getOrCreate must have built a NEW session here")
+      body(s)
+    } finally {
+      SparkSession.clearActiveSession()
+      SparkSession.clearDefaultSession()
+      prevDefault.foreach(SparkSession.setDefaultSession)
+      prevActive.foreach(SparkSession.setActiveSession)
+    }
+  }
+
+  test("extensions-built session runs the optimizer rules with no install() call") {
+    withExtensionsSession { s =>
       import s.implicits._
       val tmp = java.nio.file.Files.createTempDirectory("gext").toString
       Seq(("abc", "abd"), ("a", "abcdef")).toDF("a", "b")
@@ -47,11 +61,44 @@ class GraftExtensionsSpec extends SparkSpec {
       val opt = j.queryExecution.optimizedPlan.toString
       assert(opt.contains("(0.5 * "), "jaccard band missing from extensions path")
       assert(j.count() === 2L) // the two identical single-token pairs (J = 1)
-    } finally {
-      SparkSession.clearActiveSession()
-      SparkSession.clearDefaultSession()
-      prevDefault.foreach(SparkSession.setDefaultSession)
-      prevActive.foreach(SparkSession.setActiveSession)
+    }
+  }
+
+  test("every catalogue name resolves in spark.sql on an extensions-only session") {
+    // one sample call per catalogue entry; a new entry must add one here
+    val args = Map(
+      "cosine_sim" -> "array(1.0D, 0.0D), array(1.0D, 0.0D)",
+      "quant_l2" -> "array(1.5F), array(0.5F), 1024.0D",
+      "jaro_winkler" -> "'martha', 'marhta'",
+      "sorted_intersect_count" -> "array('a', 'b'), array('b', 'c')",
+      "first_band_collision" -> "array(1, 2), array(3, 2), array(false, false), 1",
+      "first_common_bounded" -> "array(1L, 4L, 7L), array(4L, 7L), 3, 2",
+      "repetition_score" -> "'a b a b', 1",
+      "sorted_span_merge" ->
+        "array(named_struct('fp', 1L, 'lo', 0, 'hi', 5)), array(named_struct('fp', 1L, 'lo', 2, 'hi', 9))",
+      "hll_sketch" -> "7L",
+      "cms_sketch" -> "'w'",
+      "token_count" -> "'a b c'",
+      "bpe_token_count" -> "'a b c'",
+      "lang_id" -> "'the cat and the dog'",
+      "quality_score" -> "'the cat sat on the mat'",
+      "doc_fingerprint" -> "'a b c'",
+      "repetition_ratio" -> "'a b a b', 1")
+    val names = graft.functions.GraftFunctions.catalogue.map(_._1)
+    assert(names.toSet === args.keySet)
+    assert(names.distinct.size === names.size)
+    withExtensionsSession { s =>
+      names.foreach { name =>
+        val row = s.sql(s"SELECT $name(${args(name)})").head()
+        assert(!row.isNullAt(0), s"$name evaluated to NULL")
+      }
+      assert(s.sql(s"SELECT cosine_sim(${args("cosine_sim")})").head().getDouble(0) === 1.0)
+      assert(s.sql(s"SELECT sorted_intersect_count(${args("sorted_intersect_count")})")
+        .head().getInt(0) === 1)
+      assert(s.sql(s"SELECT first_common_bounded(${args("first_common_bounded")})")
+        .head().getLong(0) === 4L)
+      assert(s.sql(s"SELECT repetition_score(${args("repetition_score")})")
+        .head().getDouble(0) === 0.5)
     }
   }
 
