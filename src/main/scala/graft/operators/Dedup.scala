@@ -3,12 +3,13 @@ package graft.operators
 import scala.util.hashing.MurmurHash3
 
 import graft.functions.TextFunctions
-import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 /** Deduplication operators for LLM training-data curation (project
   * north star, BASELINE.json): exact, fingerprint, MinHash+LSH,
-  * SimHash, and n-gram/word-set Jaccard similarity join.
+  * SimHash (the n-gram/word-set Jaccard similarity join is
+  * [[PrefixJoin.jaccardPairsPrefix]]).
   *
   * Scale design (100 TB):
   *  - exact/fingerprint dedup is a hash groupBy — one shuffle keyed
@@ -437,38 +438,20 @@ object Dedup {
     val hydrated = bandedCandidates(keyed, bucketCap, strict)
       .join(toks.select($"id".as("id_a"), $"toks".as("toks_a"), $"nt".as("nt_a")), "id_a")
       .join(toks.select($"id".as("id_b"), $"toks".as("toks_b"), $"nt".as("nt_b")), "id_b")
-      // size-ratio prune (see jaccardPairs proof) before the O(|toks|) merge
-      // (an early-abort merge variant — bail once the remaining
-      // elements cannot reach the threshold — measured SLOWER here,
-      // r18: 23.4 s vs 17.5 s isolated; the fixture's ~23-token sets
-      // make the merge 46 cheap steps, and the per-iteration bound
-      // check cost more than the aborted tail saved)
-      .filter(least($"nt_a", $"nt_b") > lit(threshold) * greatest($"nt_a", $"nt_b"))
+      // size-ratio prune (proof at PrefixJoin.jaccardSizeFeasible)
+      // before the O(|toks|) merge (an early-abort merge variant —
+      // bail once the remaining elements cannot reach the threshold —
+      // measured SLOWER here, r18: 23.4 s vs 17.5 s isolated; the
+      // fixture's ~23-token sets make the merge 46 cheap steps, and
+      // the per-iteration bound check cost more than the aborted tail
+      // saved)
+      .filter(PrefixJoin.jaccardSizeFeasible($"nt_a", $"nt_b", threshold))
 
-    // Threshold test with ONE merge per candidate. The naive shape —
-    // withColumn("jaccard", inter/(na+nb-inter)).filter($"jaccard" > t)
-    // — gets alias-substituted and pushed into the join CONDITION,
-    // where the division's two `inter` occurrences are codegen'd as
-    // two independent sorted-merge loops, plus a third in the
-    // surviving projection (r19 plan audit: 3 merges/candidate).
-    // For t = k/10 (every declared threshold) the double comparison
-    // i/(s-i) > t is EQUIVALENT to the integer test (10+k)·i > k·s:
-    // when i/(s-i) ≠ k/10 the rational margin is ≥ 1/(10(s-i)),
-    // ~1e-7 even at a million tokens, dwarfing the ≤1-ulp division
-    // error; when equal, the correctly-rounded division yields
-    // exactly double(k/10) and the strict > is false on both sides.
-    val k10 = math.round(threshold * 10)
-    val filtered =
-      if (k10 / 10.0 == threshold)
-        hydrated.filter(
-          lit(10 + k10) * sorted_intersect_count($"toks_a", $"toks_b") >
-            lit(k10) * ($"nt_a" + $"nt_b"))
-      else
-        hydrated
-          .withColumn("inter", sorted_intersect_count($"toks_a", $"toks_b").cast("double"))
-          .filter($"inter" / ($"nt_a" + $"nt_b" - $"inter") > threshold)
-
-    filtered
+    // exact threshold test with ONE merge per candidate (proof and
+    // the merge-count rationale at PrefixJoin.overlapAbove)
+    hydrated
+      .filter(PrefixJoin.overlapAbove(sorted_intersect_count($"toks_a", $"toks_b"),
+        $"nt_a" + $"nt_b", threshold, jaccard = true))
       .withColumn("inter2", sorted_intersect_count($"toks_a", $"toks_b").cast("double"))
       .withColumn("jaccard", $"inter2" / ($"nt_a" + $"nt_b" - $"inter2"))
       .select($"id_a", $"id_b", r4($"jaccard").as("jaccard"))
@@ -780,128 +763,7 @@ object Dedup {
     else connectedComponentsStar(ids, idCol, mat, maxIter)
   }
 
-  // ---------- similarity joins (word-set Jaccard, embedding cosine) ----------
-
-  /** Word-set Jaccard similarity join — array_intersect/size are pure
-    * Catalyst, SQL-mirrorable.
-    *
-    * Scale shape (reworked after the r14 ×10 probe): candidates are
-    * PREFIX-FILTERED (the AllPairs/PPJoin scheme PrefixJoin uses),
-    * with the block and size-band constraints applied INSIDE the
-    * candidate join. The earlier (block, ⌊sz/band⌋) bucket-key join
-    * was Σ bucket² — quadratic in corpus size whenever a (block,
-    * band) bucket grows linearly, which is exactly what a 10×
-    * replica corpus showed (×100 candidate volume, ×44 wall).
-    * Token-keyed candidates ride the df distribution instead: each
-    * doc joins only on its `nt − ⌈t·nt⌉ + 1` RAREST tokens, so
-    * candidate volume tracks Σ df_prefix(token)² — near-linear on
-    * natural corpora (measured ×4.5 wall for ×10 data). Output is
-    * IDENTICAL: the prefix lemma guarantees every pair with J > t
-    * shares a prefix token, and block/band/ratio prunes plus the
-    * exact sorted-merge verify are unchanged.
-    *
-    * Cheap pruning inside the candidate join, before the O(|toks|)
-    * intersect: jaccard > t implies min(|A|,|B|) > t·max(|A|,|B|) —
-    * proof: I > t(a+b−I) ⟹ I(1+t) > t(a+b) ⟹ min(1+t) > t(min+max)
-    * ⟹ min > t·max — plus the PPJoin position filter: a shared
-    * token at 1-based positions (ia, ib) caps the overlap at
-    * 1 + min(na−ia, nb−ib), and a qualifying pair's FIRST shared
-    * token must clear t·(na+nb)/(1+t).
-    */
-  def jaccardPairs(
-      docs: DataFrame,
-      idCol: String,
-      textCol: String,
-      blockCol: String,
-      sizeCol: String,
-      sizeBand: Long,
-      threshold: Double,
-      maxBroadcastDocs: Long = 1000000L,
-      maxBroadcastBytes: Long = 1L << 30): DataFrame = {
-    require(sizeBand > 0)
-    import graft.functions.SortedIntersectCount.sorted_intersect_count
-
-    // tokens computed ONCE per row; sorted so the pairwise intersect
-    // is an allocation-free merge-count, not a per-pair hash build
-    val toks = graft.Par.spread(docs.select(col(idCol).as("id"), col(textCol)))
-      .select(
-        col("id"),
-        sort_array(array_distinct(TextFunctions.tokens(col(textCol)))).as("toks"))
-      .withColumn("nt", size(col("toks"))).persist()
-
-    // global rarity order over the vocabulary (df ascending, token
-    // tie-break): zipRank, never a single-partition window — the
-    // PrefixJoin discipline, shared verbatim
-    val tokStream = toks.select(col("id"), explode(col("toks")).as("tok"))
-    val (rank, vocabSize) = GlobalOrder.zipRankWithCount(
-      tokStream.groupBy(col("tok")).agg(count(lit(1)).as("df"))
-        .sort(col("df"), col("tok")).select(col("tok")), "r")
-    val rankSide = if (vocabSize <= 10000000L) broadcast(rank) else rank
-    val meta = docs.select(col(idCol).as("id"), col(blockCol).as("blk"),
-      col(sizeCol).as("sz"))
-    // per-doc prefix rows: the nt − ⌈t·nt⌉ + 1 rarest tokens, with
-    // (nt, 1-based pos, block, size) riding along so every prune runs
-    // inside the candidate join
-    val prefixes = tokStream.join(rankSide, Seq("tok"))
-      .groupBy(col("id"))
-      .agg(sort_array(collect_list(col("r"))).as("ranks"))
-      .withColumn("nt", size(col("ranks")))
-      .withColumn("p",
-        (col("nt") - ceil(lit(threshold) * col("nt")) + 1).cast("int"))
-      .select(col("id"), col("nt"),
-        posexplode(slice(col("ranks"), lit(1), col("p"))))
-      .withColumnRenamed("col", "r")
-      .withColumn("pos", col("pos") + 1)
-      .join(meta, "id")
-
-    val l = prefixes.select(col("id").as("id_l"), col("nt").as("nt_l"),
-      col("pos").as("pos_l"), col("r"), col("blk"), col("sz").as("sz_l"))
-    val rr = prefixes.select(col("id").as("id_r"), col("nt").as("nt_r"),
-      col("pos").as("pos_r"), col("r").as("r_r"), col("blk").as("blk_r"),
-      col("sz").as("sz_r"))
-    val cands = l.join(rr,
-        col("r") === col("r_r") && col("id_l") < col("id_r") &&
-          col("blk") === col("blk_r") &&
-          abs(col("sz_l") - col("sz_r")) <= sizeBand &&
-          least(col("nt_l"), col("nt_r")) >
-            lit(threshold) * greatest(col("nt_l"), col("nt_r")) &&
-          (lit(1.0) + least(col("nt_l") - col("pos_l"),
-            col("nt_r") - col("pos_r"))) * lit(1.0 + threshold) >=
-            lit(threshold) * (col("nt_l") + col("nt_r")) - lit(1e-7))
-      .select(col("id_l"), col("id_r"), col("nt_l"), col("nt_r"))
-      .distinct()
-
-    // verify sides broadcast while the doc table fits (the r14 probe
-    // found these joins falling to sort-merge over the candidate
-    // stream past the 10 MB auto threshold) — gated on BOTH row count
-    // and an estimated byte size: a million docs each carrying a large
-    // sorted token array would blow the driver/broadcast ceiling that
-    // the row count alone cannot see. ~48 bytes/token string + ~64
-    // bytes/row of array+id overhead is deliberately pessimistic.
-    val Row(nDocs: Long, totalToks: Long) = toks
-      .agg(count(lit(1)), coalesce(sum(col("nt").cast("long")), lit(0L)))
-      .head()
-    // ×2: verifySide broadcasts TWO projections of the doc table
-    // (toks_l and toks_r are separate broadcast variables), so the
-    // memory actually materialized is twice the single-copy estimate
-    val estBytes = 2L * (totalToks * 48L + nDocs * 64L)
-    def verifySide(df: DataFrame): DataFrame =
-      if (nDocs <= maxBroadcastDocs && estBytes <= maxBroadcastBytes)
-        broadcast(df)
-      else df
-    cands
-      .join(verifySide(
-        toks.select(col("id").as("id_l"), col("toks").as("toks_l"))), "id_l")
-      .join(verifySide(
-        toks.select(col("id").as("id_r"), col("toks").as("toks_r"))), "id_r")
-      .withColumn("inter", sorted_intersect_count(col("toks_l"), col("toks_r")).cast("double"))
-      .withColumn("jaccard", col("inter") / (col("nt_l") + col("nt_r") - col("inter")))
-      .filter(col("jaccard") > threshold)
-      .select(
-        least(col("id_l"), col("id_r")).as("id_a"),
-        greatest(col("id_l"), col("id_r")).as("id_b"),
-        r4(col("jaccard")).as("jaccard"))
-  }
+  // ---------- similarity joins (embedding cosine; word-set Jaccard is PrefixJoin) ----------
 
   /** Embedding-cosine near-duplicate pairs under a blocking column —
     * grid-distributed (see [[cosineJoinGrid]]). Output is the exact

@@ -22,13 +22,12 @@ import org.apache.spark.sql.functions._
   * Scale shape: the gram-frequency table is vocabulary-sized (σ^q
   * entries max — tiny for q=2 over names) and broadcast while under
   * `maxBroadcastVocab` (shuffle join past it); its rarity rank is
-  * GlobalOrder.zipRank, never a single-partition window; candidate
-  * volume is
-  * Σ_gram df_prefix(gram)²; verify is a length filter (|Δlen| ≤ τ,
-  * free) then one Levenshtein per candidate. For LONG strings add a
-  * count filter (≥ maxlen − q + 1 − q·τ common grams) before the
-  * O(len²) verify; for short keys (names, titles, tokens) Levenshtein
-  * on candidates IS the cheap part.
+  * GlobalOrder.rarityRank, never a single-partition window;
+  * candidate volume is Σ_gram df_prefix(gram)²; verify is a length
+  * filter (|Δlen| ≤ τ, free) then one Levenshtein per candidate. For
+  * LONG strings add a count filter (≥ maxlen − q + 1 − q·τ common
+  * grams) before the O(len²) verify; for short keys (names, titles,
+  * tokens) Levenshtein on candidates IS the cheap part.
   */
 object FuzzyJoin {
 
@@ -54,20 +53,11 @@ object FuzzyJoin {
         s"transform(sequence(1, greatest(length(s) - ${q - 1}, 1)), i -> substr(s, i, $q))")))
         .as("g"))
 
-    // global rarity rank — GlobalOrder.zipRank (sort + zipWithIndex),
-    // the same ranking PrefixJoin uses, NOT an unpartitioned
-    // row_number window: σ^q bounds the vocabulary for q=2 over
-    // ASCII names, but q=3 over a unicode-rich corpus is
-    // corpus-sized, and the window form would serialize it through
-    // one task. Rank values are identical to the window's (df, g is
-    // a unique sort key), so q93's output is unchanged.
-    val (rank, vocabSize) = GlobalOrder.zipRankWithCount(
-      grams.groupBy($"g").agg(count(lit(1)).as("df")).sort($"df", $"g").select($"g"),
-      "r")
-    // broadcast only while the gram vocabulary is broadcast-sized
-    // (the PrefixJoin gate): q=2 names always pass; q=3 unicode
-    // corpora fall back to a shuffle join
-    val rankSide = if (vocabSize <= maxBroadcastVocab) broadcast(rank) else rank
+    // global rarity rank, the one PrefixJoin uses: σ^q bounds the
+    // vocabulary for q=2 over ASCII names (always broadcast), but q=3
+    // over a unicode-rich corpus is corpus-sized (shuffle join past
+    // maxBroadcastVocab, and no single-partition window)
+    val rankSide = GlobalOrder.rarityRank(grams, "g", "r", maxBroadcastVocab)
 
     // The prefix lemma needs ≥ q·τ + 1 grams: a string with fewer can
     // lose EVERY gram to τ edits (|"a" vs "b"| = 1 with zero shared

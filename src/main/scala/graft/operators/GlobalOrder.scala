@@ -1,6 +1,7 @@
 package graft.operators
 
 import org.apache.spark.sql.{Column, DataFrame, Row}
+import org.apache.spark.sql.functions.{broadcast, col, count, lit}
 import org.apache.spark.sql.types.{DecimalType, LongType, StructField, StructType}
 
 /** Global-order primitives WITHOUT a single-partition window.
@@ -52,7 +53,7 @@ object GlobalOrder {
     * order. Equivalent to `row_number().over(Window.orderBy(…))` with
     * the single-partition window replaced by the two-pass scan.
     * Also returns the total row count — measured by the first pass
-    * anyway, and callers like [[PrefixJoin]] gate a broadcast on it.
+    * anyway, and [[rarityRank]] gates its broadcast hint on it.
     * Row-generic: any schema, no encoder required.
     */
   def zipRankWithCount(sorted: DataFrame, rankCol: String): (DataFrame, Long) = {
@@ -72,6 +73,33 @@ object GlobalOrder {
   /** [[zipRankWithCount]] without the count. */
   def zipRank(sorted: DataFrame, rankCol: String): DataFrame =
     zipRankWithCount(sorted, rankCol)._1
+
+  /** The vocabulary rarity rank behind every prefix-filtered join
+    * ([[PrefixJoin]] tokens, [[FuzzyJoin]] q-grams): one unique long
+    * `rankCol` per distinct `tokCol` value of the exploded `stream`,
+    * ordered by document frequency ascending with the token itself as
+    * tie-break — so (df, tok) is a unique sort key and the ranks equal
+    * those of `row_number().over(Window.orderBy(df, tok))`, without the
+    * single-partition window (a 100M-term vocabulary would serialize
+    * on one task). Row-generic: `tokCol` may be a string or a hashed
+    * long.
+    *
+    * The returned (tok, rank) frame carries a broadcast hint only
+    * while the vocabulary is broadcast-sized (`vocabSize ≤
+    * maxBroadcastVocab`, measured for free by the ranking pass): a
+    * 100M-term vocabulary is a multi-GB relation, and an unconditional
+    * hint would force it onto every executor. Past the bound the hint
+    * is dropped and the planner/AQE picks the shuffle join.
+    */
+  def rarityRank(stream: DataFrame, tokCol: String, rankCol: String,
+      maxBroadcastVocab: Long): DataFrame = {
+    val (rank, vocabSize) = zipRankWithCount(
+      stream.groupBy(col(tokCol)).agg(count(lit(1)).as("df"))
+        .sort(col("df"), col(tokCol))
+        .select(col(tokCol)),
+      rankCol)
+    if (vocabSize <= maxBroadcastVocab) broadcast(rank) else rank
+  }
 
   /** `df` sorted by `sortCols` with an exact decimal running sum of
     * `valueCol` appended as `cumCol` — semantics of

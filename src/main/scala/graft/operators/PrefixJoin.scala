@@ -1,6 +1,6 @@
 package graft.operators
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 /** Prefix-filtered exact set-similarity self-join (the AllPairs/
@@ -21,9 +21,9 @@ import org.apache.spark.sql.functions._
   *
   * Scale shape:
   *  - the global order is a VOCABULARY-sized artifact (one df
-  *    aggregate), ranked by sort + zipWithIndex — contiguous global
-  *    ordinals with NO single-partition window (plan-pinned in
-  *    PlanAuditSpec);
+  *    aggregate), ranked by GlobalOrder.rarityRank (sort +
+  *    zipWithIndex) — contiguous global ordinals with NO
+  *    single-partition window (plan-pinned in PlanAuditSpec);
   *  - token→rank translation joins the exploded stream — broadcast
   *    while the vocabulary fits `maxBroadcastVocab`, shuffle join
   *    past it (a 100M-term vocabulary is not broadcastable) —
@@ -34,6 +34,51 @@ import org.apache.spark.sql.functions._
   */
 object PrefixJoin {
 
+  /** The exact threshold test on an overlap count `inter`, as ONE
+    * Column that evaluates `inter` once: `inter / (total − inter) >
+    * threshold` when `jaccard` (total = |A| + |B|, so the denominator
+    * is |A∪B|), else `inter / total > threshold` (containment, total =
+    * |A|). Shared by every exact set-similarity verify
+    * ([[jaccardPairsPrefix]], [[containmentPairsPrefix]],
+    * Dedup.minhashPairsExact).
+    *
+    * Why one evaluation matters: the naive shape —
+    * withColumn("j", inter/(s-inter)).filter($"j" > t) — gets
+    * alias-substituted into the filter or join CONDITION, where the
+    * division's two `inter` occurrences are codegen'd as two
+    * independent sorted-merge loops, plus a third in the surviving
+    * projection (r19 plan audit: 3 merges/candidate).
+    *
+    * Proof for t = k/10 (every declared threshold): the double
+    * comparison i/d > t, d = s − i (Jaccard) or na (containment), is
+    * EQUIVALENT to the integer test 10·i > k·d, i.e. (10+k)·i > k·s
+    * for Jaccard and 10·i > k·na for containment (d ≥ 1 for any
+    * non-empty set). When i/d ≠ k/10 the rational margin is
+    * |10·i − k·d| / (10·d) ≥ 1/(10·d), ~1e-7 even at a million
+    * tokens, dwarfing the ≤1-ulp division error; when equal, the
+    * correctly-rounded division of two exact integers yields exactly
+    * double(k/10) and the strict > is false on both sides. Non-decimal
+    * thresholds fall back to the double comparison itself.
+    */
+  private[operators] def overlapAbove(inter: Column, total: Column, threshold: Double,
+      jaccard: Boolean): Column = {
+    val k10 = math.round(threshold * 10)
+    if (k10 / 10.0 == threshold)
+      lit(if (jaccard) 10 + k10 else 10L) * inter > lit(k10) * total
+    else {
+      val i = inter.cast("double")
+      (if (jaccard) i / (total - i) else i / total) > threshold
+    }
+  }
+
+  /** Size-ratio prune, a necessary condition for Jaccard(A,B) > t on
+    * set sizes (na, nb) — cheap, so it runs before the O(|toks|)
+    * merge. Proof: with I = |A∩B| ≤ min(na,nb), I > t·(na+nb−I) ⟹
+    * I·(1+t) > t·(na+nb) ⟹ min·(1+t) > t·(min+max) ⟹ min > t·max.
+    */
+  private[operators] def jaccardSizeFeasible(na: Column, nb: Column, threshold: Double): Column =
+    least(na, nb) > lit(threshold) * greatest(na, nb)
+
   /** Shared candidate machinery for the prefix-filtered joins: the
     * per-doc rarity-ranked token arrays (id, ranks, nt, p) with
     * prefix length p = nt − ⌈t·nt⌉ + 1 — the same bound serves the
@@ -41,6 +86,9 @@ object PrefixJoin {
     * both prefixes) and the containment lemma (a set whose t-fraction
     * is covered must share a prefix token with its coverer). The
     * result is persist()ed — both sides of the fused join read it.
+    * `carry` lists (source column, alias) pairs read from the token
+    * source and kept per doc beside the ranks, as extra grouping keys
+    * (the block/size columns of [[jaccardPairsPrefix]]).
     */
   private def rankedArrays(
       spark: SparkSession,
@@ -49,11 +97,14 @@ object PrefixJoin {
       textCol: String,
       threshold: Double,
       pretokenized: Option[DataFrame],
-      maxBroadcastVocab: Long): DataFrame = {
+      maxBroadcastVocab: Long,
+      carry: Seq[(String, String)] = Nil): DataFrame = {
     import spark.implicits._
+    val carried = carry.map { case (src, alias) => col(src).as(alias) }
+    val kept = carry.map { case (_, alias) => col(alias) }
 
-    // id kept in its NATIVE type (string ids are legal, as in
-    // Dedup.jaccardPairs) — a long cast would NULL non-numeric ids
+    // id kept in its NATIVE type (string ids are legal, e.g. hex
+    // document hashes) — a long cast would NULL non-numeric ids
     // and silently collapse the corpus into one NULL-keyed group.
     // `pretokenized` (idCol + `toks` = sorted distinct xxhash64 token
     // arrays, the minhashPairsExact contract) shares one materialized
@@ -65,43 +116,25 @@ object PrefixJoin {
     // same p < 1e-11/pair bound minhashPairsExact documents).
     val toks = pretokenized match {
       case Some(pt) =>
-        graft.Par.spread(pt.select(col(idCol).as("id"), col("toks")))
-          .select($"id", explode($"toks").as("tok"))
+        graft.Par.spread(pt.select(Seq(col(idCol).as("id"), col("toks")) ++ carried: _*))
+          .select(($"id" +: kept) :+ explode($"toks").as("tok"): _*)
       case None =>
-        graft.Par.spread(docs.select(col(idCol).as("id"), col(textCol)))
-          .select($"id",
-            explode(array_distinct(graft.functions.TextFunctions.tokens(col(textCol)))).as("tok"))
+        graft.Par.spread(docs.select(Seq(col(idCol).as("id"), col(textCol)) ++ carried: _*))
+          .select(($"id" +: kept) :+
+            explode(array_distinct(graft.functions.TextFunctions.tokens(col(textCol)))).as("tok"): _*)
     }
 
-    // global rarity order: df ascending, token as tie-break → one
-    // unique long rank per vocabulary term. GlobalOrder.zipRank (sort
-    // + zipWithIndex), NOT an unpartitioned row_number window: the
-    // sorted frame stays range-partitioned and zipWithIndex numbers
-    // it contiguously across partitions (partition order = range
-    // order), so the vocabulary-sized ranking never serializes on one
-    // task — at a 100M-term vocabulary the window form is a single-
-    // partition bottleneck. (zipWithIndex runs its partition-size job
-    // at build time; Bench times construction, so the cost stays
-    // measured.) Row-generic so `tok` may be a string or a hashed
-    // long.
-    val (rank, vocabSize) = GlobalOrder.zipRankWithCount(
-      toks.groupBy($"tok").agg(count(lit(1)).as("df"))
-        .sort($"df", $"tok")
-        .select($"tok"),
-      "r")
-
-    // token→rank translation: broadcast the vocabulary ONLY while it
-    // is broadcast-sized (zipRankWithCount measured it for free) — a
-    // 100M-term vocabulary is a multi-GB relation, and an
-    // unconditional hint would force it onto every executor. Past the
-    // threshold the hint is dropped and the planner/AQE picks the
-    // shuffle join.
-    val rankSide = if (vocabSize <= maxBroadcastVocab) broadcast(rank) else rank
+    // global rarity order (df ascending, token tie-break), translated
+    // by a join that broadcasts only while the vocabulary fits
+    // maxBroadcastVocab. (The ranking's partition-size job runs at
+    // build time; Bench times construction, so the cost stays
+    // measured.)
+    val rankSide = GlobalOrder.rarityRank(toks, "tok", "r", maxBroadcastVocab)
 
     // per-doc rank array, ascending = rarest-first; prefix size
     // p = nt − ceil(t·nt) + 1
     toks.join(rankSide, Seq("tok"))
-      .groupBy($"id")
+      .groupBy($"id" +: kept: _*)
       .agg(sort_array(collect_list($"r")).as("ranks"))
       .withColumn("nt", size($"ranks"))
       .withColumn("p", ($"nt" - ceil(lit(threshold) * $"nt") + 1).cast("int"))
@@ -115,6 +148,15 @@ object PrefixJoin {
     * (id_a, id_b, jaccard), r4-rounded. Output is identical to the
     * brute-force all-pairs join (and to minhashPairsExact at the same
     * threshold, up to its vanishing LSH miss probability).
+    *
+    * Optional pair predicates, evaluated inside the same fused join:
+    *  - `blockCol`: pairs must share the block value (equi-join key);
+    *  - `sizeBand = (sizeCol, band)`: pairs must satisfy
+    *    |size_a − size_b| ≤ band.
+    * Both keep SQL `=` semantics — a NULL block or size never pairs.
+    * The columns are read from the frame that supplies the tokens
+    * (`pretokenized` when given, else `docs`). With neither set the
+    * plan is the plain self-join.
     */
   def jaccardPairsPrefix(
       spark: SparkSession,
@@ -123,14 +165,17 @@ object PrefixJoin {
       textCol: String,
       threshold: Double,
       pretokenized: Option[DataFrame] = None,
-      maxBroadcastVocab: Long = 10000000L): DataFrame = {
+      maxBroadcastVocab: Long = 10000000L,
+      blockCol: Option[String] = None,
+      sizeBand: Option[(String, Long)] = None): DataFrame = {
     import spark.implicits._
     require(threshold > 0 && threshold < 1, "threshold in (0,1)")
     import graft.functions.SortedIntersectCount.sorted_intersect_count
     import graft.functions.FirstCommonBounded.first_common_bounded
 
+    val carry = blockCol.map(_ -> "blk").toSeq ++ sizeBand.map(_._1 -> "sz")
     val ranked = rankedArrays(spark, docs, idCol, textCol,
-      threshold, pretokenized, maxBroadcastVocab)
+      threshold, pretokenized, maxBroadcastVocab, carry)
 
     // FULLY FUSED candidate + verify join (r19; supersedes the r14
     // hydrate-then-verify shape — no verify join is left to
@@ -138,7 +183,9 @@ object PrefixJoin {
     // whole rank array (the array rides the SKINNY pre-join stream —
     // Σ prefix rows, linear — never the quadratic candidate stream),
     // so every filter runs INSIDE the join, cheapest first:
-    //  - size band: least(na,nb) > t·greatest(na,nb) (J > t forces it);
+    //  - the caller's block key (a second equi-join key) and size band;
+    //  - size ratio: least(na,nb) > t·greatest(na,nb) (J > t forces it,
+    //    jaccardSizeFeasible);
     //  - PPJoin position filter: a shared token at 1-based positions
     //    (ia, ib) caps the overlap at ub = 1 + min(na−ia, nb−ib); for
     //    the FIRST shared token of a qualifying pair ub ≥ |A∩B| >
@@ -152,34 +199,25 @@ object PrefixJoin {
     //    the full candidate stream (the r14 ×10 probe's dominant
     //    cost); a qualifying pair's first-common row always survives
     //    the position filter (the lemma above), so recall is intact;
-    //  - the EXACT verify, one sorted merge per surviving row: for
-    //    t = k/10 the double test i/(s−i) > t equals the integer test
-    //    (10+k)·i > k·s (the minhashPairsExact proof — margins ≥
-    //    1/(10(s−i)) dwarf the 1-ulp division error, equality rounds
-    //    to the same double on both sides). Non-decimal thresholds
-    //    fall back to the double comparison.
+    //  - the EXACT verify, one sorted merge per surviving row
+    //    (overlapAbove).
     val prefixes = ranked
-      .select($"id", $"nt", $"p", $"ranks",
-        posexplode(slice($"ranks", lit(1), col("p"))))
+      .select(Seq($"id", $"nt", $"p", $"ranks") ++ carry.map(c => col(c._2)) :+
+        posexplode(slice($"ranks", lit(1), col("p"))): _*)
       .withColumnRenamed("col", "r")
       .withColumn("pos", $"pos" + 1)      // 1-based position in ranks
-    val k10 = math.round(threshold * 10)
-    val thresholdTest =
-      if (k10 / 10.0 == threshold)
-        lit(10 + k10) * sorted_intersect_count($"l.ranks", $"r.ranks") >
-          lit(k10) * ($"l.nt" + $"r.nt")
-      else {
-        val sic = sorted_intersect_count($"l.ranks", $"r.ranks").cast("double")
-        sic / (($"l.nt" + $"r.nt") - sic) > threshold
-      }
+    val callerPredicates =
+      blockCol.map(_ => $"l.blk" === $"r.blk").toSeq ++
+        sizeBand.map { case (_, band) => abs($"l.sz" - $"r.sz") <= band }
     prefixes.as("l").join(prefixes.as("r"),
-        $"l.r" === $"r.r" && $"l.id" < $"r.id" &&
-        least($"l.nt", $"r.nt") > lit(threshold) * greatest($"l.nt", $"r.nt") &&
+      (Seq($"l.r" === $"r.r", $"l.id" < $"r.id") ++ callerPredicates ++ Seq(
+        jaccardSizeFeasible($"l.nt", $"r.nt", threshold),
         (lit(1.0) + least($"l.nt" - $"l.pos", $"r.nt" - $"r.pos")) *
           lit(1.0 + threshold) >=
-          lit(threshold) * ($"l.nt" + $"r.nt") - lit(1e-7) &&
-        first_common_bounded($"l.ranks", $"r.ranks", $"l.p", $"r.p") === $"l.r" &&
-        thresholdTest)
+          lit(threshold) * ($"l.nt" + $"r.nt") - lit(1e-7),
+        first_common_bounded($"l.ranks", $"r.ranks", $"l.p", $"r.p") === $"l.r",
+        overlapAbove(sorted_intersect_count($"l.ranks", $"r.ranks"),
+          $"l.nt" + $"r.nt", threshold, jaccard = true))).reduce(_ && _))
       .select($"l.id".as("id_a"), $"r.id".as("id_b"),
         sorted_intersect_count($"l.ranks", $"r.ranks").cast("double").as("inter"),
         ($"l.nt" + $"r.nt").as("s"))
@@ -232,9 +270,7 @@ object PrefixJoin {
     //  - first-collision dedup: emit only from A-prefix-vs-B-full's
     //    first common token (first_common_bounded over (A's prefix,
     //    B's whole array) — replaces the candidate-stream distinct());
-    //  - exact verify, one merge per surviving row: containment
-    //    i/na > k/10 ⟺ 10·i > k·na (the integer-test proof), double
-    //    fallback for non-decimal thresholds.
+    //  - exact verify, one merge per surviving row (overlapAbove).
     val prefixes = rankedA
       .select($"id", $"nt", $"p", $"ranks",
         posexplode(slice($"ranks", lit(1), col("p"))))
@@ -244,14 +280,8 @@ object PrefixJoin {
       .select($"id", $"nt", $"ranks", posexplode($"ranks"))
       .withColumnRenamed("col", "r")
       .withColumn("pos", $"pos" + 1)
-    val k10 = math.round(threshold * 10)
-    val thresholdTest =
-      if (k10 / 10.0 == threshold)
-        lit(10L) * sorted_intersect_count($"l.ranks", $"r.ranks") >
-          lit(k10) * $"l.nt"
-      else
-        sorted_intersect_count($"l.ranks", $"r.ranks").cast("double") / $"l.nt" >
-          threshold
+    val thresholdTest = overlapAbove(
+      sorted_intersect_count($"l.ranks", $"r.ranks"), $"l.nt", threshold, jaccard = false)
     prefixes.as("l").join(full.as("r"),
         $"l.r" === $"r.r" && $"l.id" =!= $"r.id" &&
         $"r.nt" >= ceil(lit(threshold) * $"l.nt") &&

@@ -163,8 +163,9 @@ object DedupQueries {
     val marker = new org.apache.hadoop.fs.Path(path, "_SUCCESS")
     val fs = marker.getFileSystem(s.sessionState.newHadoopConf())
     if (!fs.exists(marker)) {
-      Dedup.jaccardPairs(Tables.documents(s, d), "doc_id", "text",
-          blockCol = "lang", sizeCol = "n_chars", sizeBand = 30, threshold = 0.8)
+      graft.operators.PrefixJoin.jaccardPairsPrefix(
+          s, Tables.documents(s, d), "doc_id", "text", threshold = 0.8,
+          blockCol = Some("lang"), sizeBand = Some(("n_chars", 30L)))
         .write.mode("overwrite").parquet(path)
     }
     s.read.parquet(path)

@@ -197,6 +197,14 @@ class DedupSpec extends SparkSpec {
     assert(cc2.values.toSet === Set(1L))
   }
 
+  /** The lang-blocked, n_chars-banded Jaccard join the near-dup pair
+    * artifact builds (block and band inside the fused prefix join). */
+  private def blockedPairs(df: org.apache.spark.sql.DataFrame, threshold: Double,
+      maxBroadcastVocab: Long = Long.MaxValue) =
+    PrefixJoin.jaccardPairsPrefix(df.sparkSession, df, "doc_id", "text", threshold,
+      maxBroadcastVocab = maxBroadcastVocab,
+      blockCol = Some("lang"), sizeBand = Some(("n_chars", 30L)))
+
   test("jaccardPairs: exact values, blocking respected") {
     import spark.implicits._
     val df = Seq(
@@ -205,8 +213,7 @@ class DedupSpec extends SparkSpec {
       (3L, "a b c d", "fr", 7L),     // same text, different block
       (4L, "a b c d", "en", 500L)    // same text, size band excludes
     ).toDF("doc_id", "text", "lang", "n_chars")
-    val pairs = Dedup.jaccardPairs(df, "doc_id", "text", "lang", "n_chars",
-        sizeBand = 30, threshold = 0.5)
+    val pairs = blockedPairs(df, threshold = 0.5)
       .collect().map(r => (r.getLong(0), r.getLong(1), r.getDouble(2)))
     assert(pairs.toSeq === Seq((1L, 2L, 0.6)))
   }
@@ -216,45 +223,59 @@ class DedupSpec extends SparkSpec {
     import spark.implicits._
     val rnd = new scala.util.Random(14)
     val vocab = ('a' to 'z').map(_.toString)
-    val docs = (1L to 120L).map { i =>
+    val random = (1L to 120L).map { i =>
       val nt = 2 + rnd.nextInt(10)
       val toks = Seq.fill(nt)(vocab(rnd.nextInt(vocab.size))).distinct
       val lang = if (rnd.nextBoolean()) "en" else "fr"
-      (i, toks.mkString(" "), lang, (20 + rnd.nextInt(80)).toLong)
+      (i.toString, toks.mkString(" "), Option(lang), Option((20 + rnd.nextInt(80)).toLong))
     }
-    val got = Dedup.jaccardPairs(
-        docs.toDF("doc_id", "text", "lang", "n_chars"),
-        "doc_id", "text", "lang", "n_chars", sizeBand = 30, threshold = 0.5)
-      .collect().map(r => (r.getLong(0), r.getLong(1), r.getDouble(2))).toSet
+    // planted copies of doc "1": only the id type and NULL semantics
+    // decide whether they pair (J = 1 with "1" on the text alone)
+    val (_, text1, lang1, size1) = random.head
+    val docs = random ++ Seq(
+      ("doc-x", text1, lang1, size1),   // non-numeric id: must pair with "1"
+      ("nolang", text1, None, size1),   // NULL block: never pairs,
+      ("nolang2", text1, None, size1),  //   not even with another NULL
+      ("nosize", text1, lang1, None))   // NULL size: never pairs
+    val got = blockedPairs(docs.toDF("doc_id", "text", "lang", "n_chars"), threshold = 0.5)
+      .collect().map(r => (r.getString(0), r.getString(1), r.getDouble(2))).toSet
     def r4(d: Double) = math.floor(d * 10000.0 + 0.5) / 10000.0
     val sets = docs.map { case (id, t, l, sz) => (id, t.split(" ").toSet, l, sz) }
     val expect = (for {
       a <- sets; b <- sets
-      if a._1 < b._1 && a._3 == b._3 && math.abs(a._4 - b._4) <= 30
+      if a._1 < b._1 && a._3.isDefined && a._3 == b._3 &&
+        a._4.zip(b._4).exists { case (x, y) => math.abs(x - y) <= 30 }
       inter = (a._2 & b._2).size.toDouble
       j = inter / (a._2.size + b._2.size - inter)
       if j > 0.5
     } yield (a._1, b._1, r4(j))).toSet
     assert(expect.nonEmpty, "degenerate fixture: no qualifying pairs")
+    assert(expect.contains(("1", "doc-x", 1.0)))
     assert(got === expect)
   }
 
-  test("jaccardPairs: verify-join output is broadcast-gate-independent " +
-    "(byte-size gate can fall to the shuffle plan without changing pairs)") {
-    import spark.implicits._
+  test("blocked Jaccard pairs are identical when the vocab rank shuffles") {
+    // maxBroadcastVocab = 0 drops the rank side's broadcast hint; with
+    // auto-broadcast off the token→rank translation is a shuffle join
+    val s2 = spark.newSession()
+    s2.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
+    import s2.implicits._
     val rnd = new scala.util.Random(15)
     val vocab = ('a' to 'z').map(_.toString)
     val docs = (1L to 60L).map { i =>
       val toks = Seq.fill(2 + rnd.nextInt(8))(vocab(rnd.nextInt(vocab.size))).distinct
       (i, toks.mkString(" "), "en", (20 + rnd.nextInt(40)).toLong)
     }.toDF("doc_id", "text", "lang", "n_chars")
-    def run(maxDocs: Long, maxBytes: Long) =
-      Dedup.jaccardPairs(docs, "doc_id", "text", "lang", "n_chars",
-          sizeBand = 30, threshold = 0.5,
-          maxBroadcastDocs = maxDocs, maxBroadcastBytes = maxBytes)
-        .collect().map(r => (r.getLong(0), r.getLong(1), r.getDouble(2))).toSet
-    val broadcasted = run(1000000L, 1L << 30)
-    val shuffled = run(0L, 0L)           // gate closed: sort-merge path
+    def run(maxVocab: Long) = {
+      val df = blockedPairs(docs, threshold = 0.5, maxBroadcastVocab = maxVocab)
+      val rows = df.collect().map(r => (r.getLong(0), r.getLong(1), r.getDouble(2))).toSet
+      val plan = df.queryExecution.executedPlan.toString
+      s2.catalog.clearCache()
+      (rows, plan)
+    }
+    val (broadcasted, _) = run(Long.MaxValue)
+    val (shuffled, shufflePlan) = run(0L)
+    assert(!shufflePlan.contains("BroadcastHashJoin"), shufflePlan.take(800))
     assert(broadcasted.nonEmpty)
     assert(shuffled === broadcasted)
   }

@@ -176,6 +176,47 @@ class PlanAuditSpec extends SparkSpec {
     assert(!plan.contains("BroadcastNestedLoopJoin"), plan.take(800))
   }
 
+  /** The `artifact:jacpairs_band` builder's join (lang-blocked,
+    * n_chars band 30, J > 0.8), or the same join unbanded. */
+  private def jacPairsBand(banded: Boolean): DataFrame =
+    graft.operators.PrefixJoin.jaccardPairsPrefix(
+      spark, graft.Tables.documents(spark, sf), "doc_id", "text", threshold = 0.8,
+      blockCol = Option.when(banded)("lang"),
+      sizeBand = Option.when(banded)(("n_chars", 30L)))
+
+  /** Plan nodes through AQE wrappers, stopping at cached relations. */
+  private def nodes(p: SparkPlan): Seq[SparkPlan] = p match {
+    case a: AdaptiveSparkPlanExec => nodes(a.executedPlan)
+    case q: QueryStageExec => nodes(q.plan)
+    case other => other +: other.children.flatMap(nodes)
+  }
+
+  test("jacpairs_band build: pair rows come from one fused join, no candidate distinct") {
+    import org.apache.spark.sql.execution.aggregate.BaseAggregateExec
+    import org.apache.spark.sql.execution.joins.BaseJoinExec
+    val df = jacPairsBand(banded = true)
+    df.count()
+    val plan = df.queryExecution.executedPlan   // planned while the rank arrays are cached
+    spark.catalog.clearCache()
+    // the per-doc rank arrays are a cached relation; above it the pair
+    // stream may pass through exactly one join (the fused candidate +
+    // verify self-join) and no aggregate — the pre-fusion shape was a
+    // candidate join, a distinct() and two hydration joins
+    val above = nodes(plan)
+    val joins = above.collect { case j: BaseJoinExec => j }
+    assert(joins.size === 1, plan.toString)
+    assert(above.collect { case a: BaseAggregateExec => a }.isEmpty, plan.toString)
+    assert(!plan.toString.contains("CartesianProduct"), plan.toString.take(800))
+  }
+
+  test("jacpairs_band build: the banded frame submits no more jobs than the unbanded one") {
+    // constructing either frame runs only the vocabulary ranking's
+    // jobs; the banded one used to add an eager doc/byte-count job
+    def buildJobs(banded: Boolean): Int =
+      try jobsDuring { jacPairsBand(banded) } finally spark.catalog.clearCache()
+    assert(buildJobs(banded = true) <= buildJobs(banded = false))
+  }
+
   test("q231 item-item CF: pair stream is pruned by a broadcast join before aggregation") {
     // the r10 pruning fix: only tracked-item basket rows enter the
     // co-occurrence self-join (broadcast of the top-20 id set), so the
