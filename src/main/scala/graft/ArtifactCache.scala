@@ -35,7 +35,8 @@ object ArtifactCache {
     try f(s.iterator.asScala) finally s.close()
   }
 
-  /** Cache path for `kind` derived from dataset `src` under `params`.
+  /** Cache path for `kind` derived from dataset `src` under `params`
+    * by the code in this JVM.
     *
     * The content stamp is computed over the data files of the WHOLE
     * TREE (count + total size + max mtime): a parquet dataset path can
@@ -47,26 +48,17 @@ object ArtifactCache {
     * entries of the same kind (>24 h untouched) are pruned so
     * param/corpus churn cannot accumulate unbounded under tmpdir.
     */
-  def path(kind: String, src: Path, params: String): String = {
-    val stamp =
-      try {
-        val files: Seq[Path] =
-          if (Files.isDirectory(src)) {
-            val s = Files.walk(src)
-            try s.iterator.asScala.filter(Files.isRegularFile(_)).toSeq
-            finally s.close()
-          }
-          else if (Files.isRegularFile(src)) Seq(src)
-          else Seq.empty
-        if (files.isEmpty) s"miss-${java.util.UUID.randomUUID()}"
-        else {
-          val sizes = files.map(Files.size)
-          val mtimes = files.map(Files.getLastModifiedTime(_).toMillis)
-          s"${files.size}-${sizes.sum}-${mtimes.max}"
-        }
-      } catch { case _: java.io.IOException => s"miss-${java.util.UUID.randomUUID()}" }
+  def path(kind: String, src: Path, params: String): String = path(kind, src, params, codeStamp)
+
+  /** Graft's own jar or class directory, stamped like a source once
+    * per JVM: a newer binary never reads an older one's artifacts. */
+  private lazy val codeStamp: String =
+    try stamp(Paths.get(getClass.getProtectionDomain.getCodeSource.getLocation.toURI))
+    catch { case _: Exception => miss }
+
+  private[graft] def path(kind: String, src: Path, params: String, code: String): String = {
     val digest = java.security.MessageDigest.getInstance("MD5")
-      .digest(s"$src|$params|$stamp".getBytes("UTF-8"))
+      .digest(s"$src|$params|${stamp(src)}|$code".getBytes("UTF-8"))
       .map("%02x".format(_)).mkString
     val r = root
     try {
@@ -80,6 +72,16 @@ object ArtifactCache {
     } catch { case _: java.io.IOException => () }  // pruning is best-effort
     s"$r/$kind-$digest"
   }
+
+  private def stamp(src: Path): String =
+    try {
+      val s = Files.walk(src)   // a regular file walks as itself; a missing one throws
+      val files = try s.iterator.asScala.filter(Files.isRegularFile(_)).toSeq finally s.close()
+      if (files.isEmpty) miss
+      else s"${files.size}-${files.map(Files.size).sum}-${files.map(Files.getLastModifiedTime(_).toMillis).max}"
+    } catch { case _: java.io.IOException => miss }
+
+  private def miss: String = s"miss-${java.util.UUID.randomUUID()}"
 
   /** Delete the whole artifact root. Full-bench hygiene: a full suite
     * starts from a clean root so every index/bucket build cost lands

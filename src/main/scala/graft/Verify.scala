@@ -16,11 +16,6 @@ object Verify {
     // gate then verifies exactly the plans the recommended session
     // produces
     val spark = Graft.mainSession("graft-verify")
-    // start from an empty artifact root, as full Bench does: a cached
-    // artifact is stamped by its source data, not by the code that
-    // built it, so a root left by an older build would let the dump
-    // read its pairs/indexes and never run the current operators
-    ArtifactCache.clearRoot()
     new java.io.File(outDir).mkdirs()
     // reliable checkpoint dir: the iterative loops' Iterate.truncate
     // then truncates lineage through recoverable checkpoint FILES

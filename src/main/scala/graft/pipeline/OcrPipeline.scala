@@ -1,7 +1,7 @@
 package graft.pipeline
 
-import org.apache.spark.HashPartitioner
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.execution.datasources.{HadoopFsRelation, LogicalRelation}
 import org.apache.spark.sql.functions._
 
 /** The reference's two heavy pipelines, Spark-first.
@@ -16,10 +16,10 @@ import org.apache.spark.sql.functions._
   * reference leaves Spark for Ray because per-document OCR is
   * minutes-heavy. We keep it in Spark: longest-processing-time-first
   * placement (its `ORDER BY filesize DESC`, rationale at `:4-8,125`)
-  * becomes an explicit round-robin-by-rank repartition, then
-  * document-per-task `mapPartitions`. No driver collect, no
-  * positional re-join — chunks stay keyed by doc_id throughout
-  * (replacing the fragile ordinal join at `:274-282`).
+  * is dealt on the driver from (doc_id, size), as the reference deals
+  * its collected file list (`:125-130`), then document-per-task
+  * `mapPartitions`. No positional re-join — chunks stay keyed by
+  * doc_id throughout (replacing the fragile ordinal join at `:274-282`).
   */
 object OcrPipeline {
 
@@ -54,60 +54,60 @@ object OcrPipeline {
       spark: SparkSession,
       dir: String,
       glob: String = "*.pdf"): DataFrame = {
+    import spark.implicits._
     // ≤18 digits: anything longer would overflow the long cast (an
     // ANSI-mode exception killing the whole scan on one odd filename)
     // → such names fall through to the path hash.
     val numbered = regexp_extract(col("path"), "(?<!\\d)(\\d{1,18})\\.[A-Za-z0-9]+$", 1)
-    val base = spark.read.format("binaryFile")
+    val pathHash = abs(xxhash64(col("path")))
+    val named = when(numbered =!= "", numbered.cast("long")).otherwise(pathHash)
+    val files = spark.read.format("binaryFile")
       .option("pathGlobFilter", glob)
       .load(dir)
-      .withColumn("doc_id",
-        when(numbered =!= "", numbered.cast("long"))
-          .otherwise(abs(xxhash64(col("path")))))
-
     // Downstream joins key on doc_id — a silent collision ("a/doc_1.pdf"
     // vs "b/doc_1.pdf", or a numbered id landing on another path's
-    // hash) would MERGE two documents. Guard eagerly on the skinny
-    // (doc_id, path) projection (the binary `content` column is pruned
-    // at the source, so this is a listing-sized job): colliding ids
-    // fall back to the path hash, and if even that collides (p ≈ 2⁻⁶³
-    // per pair) the read fails loudly rather than corrupt joins.
-    val dupIds = base.select(col("doc_id")).groupBy(col("doc_id"))
-      .count().filter(col("count") > 1)
-      .select(col("doc_id")).collect().map(_.getLong(0))   // bounded: collisions only
-    val resolved =
-      if (dupIds.isEmpty) base
-      else base.withColumn("doc_id",
-        when(col("doc_id").isin(dupIds.toSeq: _*), abs(xxhash64(col("path"))))
-          .otherwise(col("doc_id")))
-    if (dupIds.nonEmpty) {
-      val still = resolved.select(col("doc_id")).groupBy(col("doc_id"))
-        .count().filter(col("count") > 1).count()
-      if (still > 0) throw new IllegalStateException(
-        s"readBinaryDocs: $still doc_id collision(s) persist after path-hash " +
-          s"fallback under $dir — rename the conflicting files")
-    }
-    resolved.select(col("doc_id"), col("path"), col("length").as("filesize"), col("content"))
+    // hash) would MERGE two documents. Check on the driver, evaluating
+    // the same id Column over the relation's file listing (rendered as
+    // the scan's `path` column) as a local relation: no job. Colliding
+    // ids fall back to the path hash, and if even that collides (p ≈
+    // 2⁻⁶³ per pair) the read fails loudly rather than corrupt joins.
+    val listing = files.queryExecution.analyzed.collect { case l: LogicalRelation => l.relation }
+      .collect { case fs: HadoopFsRelation => fs.location.listFiles(Nil, Nil).flatMap(_.files) }
+      .flatten.map(_.getPath.toString).toDF("path")
+    def collisions(id: Column): Iterable[Long] =
+      listing.select(id).as[Long].collect().groupBy(identity).collect { case (k, v) if v.length > 1 => k }
+    val dupIds = collisions(named).toSeq
+    val docId = if (dupIds.isEmpty) named else when(named.isin(dupIds: _*), pathHash).otherwise(named)
+    val still = if (dupIds.isEmpty) 0 else collisions(docId).size
+    if (still > 0) throw new IllegalStateException(
+      s"readBinaryDocs: $still doc_id collision(s) persist after path-hash " +
+        s"fallback under $dir — rename the conflicting files")
+    files.select(docId.as("doc_id"), col("path"), col("length").as("filesize"), col("content"))
   }
 
-  /** Longest-processing-time-first placement: rank documents by
-    * descending cost, deal rank i to partition i mod n — each task
-    * gets an equal count of docs, with the heavy ones spread evenly
-    * and leading their task. `zipWithIndex` (one extra job to count
-    * partitions, no single-partition window) + a hash partitioner on
-    * the dealt key. RDD drop-down is deliberate: task placement is
-    * exactly the "genuine per-partition imperative logic" case.
+  /** Longest-processing-time-first placement into `numPartitions`
+    * bins, keyed by the long `doc_id` column (rows sharing an id, null
+    * included, are one document). The driver collects only the skinny
+    * (doc_id, size) projection — no file bytes from a `binaryFile`
+    * scan, no job for a local frame — and deals each next-largest
+    * document to the least-loaded bin (ties: doc_id, then bin), so the
+    * largest load is ≤ mean + largest document and runs agree. Rows
+    * then cross one exchange straight into their bin.
     */
   def lptRepartition(df: DataFrame, sizeCol: String, numPartitions: Int): DataFrame = {
     require(numPartitions > 0)
-    val spark = df.sparkSession
-    val schema = df.schema
-    val dealt = df.orderBy(col(sizeCol).desc).rdd
-      .zipWithIndex()
-      .map { case (row, rank) => ((rank % numPartitions).toInt, row) }
-      .partitionBy(new HashPartitioner(numPartitions))
-      .values
-    spark.createDataFrame(dealt, schema)
+    import df.sparkSession.implicits._
+    val id = col("doc_id").cast("long")
+    val cost = df.select(id, coalesce(col(sizeCol).cast("long"), lit(0L)))
+      .as[(Option[Long], Long)].collect().groupMapReduce(_._1)(_._2)(_ + _)
+    val load = collection.mutable.PriorityQueue.tabulate(numPartitions)(b => (0L, b))(Ordering[(Long, Int)].reverse)
+    val place = cost.toSeq.sortBy { case (k, c) => (-c, k) }.map { case (k, c) =>
+      val (l, b) = load.dequeue()
+      load.enqueue((l + c, b))
+      k.map(Long.box).orNull -> b
+    }.toMap
+    val bin = udf((k: java.lang.Long) => place.getOrElse(k, 0))   // an undealt id: bin 0
+    df.repartitionById(numPartitions, bin(id))
   }
 
   /** E2 OCR stage: (doc_id, content binary, filesize) → (doc_id, text),

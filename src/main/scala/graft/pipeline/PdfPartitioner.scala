@@ -28,8 +28,8 @@ object PartitionStrategy {
   * Per-document OCR is minutes-heavy (ref: ~3 min avg, 30 min
   * outliers — `02-parallel-ocr-with-ray.py:5,8`): the unit of
   * parallelism must be the document, never the byte range, which is
-  * why [[OcrPipeline.extractText]] repartitions documents
-  * rather than relying on input-split sizing.
+  * why [[OcrPipeline.lptRepartition]] deals whole documents to bins
+  * by size rather than relying on input-split sizing.
   */
 trait PdfPartitioner extends Serializable {
   def partition(content: Array[Byte], strategy: PartitionStrategy): Seq[String]

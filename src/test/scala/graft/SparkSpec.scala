@@ -1,9 +1,9 @@
 package graft
 
 import java.util.concurrent.{CountDownLatch, TimeUnit}
-import java.util.concurrent.atomic.AtomicInteger
+import java.util.concurrent.atomic.{AtomicInteger, AtomicLong}
 
-import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart, SparkListenerTaskEnd}
 import org.apache.spark.sql.SparkSession
 import org.scalatest.BeforeAndAfterAll
 import org.scalatest.funsuite.AnyFunSuite
@@ -12,19 +12,26 @@ import org.scalatest.funsuite.AnyFunSuite
 trait SparkSpec extends AnyFunSuite with BeforeAndAfterAll {
   lazy val spark: SparkSession = SparkSpec.session
 
-  /** Spark jobs submitted while `body` runs. Listener events arrive
-    * asynchronously but in order, so a marker job run after `body`
-    * (and not counted) proves every earlier job start was delivered. */
-  def jobsDuring(body: => Unit): Int = {
+  /** Spark jobs submitted while `body` runs. */
+  def jobsDuring(body: => Unit): Int = runDuring(body).jobs
+
+  /** Jobs submitted and input bytes read by tasks while `body` runs.
+    * Listener events arrive asynchronously but in order, so a marker
+    * job run after `body` (and not counted) proves every earlier job
+    * start and task end was delivered. */
+  def runDuring(body: => Unit): SparkSpec.Run = {
     val sc = spark.sparkContext
     val marker = java.util.UUID.randomUUID().toString
     val jobs = new AtomicInteger
+    val bytesRead = new AtomicLong
     val flushed = new CountDownLatch(1)
     val listener = new SparkListener {
       override def onJobStart(e: SparkListenerJobStart): Unit =
         if (Option(e.properties).exists(p => marker == p.getProperty(SparkSpec.MarkerKey)))
           flushed.countDown()
         else jobs.incrementAndGet()
+      override def onTaskEnd(e: SparkListenerTaskEnd): Unit =
+        if (flushed.getCount > 0) Option(e.taskMetrics).foreach(m => bytesRead.addAndGet(m.inputMetrics.bytesRead))
     }
     sc.addSparkListener(listener)
     try {
@@ -33,12 +40,14 @@ trait SparkSpec extends AnyFunSuite with BeforeAndAfterAll {
       try sc.parallelize(Seq(1), 1).count()
       finally sc.setLocalProperty(SparkSpec.MarkerKey, null)
       assert(flushed.await(60, TimeUnit.SECONDS), "listener bus did not deliver the marker job")
-      jobs.get
+      SparkSpec.Run(jobs.get, bytesRead.get)
     } finally sc.removeSparkListener(listener)
   }
 }
 
 object SparkSpec {
+  final case class Run(jobs: Int, bytesRead: Long)
+
   private val MarkerKey = "graft.spec.jobsDuring"
 
   lazy val session: SparkSession = {

@@ -74,6 +74,46 @@ class E2EPipelineSpec extends SparkSpec {
     assert(rows.filterNot(_._2.endsWith("doc_2.pdf")).forall(_._1 !== 1L))
   }
 
+  test("the listing-side collision check renders paths as the binaryFile scan does") {
+    import spark.implicits._
+    val dir = Files.createTempDirectory("graft-pdfs4")
+    // a space and a literal "%20" in one name: the scan's path column
+    // keeps both as is, while a URI rendering escapes them — and would
+    // read "a b%207.pdf" as id 25207, missing its collision with 207
+    for (name <- Seq("a b%20c.pdf", "doc_1.pdf", "1.pdf", "a b%207.pdf", "207.pdf"))
+      Files.write(dir.resolve(name), name.getBytes(StandardCharsets.UTF_8))
+    var bin: org.apache.spark.sql.DataFrame = null
+    assert(jobsDuring { bin = OcrPipeline.readBinaryDocs(spark, dir.toString) } === 0)
+    val got = bin.select($"path", $"doc_id").as[(String, Long)].collect().toMap
+    assert(got.keySet.exists(_.endsWith("/a b%20c.pdf")), got.keySet)
+    // what the scan itself computes from its own path column: both
+    // colliding pairs take the path hash, the unnumbered name its own
+    val scanned = spark.read.format("binaryFile").load(dir.toString)
+      .select($"path", abs(xxhash64($"path"))).as[(String, Long)].collect().toMap
+    assert(got === scanned)
+    assert(got.values.toSet.size === 5)
+  }
+
+  test("readBinaryDocs runs no job; extraction from it runs one that reads no file bytes") {
+    val plain = Files.createTempDirectory("graft-pdfs5")
+    (1 to 6).foreach(i => Files.write(plain.resolve(s"doc_$i.pdf"), ("page " * (i * 40)).getBytes(StandardCharsets.UTF_8)))
+    val colliding = Files.createTempDirectory("graft-pdfs6")
+    Seq("a_3.pdf", "b_3.pdf", "c_4.pdf").foreach(n => Files.write(colliding.resolve(n), n.getBytes(StandardCharsets.UTF_8)))
+    assert(jobsDuring(OcrPipeline.readBinaryDocs(spark, colliding.toString)) === 0)
+    var bin: org.apache.spark.sql.DataFrame = null
+    assert(jobsDuring { bin = OcrPipeline.readBinaryDocs(spark, plain.toString) } === 0)
+    var out: org.apache.spark.sql.DataFrame = null
+    val placing = runDuring {
+      out = OcrPipeline.extractTextAudited(spark, bin, AutoPartitioner(TextPartitioner()), parallelism = 2)
+    }
+    assert(placing.jobs <= 1 && placing.bytesRead === 0L, placing)
+    val plan = out.queryExecution.executedPlan.toString
+    assert(!plan.contains("Sort") && !plan.contains("rangepartitioning"), plan)
+    // the action reads each file's bytes once
+    val action = runDuring(assert(out.count() === 6))
+    assert(action.bytesRead === (1 to 6).map(i => 5L * 40 * i).sum, action)
+  }
+
   test("PipelineMain registers catalog tables (S4 saveAsTable + S12 SHOW TABLES)") {
     val out = Files.createTempDirectory("graft-pipe-out").toString
     graft.PipelineMain.run(spark, "/root/testdata/sf0.001", out, "spark join performance")

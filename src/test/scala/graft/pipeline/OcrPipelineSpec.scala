@@ -8,18 +8,49 @@ import org.apache.spark.sql.functions._
 
 class OcrPipelineSpec extends SparkSpec {
 
-  test("lptRepartition: equal doc counts per task, heavy docs spread round-robin") {
+  test("lptRepartition: greedy deal, bounded, stable, every row once") {
     import spark.implicits._
-    val docs = (1 to 40).map(i => (i.toLong, i.toLong * 100)).toDF("doc_id", "filesize")
-    val placed = OcrPipeline.lptRepartition(docs, "filesize", 4)
-    val perPart = placed.rdd.mapPartitionsWithIndex { (i, it) =>
-      Iterator((i, it.map(_.getLong(1)).toSeq))
-    }.collect().toMap
-    assert(perPart.size === 4)
-    assert(perPart.values.map(_.size).toSet === Set(10))
-    // each partition's max should be one of the 4 heaviest docs
-    val heads = perPart.values.map(_.max).toSet
-    assert(heads === Set(4000L, 3900L, 3800L, 3700L))
+    // Pareto-ish sizes: a few heavy docs, a long light tail; two rows
+    // share id 7 and two carry a null id
+    val sizes = (1 to 40).map(i => 100000L / (i * i) + i)
+    val rows = sizes.zipWithIndex.map { case (s, i) => (Option(i.toLong), s) } ++
+      Seq((Some(7L), 5000L), (None, 300L), (None, 20L))
+    val docs = rows.toDF("doc_id", "filesize")
+    def bins(): Map[Int, Seq[(Option[Long], Long)]] =
+      OcrPipeline.lptRepartition(docs, "filesize", 4).as[(Option[Long], Long)].rdd
+        .mapPartitionsWithIndex((b, it) => it.map(b -> _)).collect().toSeq
+        .groupMap(_._1)(_._2)
+    val placed = bins()
+    assert(placed.keySet.subsetOf((0 until 4).toSet))
+    // every input row exactly once, null and repeated ids included
+    assert(placed.values.flatten.toSeq.sortBy(_.toString) === rows.sortBy(_.toString))
+    // rows sharing a doc_id land in one bin
+    assert(placed.count(_._2.exists(_._1 === Some(7L))) === 1)
+    assert(placed.count(_._2.exists(_._1.isEmpty)) === 1)
+    // list-scheduling bound: max load ≤ mean load + largest document
+    val loads = (0 until 4).map(b => placed.getOrElse(b, Nil).map(_._2).sum)
+    val docCost = rows.groupMapReduce(_._1)(_._2)(_ + _)
+    assert(loads.max <= loads.sum / 4.0 + docCost.values.max)
+    // the four heaviest documents open the four bins
+    assert(docCost.toSeq.sortBy(-_._2).take(4).map(_._1).map(k => placed.find(_._2.exists(_._1 === k)).get._1).toSet
+      === (0 until 4).toSet)
+    // the same placement on every run
+    assert(bins().map { case (b, r) => b -> r.toSet } === placed.map { case (b, r) => b -> r.toSet })
+  }
+
+  test("extraction places a local frame with no job and no sort or range exchange") {
+    import spark.implicits._
+    val bin = (1 to 12).map(i => (i.toLong, Array.fill(i * 10)('a'.toByte), i * 10L))
+      .toDF("doc_id", "content", "filesize")
+    var out: org.apache.spark.sql.DataFrame = null
+    assert(jobsDuring {
+      out = OcrPipeline.extractTextAudited(spark, bin, AutoPartitioner(TextPartitioner()), parallelism = 3)
+    } === 0)
+    val plan = out.queryExecution.executedPlan.toString
+    assert(!plan.contains("Sort") && !plan.contains("rangepartitioning"), plan)
+    assert(out.rdd.getNumPartitions === 3)
+    assert(out.as[(Long, String, String)].collect().map(r => r._1 -> r._2).toMap ===
+      (1 to 12).map(i => i.toLong -> "a" * (i * 10)).toMap)
   }
 
   test("extractText: OCR seam, keyed (not positional) results") {
