@@ -1,21 +1,32 @@
 package graft.streaming
 
+import java.net.URI
+import java.nio.charset.StandardCharsets.UTF_8
+import java.util.UUID
+
+import scala.util.Using
+
 import graft.pipeline.{Chunk, Embedder, Inference}
-import org.apache.spark.sql.{DataFrame, Dataset, Row, SparkSession}
+import org.apache.hadoop.fs.{FileAlreadyExistsException, Path}
+import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.execution.datasources.{HadoopFsRelation, InMemoryFileIndex}
+import org.apache.spark.sql.execution.datasources.parquet.ParquetFileFormat
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.Trigger
 import org.apache.spark.sql.types._
 
 /** Incremental propagation of new chunks into the vector index — the
-  * Structured-Streaming re-expression of the reference's Delta Change
-  * Data Feed + `pipeline_type="TRIGGERED"` delta-sync index
+  * re-expression of the reference's Delta Change Data Feed +
+  * `pipeline_type="TRIGGERED"` delta-sync index
   * (`ocr-tesseract-unstructured.py:112,145-153`).
   *
-  * `Trigger.AvailableNow` is the exact analogue of TRIGGERED sync:
-  * each invocation drains all not-yet-processed input (checkpoint
-  * tracks progress), embeds only the NEW chunks, and appends them to
-  * the index — never a full rebuild. At scale this is the difference
-  * between re-embedding 100 TB and embedding the day's delta.
+  * Each [[syncOnce]] is one TRIGGERED sync: it embeds only the chunk
+  * files not yet indexed and appends them — never a full rebuild. At
+  * scale this is the difference between re-embedding 100 TB and
+  * embedding the day's delta. It runs as one plain Spark batch over a
+  * file log, not as a Structured Streaming query (`AvailableNow`), whose
+  * start and stop per call cost more than the work: syncing 8 new
+  * documents took 416 ms that way and 238 ms as a batch (medians of 25
+  * refreshes, local[4] on 4 cores), about 105 ms of either being the job.
   */
 object IncrementalIndex {
 
@@ -26,16 +37,17 @@ object IncrementalIndex {
     StructField("chunk", StringType)))
 
   /** Drain new chunk files from `chunksDir` into the index at
-    * `indexDir`. Idempotent per input file via the checkpoint AND per
-    * batch via the sink layout: each micro-batch overwrites its own
-    * deterministic `batch=<id>` directory, so a crash between the
-    * sink write and the checkpoint commit replays the batch onto the
-    * same path instead of appending duplicates (foreachBatch is
-    * at-least-once; a bare `append` there would be the classic
-    * double-write — the reference gets the equivalent guarantee from
-    * Delta's transactional sync). Read the index with
-    * `spark.read.parquet(indexDir)` — `batch` is just a partition
-    * column.
+    * `indexDir`, each file exactly once. Batch N (last committed + 1)
+    * takes the files Spark's file listing finds under `chunksDir`
+    * (recursively, hidden `_`/`.` entries skipped) less those of
+    * committed batches, publishes them as `checkpointDir/plan/N`, writes
+    * their embeddings over `indexDir/batch=N` and publishes `commit/N`.
+    * A crash before the commit replays the plan onto the same directory,
+    * overwriting instead of appending duplicates. Log entries are renamed
+    * in without overwrite, so a concurrent second sync fails instead of
+    * clobbering. No new file, no job; else one. Reading the log opens one
+    * small file per committed batch (no compaction). Read the index with
+    * `spark.read.parquet(indexDir)` — `batch` is a partition column.
     */
   def syncOnce(
       spark: SparkSession,
@@ -45,34 +57,56 @@ object IncrementalIndex {
       embedder: Embedder,
       batchSize: Int = 150): Unit = {
     import spark.implicits._
-    // Fail fast on a lost checkpoint with a surviving index: batch ids
-    // would restart at 0 and OVERWRITE old batch dirs while later ones
-    // survive — an undetectable mix of index generations. Rebuilding
-    // from scratch (empty index + empty checkpoint) is the safe reset.
     val conf = spark.sessionState.newHadoopConf()
-    def exists(p: String) =
-      new org.apache.hadoop.fs.Path(p).getFileSystem(conf)
-        .exists(new org.apache.hadoop.fs.Path(p))
-    if (!exists(checkpointDir) && exists(indexDir))
-      throw new IllegalStateException(
-        s"index $indexDir exists but checkpoint $checkpointDir does not: " +
-          "restarting would interleave index generations; delete the index " +
-          "to rebuild, or restore the checkpoint")
-    val stream = spark.readStream.schema(chunkSchema).parquet(chunksDir)
-    val query = stream.writeStream
-      .trigger(Trigger.AvailableNow())
-      .option("checkpointLocation", checkpointDir)
-      .foreachBatch { (batch: Dataset[Row], batchId: Long) =>
-        Inference.embedChunks(batch.as[Chunk], embedder, batchSize)
-          .coalesce(outputFiles(batch))
-          .write.mode("overwrite").parquet(s"$indexDir/batch=$batchId")
-        ()
-      }
-      .start()
-    query.awaitTermination()
+    def exists(p: Path) = p.getFileSystem(conf).exists(p)
+    val ckpt = new Path(checkpointDir)
+    // A lost checkpoint would restart batch ids at 0 over surviving batch
+    // dirs; a streaming sync's checkpoint, read as an empty log, would
+    // re-embed everything. Rebuilding from scratch is the safe reset.
+    def refuse(why: String) = throw new IllegalStateException(s"checkpoint $checkpointDir " +
+      s"$why; delete the index $indexDir and the checkpoint to rebuild")
+    if (!exists(ckpt) && exists(new Path(indexDir))) refuse("is missing, the index is not")
+    if (Seq("offsets", "metadata").exists(e => exists(new Path(ckpt, e))))
+      refuse("was written by a Structured Streaming sync")
+    val fs = ckpt.getFileSystem(conf)
+    def entry(log: String, id: Long) = new Path(ckpt, s"$log/$id")
+    def read(id: Long): Seq[String] = Using.resource(fs.open(entry("plan", id)))(
+      in => new String(in.readAllBytes(), UTF_8).linesIterator.toSeq)
+    // rename fails on an existing target on HDFS; elsewhere the exists check
+    // refuses one, as Hadoop's FileContext does locally (forking `stat`)
+    def publish(log: String, id: Long, lines: Seq[String]): Unit = {
+      val (tmp, dst) = (new Path(ckpt, s"$log/.$id.${UUID.randomUUID()}.tmp"), entry(log, id))
+      Using.resource(fs.create(tmp, false))(_.write(lines.map(_ + "\n").mkString.getBytes(UTF_8)))
+      try if (fs.exists(dst) || !fs.rename(tmp, dst))
+        throw new FileAlreadyExistsException(s"$dst exists: is another sync running?")
+      finally fs.delete(tmp, false)
+    }
+    val committed = Some(new Path(ckpt, "commit")).filter(exists).toSeq
+      .flatMap(fs.listStatus(_)).flatMap(_.getPath.getName.toLongOption)
+    val n = committed.maxOption.fold(0L)(_ + 1)
+    val files = if (exists(entry("plan", n))) read(n) else {
+      val done = committed.flatMap(read).toSet
+      val fresh = new InMemoryFileIndex(spark, Seq(new Path(chunksDir)),
+          Map("recursiveFileLookup" -> "true"), None).allFiles()
+        .sortBy(f => (f.getModificationTime, f.getPath.toString))
+        .map(_.getPath.toUri.toString).filterNot(done)
+      if (fresh.nonEmpty) publish("plan", n, fresh)
+      fresh
+    }
+    if (files.nonEmpty) {
+      // exactly these files: a reader globs given paths, and with globbing
+      // off Spark 4.1 lists all of them again for each one holding `[` or `{`
+      val only = new InMemoryFileIndex(spark, files.map(f => new Path(new URI(f))), Map.empty, None)
+      val batch = spark.baseRelationToDataFrame(HadoopFsRelation(
+        only, new StructType, chunkSchema, None, new ParquetFileFormat, Map.empty)(spark))
+      Inference.embedChunks(batch.as[Chunk], embedder, batchSize)
+        .coalesce(outputFiles(batch))
+        .write.mode("overwrite").parquet(s"$indexDir/batch=$n")
+      publish("commit", n, Nil)
+    }
   }
 
-  /** Files to write a micro-batch as: one per
+  /** Files to write a batch as: one per
     * `spark.sql.files.maxPartitionBytes` of its input, from planning
     * statistics (no count job). Without it the batch is written one
     * file per open-cost scan split — four files for a few kilobytes of

@@ -1,10 +1,18 @@
 package graft.streaming
 
-import java.nio.file.Files
+import java.io.File
+import java.nio.file.{Files, Path, Paths}
+import java.util.concurrent.atomic.AtomicInteger
+
+import scala.jdk.CollectionConverters._
 
 import graft.SparkSpec
-import graft.pipeline.{Chunk, HashingEmbedder}
+import graft.pipeline.{Chunk, HashingEmbedder, Inference}
+import org.apache.commons.io.FileUtils
+import org.apache.hadoop.fs.{FileContext, Path => HPath}
+import org.apache.spark.sql.{Dataset, Row}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.streaming.{StreamingQueryListener, Trigger}
 
 class IncrementalIndexSpec extends SparkSpec {
 
@@ -103,6 +111,165 @@ class IncrementalIndexSpec extends SparkSpec {
     assert(streamed.exists(_._2.contains("aesvfive")))
     // …and the locked document's plaintext is not (ciphertext only)
     assert(!streamed.exists(_._2.contains("lockedbody")))
+  }
+
+  /** One parquet file of `ids`' chunks, written as `dest` exactly,
+    * with its `.crc` beside it as Spark writes one. */
+  private def chunkFile(dest: Path, ids: Seq[String]): Unit = {
+    import spark.implicits._
+    val out = Files.createTempDirectory("graft-chunk-file").resolve("out")
+    ids.zipWithIndex.map { case (id, i) => Chunk(i.toLong, 0, id, s"text of chunk $id") }
+      .toDS().coalesce(1).write.parquet(out.toString)
+    val part = Files.list(out).iterator.asScala.map(_.getFileName.toString)
+      .find(_.startsWith("part-")).get
+    Files.createDirectories(dest.getParent)
+    Files.move(out.resolve(part), dest)
+    Files.move(out.resolve(s".$part.crc"), dest.resolveSibling(s".${dest.getFileName}.crc"))
+  }
+
+  private def indexed(indexDir: String): Seq[String] = {
+    import spark.implicits._
+    spark.read.parquet(indexDir).select("chunk_id").as[String].collect().toSeq.sorted
+  }
+
+  private def batches(indexDir: String): Seq[String] =
+    Files.list(Paths.get(indexDir)).iterator.asScala.map(_.getFileName.toString)
+      .filter(_.startsWith("batch=")).toSeq.sorted
+
+  test("sync: a lost checkpoint next to a surviving index throws") {
+    val base = Files.createTempDirectory("graft-sync-lost")
+    val (chunksDir, indexDir, ckpt) = (s"$base/chunks", s"$base/index", s"$base/ckpt")
+    val e = HashingEmbedder(dim = 16)
+    chunkFile(base.resolve("chunks/a.parquet"), Seq("a0", "a1"))
+    IncrementalIndex.syncOnce(spark, chunksDir, indexDir, ckpt, e)
+    assert(indexed(indexDir) === Seq("a0", "a1"))
+    FileUtils.deleteDirectory(new File(ckpt))
+    chunkFile(base.resolve("chunks/b.parquet"), Seq("b0"))
+    val err = intercept[IllegalStateException] {
+      IncrementalIndex.syncOnce(spark, chunksDir, indexDir, ckpt, e)
+    }
+    assert(err.getMessage.contains("checkpoint"))
+    assert(batches(indexDir) === Seq("batch=0"))
+    assert(indexed(indexDir) === Seq("a0", "a1"))
+  }
+
+  test("sync: a checkpoint of the Structured Streaming sync throws, naming the reset") {
+    import spark.implicits._
+    val e = HashingEmbedder(dim = 16)
+    def rejected(base: Path): Unit = {
+      val (chunksDir, indexDir, ckpt) = (s"$base/chunks", s"$base/index", s"$base/ckpt")
+      val before = indexed(indexDir)
+      chunkFile(base.resolve("chunks/late.parquet"), Seq("late0"))
+      val err = intercept[IllegalStateException] {
+        IncrementalIndex.syncOnce(spark, chunksDir, indexDir, ckpt, e)
+      }
+      assert(err.getMessage.contains("delete the index"), err.getMessage)
+      assert(err.getMessage.contains("checkpoint"), err.getMessage)
+      assert(indexed(indexDir) === before, "nothing may be re-embedded")
+      assert(!Files.exists(base.resolve("ckpt/plan")))
+    }
+    // a checkpoint as the streaming sync wrote it: offsets/, commits/,
+    // sources/ and a metadata file
+    val real = Files.createTempDirectory("graft-sync-streamed")
+    chunkFile(real.resolve("chunks/a.parquet"), Seq("a0", "a1"))
+    spark.readStream.schema(IncrementalIndex.chunkSchema).parquet(s"$real/chunks")
+      .writeStream.trigger(Trigger.AvailableNow())
+      .option("checkpointLocation", s"$real/ckpt")
+      .foreachBatch { (batch: Dataset[Row], id: Long) =>
+        Inference.embedChunks(batch.as[Chunk], e)
+          .write.mode("overwrite").parquet(s"$real/index/batch=$id")
+        ()
+      }
+      .start().awaitTermination()
+    assert(Files.isDirectory(real.resolve("ckpt/offsets")))
+    rejected(real)
+    // either entry alone is enough
+    for (entry <- Seq("offsets/0", "metadata")) {
+      val base = Files.createTempDirectory("graft-sync-entry")
+      chunkFile(base.resolve("chunks/a.parquet"), Seq("a0"))
+      IncrementalIndex.syncOnce(spark, s"$base/chunks", s"$base/index", s"$base/ckpt", e)
+      FileUtils.deleteDirectory(base.resolve("ckpt").toFile)
+      Files.createDirectories(base.resolve(s"ckpt/$entry").getParent)
+      Files.write(base.resolve(s"ckpt/$entry"), "{}".getBytes("UTF-8"))
+      rejected(base)
+    }
+  }
+
+  test("sync: an uncommitted plan is replayed with exactly its files") {
+    val base = Files.createTempDirectory("graft-sync-replay")
+    val (chunksDir, indexDir, ckpt) = (s"$base/chunks", s"$base/index", s"$base/ckpt")
+    val e = HashingEmbedder(dim = 16)
+    chunkFile(base.resolve("chunks/a.parquet"), Seq("a0", "a1"))
+    chunkFile(base.resolve("chunks/b.parquet"), Seq("b0"))
+    IncrementalIndex.syncOnce(spark, chunksDir, indexDir, ckpt, e)
+    // a crash between the sink write and the commit
+    FileContext.getLocalFSFileContext.delete(new HPath(s"$ckpt/commit/0"), false)
+    chunkFile(base.resolve("chunks/c.parquet"), Seq("c0", "c1"))
+    IncrementalIndex.syncOnce(spark, chunksDir, indexDir, ckpt, e)
+    assert(batches(indexDir) === Seq("batch=0"))
+    assert(indexed(indexDir) === Seq("a0", "a1", "b0"), "no duplicate rows, c.parquet absent")
+    IncrementalIndex.syncOnce(spark, chunksDir, indexDir, ckpt, e)
+    assert(batches(indexDir) === Seq("batch=0", "batch=1"))
+    assert(indexed(s"$indexDir/batch=1") === Seq("c0", "c1"))
+    assert(indexed(indexDir) === Seq("a0", "a1", "b0", "c0", "c1"))
+  }
+
+  test("sync: one job with new files, none without, and no streaming query") {
+    val base = Files.createTempDirectory("graft-sync-jobs")
+    val (chunksDir, indexDir, ckpt) = (s"$base/chunks", s"$base/index", s"$base/ckpt")
+    val e = HashingEmbedder(dim = 16)
+    val started = new AtomicInteger
+    val listener = new StreamingQueryListener {
+      override def onQueryStarted(q: StreamingQueryListener.QueryStartedEvent): Unit =
+        started.incrementAndGet()
+      override def onQueryProgress(q: StreamingQueryListener.QueryProgressEvent): Unit = ()
+      override def onQueryTerminated(q: StreamingQueryListener.QueryTerminatedEvent): Unit = ()
+    }
+    spark.streams.addListener(listener)
+    try {
+      def sync(): Int = jobsDuring {
+        IncrementalIndex.syncOnce(spark, chunksDir, indexDir, ckpt, e)
+        assert(spark.streams.active.isEmpty)
+      }
+      chunkFile(base.resolve("chunks/a.parquet"), Seq("a0", "a1"))
+      assert(sync() === 1)
+      assert(sync() === 0)
+      chunkFile(base.resolve("chunks/b.parquet"), Seq("b0"))
+      chunkFile(base.resolve("chunks/c.parquet"), Seq("c0"))
+      assert(sync() === 1)
+      assert(sync() === 0)
+      assert(indexed(indexDir) === Seq("a0", "a1", "b0", "c0"))
+    } finally spark.streams.removeListener(listener)
+    assert(started.get === 0, "a sync started a streaming query")
+  }
+
+  test("sync: odd file names round-trip, hidden entries are never read") {
+    val base = Files.createTempDirectory("graft-sync-paths")
+    val (chunksDir, indexDir, ckpt) = (s"$base/chunks", s"$base/index", s"$base/ckpt")
+    val e = HashingEmbedder(dim = 16)
+    val chunks = base.resolve("chunks")
+    // each odd name sits next to the file a glob or an unescaping
+    // reading of it would name instead
+    val visible = Seq("e f.parquet", "e%20f.parquet", "d[1].parquet", "d1.parquet",
+      "c{a,b}.parquet", "ca.parquet", "cb.parquet", "sub/deep one.parquet")
+    visible.zipWithIndex.foreach { case (name, i) =>
+      chunkFile(chunks.resolve(name), Seq(s"v${i}_0", s"v${i}_1"))
+    }
+    chunkFile(chunks.resolve("_temporary/0/part-00000.parquet"), Seq("hidden_tmp"))
+    chunkFile(chunks.resolve(".staged.parquet"), Seq("hidden_dot"))
+    chunkFile(chunks.resolve("_hidden.parquet"), Seq("hidden_underscore"))
+    Files.write(chunks.resolve("_SUCCESS"), Array.emptyByteArray)
+    Files.write(chunks.resolve(".orphan.parquet.crc"), "not parquet".getBytes("UTF-8"))
+    val expected = visible.indices.flatMap(i => Seq(s"v${i}_0", s"v${i}_1")).sorted
+    IncrementalIndex.syncOnce(spark, chunksDir, indexDir, ckpt, e)
+    assert(indexed(indexDir) === expected)
+    // committed names are recognised again: nothing new, no batch
+    IncrementalIndex.syncOnce(spark, chunksDir, indexDir, ckpt, e)
+    assert(batches(indexDir) === Seq("batch=0"))
+    chunkFile(chunks.resolve("g [2] {x}.parquet"), Seq("late_0"))
+    IncrementalIndex.syncOnce(spark, chunksDir, indexDir, ckpt, e)
+    assert(indexed(s"$indexDir/batch=1") === Seq("late_0"))
+    assert(indexed(indexDir) === (expected :+ "late_0").sorted)
   }
 
   test("windowedEventStats: streaming AvailableNow result matches batch") {
