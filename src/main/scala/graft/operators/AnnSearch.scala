@@ -268,9 +268,10 @@ object AnnSearch {
       .select($"id_a", $"id_b", round($"cos", 6).as("cos"))
   }
 
-  /** Probe-filtered exact-rerank top-k. The bucket filter is a
-    * pushable predicate (partition pruning on a bucket-partitioned
-    * index); the exact cosine runs only on candidates.
+  /** Probe-filtered exact-rerank top-k: [[VectorSearch.topK]] over
+    * the probed buckets. The bucket filter is a pushable predicate
+    * (partition pruning on a bucket-partitioned index); the exact
+    * cosine runs only on candidates.
     */
   def search(
       index: DataFrame,
@@ -281,13 +282,7 @@ object AnnSearch {
       lsh: LshScheme,
       nProbe: Int = 8): DataFrame = {
     val probes = lsh.probeBuckets(query, nProbe)
-    index
-      .filter(col("bucket").isin(probes: _*))
-      .withColumn("sim",
-        graft.functions.GraftFunctions.cosine_sim(
-          col(vecCol), VectorSearch.vecLit(query.map(_.toDouble).toSeq)))
-      .orderBy(col("sim").desc, col(idCol))
-      .limit(k)
-      .select(col(idCol), col("sim"))
+    VectorSearch.topK(index.filter(col("bucket").isin(probes: _*)), vecCol, idCol,
+      query.map(_.toDouble).toSeq, k).select(col(idCol), col("sim"))
   }
 }

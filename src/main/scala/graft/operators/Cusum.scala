@@ -1,7 +1,5 @@
 package graft.operators
 
-import java.sql.Date
-
 import org.apache.spark.sql.{DataFrame, Encoders}
 import org.apache.spark.sql.functions._
 
@@ -20,9 +18,8 @@ import org.apache.spark.sql.functions._
   * Every step is exact integer algebra ([[LogReg.fdiv]] floors
   * identically in both engines; max ≡ GREATEST).
   *
-  * Scale shape: the daily aggregation is distributed; the fold runs
-  * over the day-count-bounded frame in one executor task (the
-  * [[Holt]] bounded-frame class).
+  * Scale shape: the [[SeriesFold.series]] single-task gather of the
+  * day-count-bounded series; the recurrence is [[step]].
   */
 object Cusum {
 
@@ -32,29 +29,31 @@ object Cusum {
   /** alarm threshold = μ/2. */
   val ThreshDen = 2L
 
+  /** Cumulative sums of the upward and downward sides. */
+  final case class SideState(su: Long, sl: Long)
+
+  val Start = SideState(0L, 0L)
+
+  /** One two-sided step against reference `mu`, slack and threshold;
+    * returns whether either side exceeds the threshold. */
+  def step(mu: Long, slack: Long, thresh: Long)(st: SideState, xq: Long)
+      : (SideState, Boolean) = {
+    val s = SideState(math.max(0L, st.su + xq - mu - slack),
+      math.max(0L, st.sl + mu - xq - slack))
+    (s, s.su > thresh || s.sl > thresh)
+  }
+
   /** (day, xq, su, sl, alarm) per day, ordered by day. */
-  def detect(series: DataFrame, dayCol: String, valCol: String): DataFrame = {
-    val spark = series.sparkSession
-    import spark.implicits._
-    series.select(col(dayCol).cast("date"), col(valCol).cast("long"))
-      .as[(Date, Long)]
-      .groupByKey(_ => true)
-      .flatMapGroups { (_, it) =>
-        val rows = it.toArray.sortBy(_._1.getTime)
-        val n = rows.length.toLong
-        val mu = LogReg.fdiv(rows.map(_._2).sum, n)
-        val k = LogReg.fdiv(mu, SlackDen)
-        val h = LogReg.fdiv(mu, ThreshDen)
-        var su = 0L
-        var sl = 0L
-        rows.iterator.map { case (day, xq) =>
-          su = math.max(0L, su + xq - mu - k)
-          sl = math.max(0L, sl + mu - xq - k)
-          (day, xq, su, sl, su > h || sl > h)
-        }
-      }(Encoders.tuple(Encoders.DATE, Encoders.scalaLong, Encoders.scalaLong,
-        Encoders.scalaLong, Encoders.scalaBoolean))
+  def detect(series: DataFrame, dayCol: String, valCol: String): DataFrame =
+    SeriesFold.series(series, dayCol, valCol) { rows =>
+      val mu = LogReg.fdiv(rows.map(_._2).sum, rows.length.toLong)
+      val fold = step(mu, LogReg.fdiv(mu, SlackDen), LogReg.fdiv(mu, ThreshDen)) _
+      SeriesFold.scan(Start, rows.iterator) { case (st, (day, xq)) =>
+        val (s, alarm) = fold(st, xq)
+        (s, (day, xq, s.su, s.sl, alarm))
+      }
+    }(Encoders.tuple(Encoders.DATE, Encoders.scalaLong, Encoders.scalaLong,
+      Encoders.scalaLong, Encoders.scalaBoolean))
       .toDF(dayCol, valCol, "su", "sl", "alarm")
       .orderBy(col(dayCol))
-  }
 }

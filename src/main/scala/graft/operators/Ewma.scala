@@ -30,6 +30,16 @@ object Ewma {
   /** α denominator: smoothing 1/8 per step. */
   val AlphaDen = 8L
 
+  /** (sequence ordinal so far, current smoothed state). */
+  final case class UserState(rn: Long, s: Long)
+
+  val Start = UserState(0L, 0L)
+
+  /** One EWMA step: the first observation seeds the state. */
+  def step(st: UserState, xq: Long): UserState =
+    UserState(st.rn + 1L,
+      if (st.rn == 0L) xq else st.s + LogReg.fdiv(xq - st.s, AlphaDen))
+
   /** (userId, rn, eventId, xq, ewma) per event, rn the 1-based
     * per-user sequence ordinal by (ts, eventId).
     */
@@ -51,11 +61,11 @@ object Ewma {
     base.as[(Long, Long, Long, Long)]
       .groupByKey(_._1)
       .flatMapGroups { (u, it) =>
-        val rows = it.toArray.sortBy(_._4) // rn: contiguous 1..n
-        var s = 0L
-        rows.iterator.map { case (_, eventId, xq, rn) =>
-          s = if (rn == 1L) xq else s + LogReg.fdiv(xq - s, AlphaDen)
-          (u, rn, eventId, xq, s)
+        // rn: contiguous 1..n, so the state's ordinal is the row's
+        SeriesFold.scan(Start, it.toArray.sortBy(_._4).iterator) {
+          case (st, (_, eventId, xq, rn)) =>
+            val s = step(st, xq)
+            (s, (u, rn, eventId, xq, s.s))
         }
       }(Encoders.tuple(Encoders.scalaLong, Encoders.scalaLong,
         Encoders.scalaLong, Encoders.scalaLong, Encoders.scalaLong))

@@ -21,11 +21,8 @@ import org.apache.spark.sql.functions._
   * algebra, so the whole trajectory replays as a RECURSIVE CTE in
   * the oracle (the q168 pattern with a two-component carry).
   *
-  * Scale shape: the input aggregation (one row per day) is
-  * distributed; the fold itself runs over the DAY-COUNT-bounded
-  * series — a frame that grows with the calendar, not the corpus —
-  * inside one executor task (single-group mapGroups; the
-  * KMeans-centroid bounded-frame class).
+  * Scale shape: the [[SeriesFold.series]] single-task gather of the
+  * day-count-bounded series; the recurrence is [[step]].
   */
 object Holt {
 
@@ -33,6 +30,19 @@ object Holt {
   final case class HwRow(
       day: Date, xq: Long, level: Long, trend: Long, sUsed: Long,
       fitted: Long)
+
+  /** (level, trend, any-observation-seen). */
+  final case class HState(l: Long, b: Long, seen: Boolean)
+
+  val Start = HState(0L, 0L, seen = false)
+
+  /** One level + trend step: the first observation seeds the level. */
+  def step(alphaDen: Long, betaDen: Long)(st: HState, xq: Long): HState =
+    if (!st.seen) HState(xq, 0L, seen = true)
+    else {
+      val d = LogReg.fdiv(xq - st.l - st.b, alphaDen)
+      HState(st.l + st.b + d, st.b + LogReg.fdiv(d, betaDen), seen = true)
+    }
 
   /** (day, xq, level, trend, forecast) per observation, ordered by
     * day; `forecast` is the one-step-ahead level + trend.
@@ -44,27 +54,13 @@ object Holt {
       alphaDen: Long,
       betaDen: Long): DataFrame = {
     require(alphaDen >= 1L && betaDen >= 1L)
-    val spark = series.sparkSession
-    import spark.implicits._
-    series.select(col(dayCol).cast("date"), col(valCol).cast("long"))
-      .as[(Date, Long)]
-      .groupByKey(_ => true)
-      .flatMapGroups { (_, it) =>
-        val rows = it.toArray.sortBy(_._1.getTime)
-        var l = 0L
-        var b = 0L
-        var first = true
-        rows.iterator.map { case (day, xq) =>
-          if (first) { l = xq; b = 0L; first = false }
-          else {
-            val d = LogReg.fdiv(xq - l - b, alphaDen)
-            l = l + b + d
-            b = b + LogReg.fdiv(d, betaDen)
-          }
-          (day, xq, l, b, l + b)
-        }
-      }(Encoders.tuple(Encoders.DATE, Encoders.scalaLong, Encoders.scalaLong,
-        Encoders.scalaLong, Encoders.scalaLong))
+    SeriesFold.series(series, dayCol, valCol) { rows =>
+      SeriesFold.scan(Start, rows.iterator) { case (st, (day, xq)) =>
+        val s = step(alphaDen, betaDen)(st, xq)
+        (s, (day, xq, s.l, s.b, s.l + s.b))
+      }
+    }(Encoders.tuple(Encoders.DATE, Encoders.scalaLong, Encoders.scalaLong,
+      Encoders.scalaLong, Encoders.scalaLong))
       .toDF(dayCol, valCol, "level", "trend", "forecast")
       .orderBy(col(dayCol))
   }
@@ -104,32 +100,22 @@ object Holt {
       gammaDen: Long,
       period: Int = 7): DataFrame = {
     require(alphaDen >= 1L && betaDen >= 1L && gammaDen >= 1L && period >= 2)
-    val spark = series.sparkSession
-    import spark.implicits._
-    series.select(col(dayCol).cast("date"), col(valCol).cast("long"))
-      .as[(Date, Long)]
-      .groupByKey(_ => true)
-      .flatMapGroups { (_, it) =>
-        val rows = it.toArray.sortBy(_._1.getTime)
-        if (rows.length <= period) Iterator.empty
-        else {
-          val warm = rows.take(period).map(_._2)
-          var l = LogReg.fdiv(warm.sum, period.toLong)
-          var b = 0L
-          val sq = scala.collection.mutable.Queue(warm.map(_ - l): _*)
-          rows.iterator.drop(period).map { case (day, xq) =>
+    SeriesFold.series(series, dayCol, valCol) { rows =>
+      if (rows.length <= period) Iterator.empty
+      else {
+        val warm = rows.take(period).map(_._2)
+        val l0 = LogReg.fdiv(warm.sum, period.toLong)
+        val sq = scala.collection.mutable.Queue.from(warm.map(_ - l0))
+        // level + trend is the Holt step on the deseasonalized value
+        SeriesFold.scan(HState(l0, 0L, seen = true), rows.iterator.drop(period)) {
+          case (st, (day, xq)) =>
             val s0 = sq.dequeue()
-            val fitted = l + b + s0
-            val d = LogReg.fdiv(xq - l - b - s0, alphaDen)
-            val lNew = l + b + d
-            b = b + LogReg.fdiv(d, betaDen)
-            val sNew = s0 + LogReg.fdiv(xq - lNew - s0, gammaDen)
-            l = lNew
-            sq.enqueue(sNew)
-            HwRow(day, xq, l, b, s0, fitted)
-          }
+            val s = step(alphaDen, betaDen)(st, xq - s0)
+            sq.enqueue(s0 + LogReg.fdiv(xq - s.l - s0, gammaDen))
+            (s, HwRow(day, xq, s.l, s.b, s0, st.l + st.b + s0))
         }
-      }(Encoders.product[HwRow])
+      }
+    }(Encoders.product[HwRow])
       .toDF(dayCol, valCol, "level", "trend", "s_used", "fitted")
       .orderBy(col(dayCol))
   }

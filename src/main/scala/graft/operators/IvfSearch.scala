@@ -162,8 +162,7 @@ object IvfSearch {
   }
 
   /** The shared probe-filtered exact-rerank tail of [[search]] and
-    * [[searchQuant]] — one definition so the two probe strategies can
-    * never rank differently.
+    * [[searchQuant]]: [[VectorSearch.topK]] over the probed cells.
     */
   private def rerank(
       index: DataFrame,
@@ -172,14 +171,8 @@ object IvfSearch {
       query: Array[Float],
       k: Int,
       probes: Seq[Int]): DataFrame =
-    index
-      .filter(col("cell").isin(probes: _*))
-      .withColumn("sim",
-        graft.functions.GraftFunctions.cosine_sim(
-          col(vecCol), VectorSearch.vecLit(query.map(_.toDouble).toSeq)))
-      .orderBy(col("sim").desc, col(idCol))
-      .limit(k)
-      .select(col(idCol), col("sim"))
+    VectorSearch.topK(index.filter(col("cell").isin(probes: _*)), vecCol, idCol,
+      query.map(_.toDouble).toSeq, k).select(col(idCol), col("sim"))
 
   /** Scan the nProbe nearest cells, exact-cosine rerank, top-k. */
   def search(

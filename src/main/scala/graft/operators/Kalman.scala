@@ -24,9 +24,8 @@ import org.apache.spark.sql.functions._
   * value-for-value (the q181 CUSUM pattern). Initialization:
   * ℓ₁ = y₁, p₁ = P0, k₁ = 0 (no correction on the first day).
   *
-  * Scale shape: the input aggregation is distributed; the recurrence
-  * folds one day-count-bounded task (the [[Holt]] class — state is
-  * calendar-sized, never corpus-sized).
+  * Scale shape: the [[SeriesFold.series]] single-task gather of the
+  * day-count-bounded series; the recurrence is [[step]].
   *
   * Returns one row per day: (day, xq, level, resid, k_micro).
   */
@@ -39,32 +38,31 @@ object Kalman {
   final case class KalmanRow(
       day: Date, xq: Long, level: Long, resid: Long, k_micro: Long)
 
-  def localLevel(series: DataFrame, dayCol: String, valCol: String): DataFrame = {
-    val spark = series.sparkSession
-    import spark.implicits._
-    series.select(col(dayCol).cast("date"), col(valCol).cast("long"))
-      .as[(Date, Long)]
-      .groupByKey(_ => true)
-      .flatMapGroups { (_, it) =>
-        val rows = it.toArray.sortBy(_._1.getTime)
-        var l = 0L
-        var p = P0
-        var first = true
-        rows.iterator.map { case (day, y) =>
-          if (first) {
-            first = false; l = y
-            KalmanRow(day, y, l, 0L, 0L)
-          } else {
-            // predict: p grows by Q, then correct with gain k
-            val pPred = p + Q
-            val k = (2L * pPred * 1000000L + (pPred + R)) / (2L * (pPred + R))
-            l = l + math.floor((k * (y - l)).toDouble / 1000000.0 + 0.5).toLong
-            p = (2L * (1000000L - k) * pPred + 1000000L) / (2L * 1000000L)
-            KalmanRow(day, y, l, y - l, k)
-          }
-        }
-      }(Encoders.product[KalmanRow])
+  /** (level, variance, any-observation-seen). */
+  final case class KState(l: Long, p: Long, seen: Boolean)
+
+  val Start = KState(0L, P0, seen = false)
+
+  /** One predict + correct step; returns the gain k_micro (0 on the
+    * first observation, which seeds the level). */
+  def step(st: KState, y: Long): (KState, Long) =
+    if (!st.seen) (KState(y, P0, seen = true), 0L)
+    else {
+      // predict: p grows by Q, then correct with gain k
+      val pPred = st.p + Q
+      val k = (2L * pPred * 1000000L + (pPred + R)) / (2L * (pPred + R))
+      val l = st.l + math.floor((k * (y - st.l)).toDouble / 1000000.0 + 0.5).toLong
+      val p = (2L * (1000000L - k) * pPred + 1000000L) / (2L * 1000000L)
+      (KState(l, p, seen = true), k)
+    }
+
+  def localLevel(series: DataFrame, dayCol: String, valCol: String): DataFrame =
+    SeriesFold.series(series, dayCol, valCol) { rows =>
+      SeriesFold.scan(Start, rows.iterator) { case (st, (day, y)) =>
+        val (s, k) = step(st, y)
+        (s, KalmanRow(day, y, s.l, y - s.l, k))
+      }
+    }(Encoders.product[KalmanRow])
       .toDF(dayCol, valCol, "level", "resid", "k_micro")
       .orderBy(col(dayCol))
-  }
 }

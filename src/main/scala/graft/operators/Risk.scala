@@ -23,10 +23,8 @@ import org.apache.spark.sql.functions._
   * real division appears (ES mean, DW ratio) it is ONE fixed IEEE
   * double chain, micro-snapped (the q170 discipline).
   *
-  * Scale shape: the input aggregation (one row per day) is fully
-  * distributed; the folds below run over the DAY-COUNT-bounded
-  * series — a frame that grows with the calendar, not the corpus —
-  * inside one executor task (the [[Holt]] bounded-frame class).
+  * Scale shape: every operator below folds the [[SeriesFold]]
+  * single-task gather of the day-count-bounded series.
   */
 object Risk {
 
@@ -48,30 +46,31 @@ object Risk {
       n: Long, k: Long, both_low: Long, both_high: Long,
       lambda_low_milli: Option[Long], lambda_high_milli: Option[Long])
 
+  /** (sequence ordinal, cumulative sum, running peak). */
+  final case class DdState(rn: Long, cum: Long, peak: Long)
+
+  val DdStart = DdState(0L, 0L, Long.MinValue)
+
+  /** One drawdown step: extend the cumulative sum and its peak. */
+  def drawdownStep(st: DdState, xq: Long): DdState = {
+    val cum = st.cum + xq
+    DdState(st.rn + 1L, cum, math.max(st.peak, cum))
+  }
+
   /** Drawdown trajectory of the cumulative series: one row per day,
     * (day, xq, cum, peak, dd) with cum = running sum of xq, peak =
     * running max of cum, dd = peak − cum ≥ 0. All exact BIGINT.
     */
-  def drawdown(series: DataFrame, dayCol: String, valCol: String): DataFrame = {
-    val spark = series.sparkSession
-    import spark.implicits._
-    series.select(col(dayCol).cast("date"), col(valCol).cast("long"))
-      .as[(Date, Long)]
-      .groupByKey(_ => true)
-      .flatMapGroups { (_, it) =>
-        val rows = it.toArray.sortBy(_._1.getTime)
-        var cum = 0L
-        var peak = Long.MinValue
-        rows.iterator.map { case (day, xq) =>
-          cum += xq
-          if (cum > peak) peak = cum
-          (day, xq, cum, peak, peak - cum)
-        }
-      }(Encoders.tuple(Encoders.DATE, Encoders.scalaLong, Encoders.scalaLong,
-        Encoders.scalaLong, Encoders.scalaLong))
+  def drawdown(series: DataFrame, dayCol: String, valCol: String): DataFrame =
+    SeriesFold.series(series, dayCol, valCol) { rows =>
+      SeriesFold.scan(DdStart, rows.iterator) { case (st, (day, xq)) =>
+        val s = drawdownStep(st, xq)
+        (s, (day, xq, s.cum, s.peak, s.peak - s.cum))
+      }
+    }(Encoders.tuple(Encoders.DATE, Encoders.scalaLong, Encoders.scalaLong,
+      Encoders.scalaLong, Encoders.scalaLong))
       .toDF(dayCol, valCol, "cum", "peak", "dd")
       .orderBy(col(dayCol))
-  }
 
   /** Historical value-at-risk and expected shortfall of the
     * day-over-day changes of the series: one row
@@ -89,44 +88,38 @@ object Risk {
     *    never move a boundary delta across it.
     */
   def varEs(series: DataFrame, dayCol: String, valCol: String,
-      p: Double): DataFrame = {
-    val spark = series.sparkSession
-    import spark.implicits._
-    series.select(col(dayCol).cast("date"), col(valCol).cast("long"))
-      .as[(Date, Long)]
-      .groupByKey(_ => true)
-      .mapGroups { (_, it) =>
-        val ys = it.toArray.sortBy(_._1.getTime).map(_._2)
-        val deltas =
-          ys.sliding(2).filter(_.length == 2).map(a => a(1) - a(0))
-            .toArray.sorted
-        val m = deltas.length
-        if (m == 0) {
-          // degenerate frame (< 2 days): no deltas — NULL-propagate
-          // like coxBinary rather than index deltas(-1)
-          VarEsRow(ys.length.toLong, None, None, 0L)
-        } else {
-          val pos = p * (m - 1)
-          val lo = math.floor(pos).toInt
-          val frac = pos - lo
-          val varRaw =
-            if (lo + 1 < m)
-              deltas(lo) + frac * (deltas(lo + 1) - deltas(lo)).toDouble
-            else deltas(lo).toDouble
-          var tailSum = 0L
-          var tailN = 0L
-          deltas.takeWhile(_.toDouble <= varRaw).foreach { d =>
-            tailSum += d; tailN += 1
-          }
-          // tailN >= 1 always: deltas(0) <= varRaw by construction
-          val esMicro =
-            math.floor(tailSum.toDouble / tailN * 1000000L + 0.5).toLong
-          val varR4 = math.floor(varRaw * 10000 + 0.5) / 10000
-          VarEsRow(ys.length.toLong, Some(varR4), Some(esMicro), tailN)
+      p: Double): DataFrame =
+    SeriesFold.series(series, dayCol, valCol) { rows =>
+      val ys = rows.map(_._2)
+      val deltas =
+        ys.sliding(2).filter(_.length == 2).map(a => a(1) - a(0))
+          .toArray.sorted
+      val m = deltas.length
+      Iterator.single(if (m == 0) {
+        // degenerate frame (< 2 days): no deltas — NULL-propagate
+        // like coxBinary rather than index deltas(-1)
+        VarEsRow(ys.length.toLong, None, None, 0L)
+      } else {
+        val pos = p * (m - 1)
+        val lo = math.floor(pos).toInt
+        val frac = pos - lo
+        val varRaw =
+          if (lo + 1 < m)
+            deltas(lo) + frac * (deltas(lo + 1) - deltas(lo)).toDouble
+          else deltas(lo).toDouble
+        var tailSum = 0L
+        var tailN = 0L
+        deltas.takeWhile(_.toDouble <= varRaw).foreach { d =>
+          tailSum += d; tailN += 1
         }
-      }(Encoders.product[VarEsRow])
+        // tailN >= 1 always: deltas(0) <= varRaw by construction
+        val esMicro =
+          math.floor(tailSum.toDouble / tailN * 1000000L + 0.5).toLong
+        val varR4 = math.floor(varRaw * 10000 + 0.5) / 10000
+        VarEsRow(ys.length.toLong, Some(varR4), Some(esMicro), tailN)
+      })
+    }(Encoders.product[VarEsRow])
       .toDF("n_days", "var_p", "es_micro", "n_tail")
-  }
 
   /** XmR (individuals + moving-range) Shewhart control chart over
     * the day-ordered series — the SPC member next to [[Cusum]] (that
@@ -139,31 +132,43 @@ object Risk {
     * with zero tolerance. One row per day:
     * (day, xq, mr, flag_x, flag_mr), mr NULL on the first day.
     */
-  def xmrChart(series: DataFrame, dayCol: String, valCol: String): DataFrame = {
-    val spark = series.sparkSession
-    import spark.implicits._
-    series.select(col(dayCol).cast("date"), col(valCol).cast("long"))
-      .as[(Date, Long)]
-      .groupByKey(_ => true)
-      .flatMapGroups { (_, it) =>
-        val rows = it.toArray.sortBy(_._1.getTime)
-        val n = rows.length.toLong
-        val xbar = LogReg.fdiv(rows.map(_._2).sum, n)
-        val mrs = rows.map(_._2).sliding(2).filter(_.length == 2)
-          .map(a => math.abs(a(1) - a(0))).toArray
-        val mrbar =
-          if (n > 1) LogReg.fdiv(mrs.sum, n - 1) else 0L
-        var prev = Option.empty[Long]
-        rows.iterator.map { case (day, xq) =>
-          val mr = prev.map(p => math.abs(xq - p))
-          prev = Some(xq)
-          XmrRow(day, xq, mr,
-            math.abs(1000L * (xq - xbar)) > 2660L * mrbar,
-            mr.exists(m => 1000L * m > 3267L * mrbar))
-        }
-      }(Encoders.product[XmrRow])
+  def xmrChart(series: DataFrame, dayCol: String, valCol: String): DataFrame =
+    SeriesFold.series(series, dayCol, valCol) { rows =>
+      val n = rows.length.toLong
+      val xbar = LogReg.fdiv(rows.map(_._2).sum, n)
+      val mrs = rows.map(_._2).sliding(2).filter(_.length == 2)
+        .map(a => math.abs(a(1) - a(0))).toArray
+      val mrbar =
+        if (n > 1) LogReg.fdiv(mrs.sum, n - 1) else 0L
+      var prev = Option.empty[Long]
+      rows.iterator.map { case (day, xq) =>
+        val mr = prev.map(p => math.abs(xq - p))
+        prev = Some(xq)
+        XmrRow(day, xq, mr,
+          math.abs(1000L * (xq - xbar)) > 2660L * mrbar,
+          mr.exists(m => 1000L * m > 3267L * mrbar))
+      }
+    }(Encoders.product[XmrRow])
       .toDF(dayCol, valCol, "mr", "flag_x", "flag_mr")
       .orderBy(col(dayCol))
+
+  /** The [[durbinWatson]] OLS line of `ys` against its 1-based day
+    * rank t: (St, Stt, slope_milli, intercept_milli), the moments
+    * exact and the slope ONE double division of exact BigInts. */
+  private def olsMilli(ys: Array[Long]): (Long, Long, Long, Long) = {
+    val n = ys.length.toLong
+    var st, sy, stt = 0L
+    var sty = BigInt(0)
+    var t = 0L
+    ys.foreach { y =>
+      t += 1; st += t; sy += y; stt += t * t; sty += BigInt(t) * y
+    }
+    val num = BigInt(n) * sty - BigInt(st) * sy
+    val den = BigInt(n) * stt - BigInt(st) * st
+    // one double division (operands < 2^63 at oracle scales →
+    // engine-identical double images), THEN the 1e3 scale + floor
+    val slope = math.floor(num.toDouble / den.toDouble * 1000L).toLong
+    (st, stt, slope, LogReg.fdiv(1000L * sy - slope * st, n))
   }
 
   /** Huber-weighted IRLS trend of the day-ordered series — the
@@ -190,67 +195,53 @@ object Risk {
     * sum_w_milli). Day-count-bounded single-task fold (the
     * [[durbinWatson]] class).
     */
-  def huberTrend(series: DataFrame, dayCol: String, valCol: String): DataFrame = {
-    val spark = series.sparkSession
-    import spark.implicits._
-    series.select(col(dayCol).cast("date"), col(valCol).cast("long"))
-      .as[(Date, Long)]
-      .groupByKey(_ => true)
-      .mapGroups { (_, it) =>
-        val ys = it.toArray.sortBy(_._1.getTime).map(_._2)
-        val n = ys.length.toLong
-        var st, sy, stt = 0L
-        var sty = BigInt(0)
-        var t = 0L
-        ys.foreach { y =>
-          t += 1; st += t; sy += y; stt += t * t; sty += BigInt(t) * y
+  def huberTrend(series: DataFrame, dayCol: String, valCol: String): DataFrame =
+    SeriesFold.series(series, dayCol, valCol) { rows =>
+      val ys = rows.map(_._2)
+      val n = ys.length.toLong
+      val (_, _, slope0, inter0) = olsMilli(ys)
+      var slope = slope0
+      var inter = inter0
+      var sumW = 0L
+      for (_ <- 1 to 2) {
+        val es = Array.tabulate(ys.length) { i =>
+          1000L * ys(i) - inter - slope * (i + 1L)
         }
-        val num0 = BigInt(n) * sty - BigInt(st) * sy
-        val den0 = BigInt(n) * stt - BigInt(st) * st
-        var slope = math.floor(num0.toDouble / den0.toDouble * 1000L).toLong
-        var inter = LogReg.fdiv(1000L * sy - slope * st, n)
-        val slope0 = slope
-        var sumW = 0L
-        for (_ <- 1 to 2) {
-          val es = Array.tabulate(ys.length) { i =>
-            1000L * ys(i) - inter - slope * (i + 1L)
-          }
-          val abs = es.map(math.abs).sorted
-          val m = abs.length
-          val pos = 0.5 * (m - 1)
-          val lo = math.floor(pos).toInt
-          val med =
-            if (lo + 1 < m) abs(lo) + (pos - lo) * (abs(lo + 1) - abs(lo)).toDouble
-            else abs(lo).toDouble
-          val th = math.floor(2.0 * med + 0.5).toLong
-          var sw, swt, swy = BigInt(0)
-          var swtt, swty = BigInt(0)
-          var i = 0
-          sumW = 0L
-          while (i < ys.length) {
-            val ae = math.abs(es(i))
-            val w = if (ae <= th) 1000L else LogReg.fdiv(1000L * th, ae)
-            sumW += w
-            val ti = i + 1L
-            sw += w; swt += BigInt(w) * ti; swy += BigInt(w) * ys(i)
-            swtt += BigInt(w) * ti * ti; swty += BigInt(w) * ti * ys(i)
-            i += 1
-          }
-          val num = sw * swty - swt * swy
-          val den = sw * swtt - swt * swt
-          val sign = if ((num < 0) != (den < 0)) -1L else 1L
-          slope = sign *
-            ((num.abs * 2000 + den.abs) / (den.abs * 2)).toLong
-          inter = math.floor(
-            (BigInt(1000L) * swy - BigInt(slope) * swt).toDouble
-              / sw.toDouble).toLong
+        val abs = es.map(math.abs).sorted
+        val m = abs.length
+        val pos = 0.5 * (m - 1)
+        val lo = math.floor(pos).toInt
+        val med =
+          if (lo + 1 < m) abs(lo) + (pos - lo) * (abs(lo + 1) - abs(lo)).toDouble
+          else abs(lo).toDouble
+        val th = math.floor(2.0 * med + 0.5).toLong
+        var sw, swt, swy = BigInt(0)
+        var swtt, swty = BigInt(0)
+        var i = 0
+        sumW = 0L
+        while (i < ys.length) {
+          val ae = math.abs(es(i))
+          val w = if (ae <= th) 1000L else LogReg.fdiv(1000L * th, ae)
+          sumW += w
+          val ti = i + 1L
+          sw += w; swt += BigInt(w) * ti; swy += BigInt(w) * ys(i)
+          swtt += BigInt(w) * ti * ti; swty += BigInt(w) * ti * ys(i)
+          i += 1
         }
-        (n, slope0, slope, inter, sumW)
-      }(Encoders.tuple(Encoders.scalaLong, Encoders.scalaLong,
-        Encoders.scalaLong, Encoders.scalaLong, Encoders.scalaLong))
+        val num = sw * swty - swt * swy
+        val den = sw * swtt - swt * swt
+        val sign = if ((num < 0) != (den < 0)) -1L else 1L
+        slope = sign *
+          ((num.abs * 2000 + den.abs) / (den.abs * 2)).toLong
+        inter = math.floor(
+          (BigInt(1000L) * swy - BigInt(slope) * swt).toDouble
+            / sw.toDouble).toLong
+      }
+      Iterator.single((n, slope0, slope, inter, sumW))
+    }(Encoders.tuple(Encoders.scalaLong, Encoders.scalaLong,
+      Encoders.scalaLong, Encoders.scalaLong, Encoders.scalaLong))
       .toDF("n", "slope0_milli", "slope_milli", "intercept_milli",
         "sum_w_milli")
-  }
 
   /** Durbin–Watson statistic of the residuals from the OLS line of
     * the day-ordered series against its 1-based day rank: one row
@@ -276,50 +267,30 @@ object Risk {
     *    floor(1e6·Σd²/Σe² + 0.5) — so no >2^63 value is ever cast to
     *    double on either engine (HUGEINT `//` on positives is floor).
     */
-  def durbinWatson(series: DataFrame, dayCol: String, valCol: String): DataFrame = {
-    val spark = series.sparkSession
-    import spark.implicits._
-    series.select(col(dayCol).cast("date"), col(valCol).cast("long"))
-      .as[(Date, Long)]
-      .groupByKey(_ => true)
-      .mapGroups { (_, it) =>
-        val ys = it.toArray.sortBy(_._1.getTime).map(_._2)
-        val n = ys.length.toLong
-        var st, sy, stt = 0L
-        var sty = BigInt(0)
-        var t = 0L
-        ys.foreach { y =>
-          t += 1
-          st += t; sy += y; stt += t * t
-          sty += BigInt(t) * y
-        }
-        val num = BigInt(n) * sty - BigInt(st) * sy
-        val den = BigInt(n) * stt - BigInt(st) * st
-        // one double division (operands < 2^63 at oracle scales →
-        // engine-identical double images), THEN the 1e6 scale + floor
-        val slopeMilli =
-          math.floor(num.toDouble / den.toDouble * 1000L).toLong
-        val interMilli = LogReg.fdiv(1000L * sy - slopeMilli * st, n)
-        var prevE = 0L
-        var first = true
-        var sumDiff2, sumE2 = BigInt(0)
-        t = 0L
-        ys.foreach { y =>
-          t += 1
-          val e = 1000L * y - interMilli - slopeMilli * t
-          if (!first) sumDiff2 += BigInt(e - prevE) * (e - prevE)
-          sumE2 += BigInt(e) * e
-          prevE = e; first = false
-        }
-        // floor(1e6·Σd²/Σe² + 0.5) as exact integer floor division —
-        // both operands positive, so BigInt `/` (truncation) is floor
-        val dwMicro =
-          ((sumDiff2 * 2000000L + sumE2) / (sumE2 * 2)).toLong
-        (n, slopeMilli, interMilli, dwMicro)
-      }(Encoders.tuple(Encoders.scalaLong, Encoders.scalaLong,
-        Encoders.scalaLong, Encoders.scalaLong))
+  def durbinWatson(series: DataFrame, dayCol: String, valCol: String): DataFrame =
+    SeriesFold.series(series, dayCol, valCol) { rows =>
+      val ys = rows.map(_._2)
+      val n = ys.length.toLong
+      val (_, _, slopeMilli, interMilli) = olsMilli(ys)
+      var prevE = 0L
+      var first = true
+      var sumDiff2, sumE2 = BigInt(0)
+      var t = 0L
+      ys.foreach { y =>
+        t += 1
+        val e = 1000L * y - interMilli - slopeMilli * t
+        if (!first) sumDiff2 += BigInt(e - prevE) * (e - prevE)
+        sumE2 += BigInt(e) * e
+        prevE = e; first = false
+      }
+      // floor(1e6·Σd²/Σe² + 0.5) as exact integer floor division —
+      // both operands positive, so BigInt `/` (truncation) is floor
+      val dwMicro =
+        ((sumDiff2 * 2000000L + sumE2) / (sumE2 * 2)).toLong
+      Iterator.single((n, slopeMilli, interMilli, dwMicro))
+    }(Encoders.tuple(Encoders.scalaLong, Encoders.scalaLong,
+      Encoders.scalaLong, Encoders.scalaLong))
       .toDF("n", "slope_milli", "intercept_milli", "dw_micro")
-  }
 
   /** Per-day regression influence diagnostics for the [[durbinWatson]]
     * OLS trend fit: leverage h_t = 1/n + (t−t̄)²/Sxx and Cook's
@@ -337,60 +308,41 @@ object Risk {
       day: Date, xq: Long, e_milli: Long, h_micro: Long,
       cook_micro: Long, influential: Boolean)
 
-  def cooksDistance(series: DataFrame, dayCol: String, valCol: String): DataFrame = {
-    val spark = series.sparkSession
-    import spark.implicits._
-    series.select(col(dayCol).cast("date"), col(valCol).cast("long"))
-      .as[(Date, Long)]
-      .groupByKey(_ => true)
-      .flatMapGroups { (_, it) =>
-        val rows = it.toArray.sortBy(_._1.getTime)
-        val ys = rows.map(_._2)
-        val n = ys.length.toLong
-        var st, sy, stt = 0L
-        var sty = BigInt(0)
-        var t = 0L
-        ys.foreach { y =>
-          t += 1
-          st += t; sy += y; stt += t * t
-          sty += BigInt(t) * y
-        }
-        val num = BigInt(n) * sty - BigInt(st) * sy
-        val den = BigInt(n) * stt - BigInt(st) * st
-        val slopeMilli =
-          math.floor(num.toDouble / den.toDouble * 1000L).toLong
-        val interMilli = LogReg.fdiv(1000L * sy - slopeMilli * st, n)
-        var sumE2 = BigInt(0)
-        t = 0L
-        val es = ys.map { y =>
-          t += 1
-          val e = 1000L * y - interMilli - slopeMilli * t
-          sumE2 += BigInt(e) * e
-          e
-        }
-        val s2q = if (n > 2) sumE2 / BigInt(n - 2) else BigInt(0)
-        val nd = n.toDouble
-        val tbar = st.toDouble / nd
-        val sxx = stt.toDouble - st.toDouble * st.toDouble / nd
-        t = 0L
-        rows.iterator.zip(es.iterator).map { case ((day, y), e) =>
-          t += 1
-          val h = 1.0 / nd + (t.toDouble - tbar) * (t.toDouble - tbar) / sxx
-          val hMicro = math.floor(h * 1000000.0 + 0.5).toLong
-          val cookMicro =
-            if (s2q == BigInt(0)) 0L
-            else {
-              val r2q = (BigInt(e) * e * 1000000L) / s2q
-              math.floor(r2q.toDouble / 1000000.0 * h
-                / (2.0 * (1.0 - h) * (1.0 - h)) * 1000000.0 + 0.5).toLong
-            }
-          CookRow(day, y, e, hMicro, cookMicro, cookMicro * n > 4000000L)
-        }
-      }(Encoders.product[CookRow])
+  def cooksDistance(series: DataFrame, dayCol: String, valCol: String): DataFrame =
+    SeriesFold.series(series, dayCol, valCol) { rows =>
+      val ys = rows.map(_._2)
+      val n = ys.length.toLong
+      val (st, stt, slopeMilli, interMilli) = olsMilli(ys)
+      var sumE2 = BigInt(0)
+      var t = 0L
+      val es = ys.map { y =>
+        t += 1
+        val e = 1000L * y - interMilli - slopeMilli * t
+        sumE2 += BigInt(e) * e
+        e
+      }
+      val s2q = if (n > 2) sumE2 / BigInt(n - 2) else BigInt(0)
+      val nd = n.toDouble
+      val tbar = st.toDouble / nd
+      val sxx = stt.toDouble - st.toDouble * st.toDouble / nd
+      t = 0L
+      rows.iterator.zip(es.iterator).map { case ((day, y), e) =>
+        t += 1
+        val h = 1.0 / nd + (t.toDouble - tbar) * (t.toDouble - tbar) / sxx
+        val hMicro = math.floor(h * 1000000.0 + 0.5).toLong
+        val cookMicro =
+          if (s2q == BigInt(0)) 0L
+          else {
+            val r2q = (BigInt(e) * e * 1000000L) / s2q
+            math.floor(r2q.toDouble / 1000000.0 * h
+              / (2.0 * (1.0 - h) * (1.0 - h)) * 1000000.0 + 0.5).toLong
+          }
+        CookRow(day, y, e, hMicro, cookMicro, cookMicro * n > 4000000L)
+      }
+    }(Encoders.product[CookRow])
       .toDF(dayCol, valCol, "e_milli", "h_micro", "cook_micro",
         "influential")
       .orderBy(col(dayCol))
-  }
 
   /** Lower/upper TAIL-DEPENDENCE estimate between two day-keyed
     * series — the co-crash diagnostic a correlation can't give
@@ -418,32 +370,29 @@ object Risk {
         col(valCol).cast("long").as("xv"))
       .join(y.select(col(dayCol).cast("date").as("day"),
         col(valCol).cast("long").as("yv")), "day")
-    joined.as[(Date, Long, Long)]
-      .groupByKey(_ => true)
-      .mapGroups { (_, it) =>
-        val rows = it.toArray
-        val n = rows.length.toLong
-        val k = n / 5
-        // rank r ≤ k ⇔ membership in the k smallest under (value, day)
-        def lowSet(sel: ((Date, Long, Long)) => Long): Set[Date] =
-          rows.sortBy(r => (sel(r), r._1.getTime)).take(k.toInt)
-            .map(_._1).toSet
-        def highSet(sel: ((Date, Long, Long)) => Long): Set[Date] =
-          rows.sortBy(r => (sel(r), r._1.getTime)).takeRight(k.toInt)
-            .map(_._1).toSet
-        val xl = lowSet(_._2); val yl = lowSet(_._3)
-        val xh = highSet(_._2); val yh = highSet(_._3)
-        val bothLow = (xl intersect yl).size.toLong
-        val bothHigh = (xh intersect yh).size.toLong
-        // k == 0 (n < 5): the estimator is UNDEFINED — None, not 0,
-        // which would read as "no tail dependence" (the VarEsRow
-        // degenerate-frame convention)
-        val lamL = if (k > 0) Some(LogReg.fdiv(bothLow * 2000 + k, 2 * k))
-          else None
-        val lamU = if (k > 0) Some(LogReg.fdiv(bothHigh * 2000 + k, 2 * k))
-          else None
-        TailDepRow(n, k, bothLow, bothHigh, lamL, lamU)
-      }(Encoders.product[TailDepRow])
+    SeriesFold.gather(joined.as[(Date, Long, Long)])(_._1) { rows =>
+      val n = rows.length.toLong
+      val k = n / 5
+      // rank r ≤ k ⇔ membership in the k smallest under (value, day)
+      def lowSet(sel: ((Date, Long, Long)) => Long): Set[Date] =
+        rows.sortBy(r => (sel(r), r._1.getTime)).take(k.toInt)
+          .map(_._1).toSet
+      def highSet(sel: ((Date, Long, Long)) => Long): Set[Date] =
+        rows.sortBy(r => (sel(r), r._1.getTime)).takeRight(k.toInt)
+          .map(_._1).toSet
+      val xl = lowSet(_._2); val yl = lowSet(_._3)
+      val xh = highSet(_._2); val yh = highSet(_._3)
+      val bothLow = (xl intersect yl).size.toLong
+      val bothHigh = (xh intersect yh).size.toLong
+      // k == 0 (n < 5): the estimator is UNDEFINED — None, not 0,
+      // which would read as "no tail dependence" (the VarEsRow
+      // degenerate-frame convention)
+      val lamL = if (k > 0) Some(LogReg.fdiv(bothLow * 2000 + k, 2 * k))
+        else None
+      val lamU = if (k > 0) Some(LogReg.fdiv(bothHigh * 2000 + k, 2 * k))
+        else None
+      Iterator.single(TailDepRow(n, k, bothLow, bothHigh, lamL, lamU))
+    }(Encoders.product[TailDepRow])
       .toDF("n", "k", "both_low", "both_high",
         "lambda_low_milli", "lambda_high_milli")
   }
@@ -479,51 +428,48 @@ object Risk {
         expr(s"CAST($valCol AS BIGINT) DIV 100").as("xv"))
       .join(y.select(col(dayCol).cast("date").as("day"),
         expr(s"CAST($valCol AS BIGINT) DIV 100").as("yv")), "day")
-    joined.as[(Date, Long, Long)]
-      .groupByKey(_ => true)
-      .flatMapGroups { (_, it) =>
-        val rows = it.toArray.sortBy(_._1.getTime)
-        val n = rows.length - 1      // lagged pairs
-        var sa, sb, sc, sd = 0L
-        var saa, sbb, scc, sdd, sac, sad, sbc, sbd, scd = 0L
-        var t = 1
-        while (t < rows.length) {
-          val a = rows(t)._3; val b = rows(t)._2        // y_t, x_t
-          val c = rows(t - 1)._3; val d = rows(t - 1)._2 // y_{t-1}, x_{t-1}
-          sa += a; sb += b; sc += c; sd += d
-          saa += a * a; sbb += b * b; scc += c * c; sdd += d * d
-          sac += a * c; sad += a * d; sbc += b * c; sbd += b * d
-          scd += c * d
-          t += 1
-        }
-        def f(cyy: Double, cy1y: Double, cx1y: Double,
-            cy1y1: Double, cy1x1: Double, cx1x1: Double): Option[Long] = {
-          val sser = cyy - cy1y * cy1y / cy1y1
-          val det = cy1y1 * cx1x1 - cy1x1 * cy1x1
-          if (det == 0.0) None
-          else {
-            val b1 = (cy1y * cx1x1 - cx1y * cy1x1) / det
-            val b2 = (cx1y * cy1y1 - cy1y * cy1x1) / det
-            val sseu = cyy - b1 * cy1y - b2 * cx1y
-            if (sseu <= 0.0) None
-            else Some(math.floor(
-              (sser - sseu) * (n - 3) / sseu * 1000000.0 + 0.5).toLong)
-          }
-        }
-        if (n < 4) Iterator(GrangerRow("x_to_y", n.toLong, None),
-          GrangerRow("y_to_x", n.toLong, None))
+    SeriesFold.gather(joined.as[(Date, Long, Long)])(_._1) { rows =>
+      val n = rows.length - 1      // lagged pairs
+      var sa, sb, sc, sd = 0L
+      var saa, sbb, scc, sdd, sac, sad, sbc, sbd, scd = 0L
+      var t = 1
+      while (t < rows.length) {
+        val a = rows(t)._3; val b = rows(t)._2        // y_t, x_t
+        val c = rows(t - 1)._3; val d = rows(t - 1)._2 // y_{t-1}, x_{t-1}
+        sa += a; sb += b; sc += c; sd += d
+        saa += a * a; sbb += b * b; scc += c * c; sdd += d * d
+        sac += a * c; sad += a * d; sbc += b * c; sbd += b * d
+        scd += c * d
+        t += 1
+      }
+      def f(cyy: Double, cy1y: Double, cx1y: Double,
+          cy1y1: Double, cy1x1: Double, cx1x1: Double): Option[Long] = {
+        val sser = cyy - cy1y * cy1y / cy1y1
+        val det = cy1y1 * cx1x1 - cy1x1 * cy1x1
+        if (det == 0.0) None
         else {
-          val nd = n.toDouble
-          def cen(sab: Long, s1: Long, s2: Long): Double =
-            nd * sab.toDouble - s1.toDouble * s2.toDouble
-          val xy = f(cen(saa, sa, sa), cen(sac, sa, sc), cen(sad, sa, sd),
-            cen(scc, sc, sc), cen(scd, sc, sd), cen(sdd, sd, sd))
-          val yx = f(cen(sbb, sb, sb), cen(sbd, sb, sd), cen(sbc, sb, sc),
-            cen(sdd, sd, sd), cen(scd, sc, sd), cen(scc, sc, sc))
-          Iterator(GrangerRow("x_to_y", n.toLong, xy),
-            GrangerRow("y_to_x", n.toLong, yx))
+          val b1 = (cy1y * cx1x1 - cx1y * cy1x1) / det
+          val b2 = (cx1y * cy1y1 - cy1y * cy1x1) / det
+          val sseu = cyy - b1 * cy1y - b2 * cx1y
+          if (sseu <= 0.0) None
+          else Some(math.floor(
+            (sser - sseu) * (n - 3) / sseu * 1000000.0 + 0.5).toLong)
         }
-      }(Encoders.product[GrangerRow])
+      }
+      if (n < 4) Iterator(GrangerRow("x_to_y", n.toLong, None),
+        GrangerRow("y_to_x", n.toLong, None))
+      else {
+        val nd = n.toDouble
+        def cen(sab: Long, s1: Long, s2: Long): Double =
+          nd * sab.toDouble - s1.toDouble * s2.toDouble
+        val xy = f(cen(saa, sa, sa), cen(sac, sa, sc), cen(sad, sa, sd),
+          cen(scc, sc, sc), cen(scd, sc, sd), cen(sdd, sd, sd))
+        val yx = f(cen(sbb, sb, sb), cen(sbd, sb, sd), cen(sbc, sb, sc),
+          cen(sdd, sd, sd), cen(scd, sc, sd), cen(scc, sc, sc))
+        Iterator(GrangerRow("x_to_y", n.toLong, xy),
+          GrangerRow("y_to_x", n.toLong, yx))
+      }
+    }(Encoders.product[GrangerRow])
       .toDF("direction", "n", "f_micro")
       .orderBy(col("direction"))
   }
@@ -550,50 +496,45 @@ object Risk {
       series: DataFrame, dayCol: String, valCol: String,
       sizes: Seq[Int] = Seq(8, 16, 32, 64)): DataFrame = {
     require(sizes.nonEmpty && sizes.forall(_ >= 2), "window sizes >= 2")
-    val spark = series.sparkSession
-    import spark.implicits._
-    series.select(col(dayCol).cast("date"), col(valCol).cast("long"))
-      .as[(Date, Long)]
-      .groupByKey(_ => true)
-      .flatMapGroups { (_, it) =>
-        val ys = it.toArray.sortBy(_._1.getTime).map(_._2)
-        val perM = sizes.flatMap { m =>
-          val nb = ys.length / m
-          val rss = (0 until nb).flatMap { b =>
-            val blk = ys.slice(b * m, (b + 1) * m)
-            val mean = LogReg.fdiv(blk.sum, m)
-            val e = blk.map(_ - mean)
-            var cum = 0L; var mx = Long.MinValue; var mn = Long.MaxValue
-            e.foreach { d => cum += d; if (cum > mx) mx = cum; if (cum < mn) mn = cum }
-            val r = math.max(mx, 0L) - math.min(mn, 0L)
-            val se2 = e.map(d => d * d).sum
-            if (se2 == 0L) None
-            else {
-              val s = math.sqrt(se2.toDouble / m)
-              Some(math.floor(r / s * 1000000.0 + 0.5).toLong)
-            }
-          }
-          if (rss.isEmpty) None
-          else Some((m.toLong, rss.length.toLong,
-            LogReg.fdiv(rss.sum, rss.length)))
-        }
-        // OLS slope of ln(meanRs/1e6) on ln(m) over the window sizes
-        val pts = perM.map { case (m, _, mu) =>
-          (math.log(m.toDouble), math.log(mu.toDouble / 1000000.0))
-        }
-        val np = pts.length
-        val hurstMilli =
-          if (np < 2) 0L
+    SeriesFold.series(series, dayCol, valCol) { rows =>
+      val ys = rows.map(_._2)
+      val perM = sizes.flatMap { m =>
+        val nb = ys.length / m
+        val rss = (0 until nb).flatMap { b =>
+          val blk = ys.slice(b * m, (b + 1) * m)
+          val mean = LogReg.fdiv(blk.sum, m)
+          val e = blk.map(_ - mean)
+          var cum = 0L; var mx = Long.MinValue; var mn = Long.MaxValue
+          e.foreach { d => cum += d; if (cum > mx) mx = cum; if (cum < mn) mn = cum }
+          val r = math.max(mx, 0L) - math.min(mn, 0L)
+          val se2 = e.map(d => d * d).sum
+          if (se2 == 0L) None
           else {
-            val sx = pts.map(_._1).sum; val sy = pts.map(_._2).sum
-            val sxx = pts.map(p => p._1 * p._1).sum
-            val sxy = pts.map(p => p._1 * p._2).sum
-            math.floor((np * sxy - sx * sy) / (np * sxx - sx * sx)
-              * 1000.0 + 0.5).toLong
+            val s = math.sqrt(se2.toDouble / m)
+            Some(math.floor(r / s * 1000000.0 + 0.5).toLong)
           }
-        perM.iterator.map { case (m, nb, mu) => (m, nb, mu, hurstMilli) }
-      }(Encoders.tuple(Encoders.scalaLong, Encoders.scalaLong,
-        Encoders.scalaLong, Encoders.scalaLong))
+        }
+        if (rss.isEmpty) None
+        else Some((m.toLong, rss.length.toLong,
+          LogReg.fdiv(rss.sum, rss.length)))
+      }
+      // OLS slope of ln(meanRs/1e6) on ln(m) over the window sizes
+      val pts = perM.map { case (m, _, mu) =>
+        (math.log(m.toDouble), math.log(mu.toDouble / 1000000.0))
+      }
+      val np = pts.length
+      val hurstMilli =
+        if (np < 2) 0L
+        else {
+          val sx = pts.map(_._1).sum; val sy = pts.map(_._2).sum
+          val sxx = pts.map(p => p._1 * p._1).sum
+          val sxy = pts.map(p => p._1 * p._2).sum
+          math.floor((np * sxy - sx * sy) / (np * sxx - sx * sx)
+            * 1000.0 + 0.5).toLong
+        }
+      perM.iterator.map { case (m, nb, mu) => (m, nb, mu, hurstMilli) }
+    }(Encoders.tuple(Encoders.scalaLong, Encoders.scalaLong,
+      Encoders.scalaLong, Encoders.scalaLong))
       .toDF("m", "n_blocks", "mean_rs_micro", "hurst_milli")
       .orderBy(col("m"))
   }

@@ -1,7 +1,5 @@
 package graft.operators
 
-import java.sql.Date
-
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
@@ -20,10 +18,8 @@ import org.apache.spark.sql.functions._
   * row replays in the oracle with no tolerance. Weekdays are ISO
   * (1 = Monday … 7 = Sunday: JVM `getDayOfWeek` ≡ DuckDB `isodow`).
   *
-  * Scale shape: the input aggregation (one row per day) is
-  * distributed; the decomposition folds the DAY-COUNT-bounded series
-  * in one executor task (the [[Holt]] bounded-frame class — it grows
-  * with the calendar, not the corpus).
+  * Scale shape: the [[SeriesFold.series]] single-task gather of the
+  * day-count-bounded series.
   */
 object Seasonal {
 
@@ -33,36 +29,32 @@ object Seasonal {
   def decompose(series: DataFrame, dayCol: String, valCol: String): DataFrame = {
     val spark = series.sparkSession
     import spark.implicits._
-    series.select(col(dayCol).cast("date"), col(valCol).cast("long"))
-      .as[(Date, Long)]
-      .groupByKey(_ => true)
-      .flatMapGroups { (_, it) =>
-        val rows = it.toArray.sortBy(_._1.getTime)
-        val n = rows.length
-        val x = rows.map(_._2)
-        val wd = rows.map(_._1.toLocalDate.getDayOfWeek.getValue.toLong)
-        val trend = Array.tabulate(n) { t =>
-          if (t >= 3 && t < n - 3) {
-            var s = 0L
-            var k = -3
-            while (k <= 3) { s += x(t + k); k += 1 }
-            Some(LogReg.fdiv(s, 7L))
-          } else None
-        }
-        val sumCnt = new scala.collection.mutable.HashMap[Long, (Long, Long)]()
-        trend.indices.foreach { t =>
-          trend(t).foreach { tr =>
-            val (s, c) = sumCnt.getOrElse(wd(t), (0L, 0L))
-            sumCnt(wd(t)) = (s + (x(t) - tr), c + 1L)
-          }
-        }
-        val seasonal = sumCnt.map { case (w, (s, c)) => w -> LogReg.fdiv(s, c) }
-        rows.indices.iterator.map { t =>
-          val sw = seasonal.get(wd(t))
-          (rows(t)._1, x(t), wd(t), trend(t),
-            sw, for { tr <- trend(t); s <- sw } yield x(t) - tr - s)
+    SeriesFold.series(series, dayCol, valCol) { rows =>
+      val n = rows.length
+      val x = rows.map(_._2)
+      val wd = rows.map(_._1.toLocalDate.getDayOfWeek.getValue.toLong)
+      val trend = Array.tabulate(n) { t =>
+        if (t >= 3 && t < n - 3) {
+          var s = 0L
+          var k = -3
+          while (k <= 3) { s += x(t + k); k += 1 }
+          Some(LogReg.fdiv(s, 7L))
+        } else None
+      }
+      val sumCnt = new scala.collection.mutable.HashMap[Long, (Long, Long)]()
+      trend.indices.foreach { t =>
+        trend(t).foreach { tr =>
+          val (s, c) = sumCnt.getOrElse(wd(t), (0L, 0L))
+          sumCnt(wd(t)) = (s + (x(t) - tr), c + 1L)
         }
       }
+      val seasonal = sumCnt.map { case (w, (s, c)) => w -> LogReg.fdiv(s, c) }
+      rows.indices.iterator.map { t =>
+        val sw = seasonal.get(wd(t))
+        (rows(t)._1, x(t), wd(t), trend(t),
+          sw, for { tr <- trend(t); s <- sw } yield x(t) - tr - s)
+      }
+    }
       .toDF(dayCol, valCol, "weekday", "trend_q", "seasonal_q", "resid_q")
       .orderBy(col(dayCol))
   }

@@ -1,7 +1,8 @@
 package graft.streaming
 
 import org.apache.spark.sql.Dataset
-import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
+
+import graft.operators.{Cusum, SeriesFold}
 
 /** Streaming shape of [[graft.operators.Cusum]]: the two-sided drift
   * alarm carried across micro-batches — the live "ingest volume
@@ -13,12 +14,11 @@ import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode
   * slack/threshold as PARAMETERS — the SPC convention: a control
   * chart monitors against a target fixed ahead of time (here,
   * typically last period's batch μ). With identical parameters the
-  * stream is row-for-row the batch recurrence (spec-pinned).
+  * step is [[Cusum.step]], so parity with the batch detector is the
+  * [[graft.operators.SeriesFold]] contract.
   *
   * State per series is (su, sl) — two longs, the [[EwmaStream]]
-  * minimal-carry class; rows apply in `rn` order within each batch,
-  * ordered arrival across batches is the usual partitioned-log
-  * contract.
+  * minimal-carry class; rows apply in `rn` order.
   */
 object CusumStream {
 
@@ -27,7 +27,8 @@ object CusumStream {
   final case class CusumOut(
       seriesId: Long, rn: Long, xq: Long, su: Long, sl: Long, alarm: Boolean)
 
-  final case class SideState(su: Long, sl: Long)
+  type SideState = Cusum.SideState
+  val SideState = Cusum.SideState
 
   def alarms(
       in: Dataset[CusumIn],
@@ -36,19 +37,9 @@ object CusumStream {
       thresh: Long): Dataset[CusumOut] = {
     val spark = in.sparkSession
     import spark.implicits._
-    in.groupByKey(_.seriesId)
-      .flatMapGroupsWithState[SideState, CusumOut](
-        OutputMode.Append(), GroupStateTimeout.NoTimeout()) {
-        (sid: Long, rows: Iterator[CusumIn], state: GroupState[SideState]) =>
-          var st = state.getOption.getOrElse(SideState(0L, 0L))
-          val out = rows.toSeq.sortBy(_.rn).map { r =>
-            val su = math.max(0L, st.su + r.xq - mu - slack)
-            val sl = math.max(0L, st.sl + mu - r.xq - slack)
-            st = SideState(su, sl)
-            CusumOut(sid, r.rn, r.xq, su, sl, su > thresh || sl > thresh)
-          }
-          state.update(st)
-          out.iterator
-      }
+    SeriesFold.stream(in)(_.seriesId, _.rn, Cusum.Start) { (sid, st, r) =>
+      val (s, alarm) = Cusum.step(mu, slack, thresh)(st, r.xq)
+      (s, CusumOut(sid, r.rn, r.xq, s.su, s.sl, alarm))
+    }
   }
 }

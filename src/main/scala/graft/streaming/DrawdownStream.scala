@@ -1,23 +1,19 @@
 package graft.streaming
 
 import org.apache.spark.sql.Dataset
-import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
+
+import graft.operators.{Risk, SeriesFold}
 
 /** Streaming shape of [[graft.operators.Risk.drawdown]]: the per-key
   * cumulative-sum / running-peak / drawdown recurrence carried across
-  * micro-batches in flatMapGroupsWithState — the live "how far below
-  * high-water is this account/region right now" signal, extending the
-  * risk family to the streaming side (the [[EwmaStream]] ordered-
-  * recurrence class).
+  * micro-batches — the live "how far below high-water is this
+  * account/region right now" signal, extending the risk family to the
+  * streaming side (the [[EwmaStream]] ordered-recurrence class).
   *
   * State per key is (rn, cum, peak) — three longs, O(keys) total.
-  *
-  * Parity contract (spec-pinned, the [[EwmaStream]] discipline): rows
-  * are applied in (day, eventId) order WITHIN each micro-batch;
-  * replayed with batches split at any day boundaries, the streamed
-  * output is row-for-row identical to the batch fold over the union —
-  * integer algebra, so bit-equal, under ordered arrival (a
-  * partitioned log's per-key ordering).
+  * Rows apply in (day, eventId) order; the step is
+  * [[Risk.drawdownStep]], so parity with the batch fold is the
+  * [[graft.operators.SeriesFold]] contract.
   */
 object DrawdownStream {
 
@@ -27,25 +23,15 @@ object DrawdownStream {
       key: String, rn: Long, day: Long, xq: Long, cum: Long, peak: Long,
       dd: Long)
 
-  /** (sequence ordinal, cumulative sum, running peak). */
-  final case class DdState(rn: Long, cum: Long, peak: Long)
+  type DdState = Risk.DdState
+  val DdState = Risk.DdState
 
   def drawdowns(in: Dataset[DdIn]): Dataset[DdOut] = {
     val spark = in.sparkSession
     import spark.implicits._
-    in.groupByKey(_.key)
-      .flatMapGroupsWithState[DdState, DdOut](
-        OutputMode.Append(), GroupStateTimeout.NoTimeout()) {
-        (k: String, rows: Iterator[DdIn], state: GroupState[DdState]) =>
-          var st = state.getOption.getOrElse(DdState(0L, 0L, Long.MinValue))
-          val out = rows.toSeq.sortBy(r => (r.day, r.eventId)).map { r =>
-            val cum = st.cum + r.xq
-            val peak = math.max(st.peak, cum)
-            st = DdState(st.rn + 1L, cum, peak)
-            DdOut(k, st.rn, r.day, r.xq, cum, peak, peak - cum)
-          }
-          state.update(st)
-          out.iterator
-      }
+    SeriesFold.stream(in)(_.key, r => (r.day, r.eventId), Risk.DdStart) { (k, st, r) =>
+      val s = Risk.drawdownStep(st, r.xq)
+      (s, DdOut(k, s.rn, r.day, r.xq, s.cum, s.peak, s.peak - s.cum))
+    }
   }
 }

@@ -1,27 +1,19 @@
 package graft.streaming
 
 import org.apache.spark.sql.Dataset
-import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
 
-import graft.operators.{Ewma, LogReg}
+import graft.operators.{Ewma, SeriesFold}
 
 /** Streaming shape of [[graft.operators.Ewma]]: the per-key integer
-  * EWMA recurrence carried across micro-batches in
-  * flatMapGroupsWithState — the live smoothing signal (rate
-  * baselines, engagement scores) updated as events arrive instead of
-  * recomputed per batch.
+  * EWMA recurrence carried across micro-batches — the live smoothing
+  * signal (rate baselines, engagement scores) updated as events arrive
+  * instead of recomputed per batch.
   *
   * State per key is just (rn, s) — two longs, the minimum possible
   * carry for a first-order recurrence; O(keys) total, no caps needed
-  * (contrast the [[NearDupStream]]/[[AsofStream]] rings).
-  *
-  * Parity contract (spec-pinned, the [[SemDeDupStream]] discipline):
-  * rows are applied in (ts, eventId) order WITHIN each micro-batch;
-  * replayed with batches split at any event-time boundaries, the
-  * streamed output is row-for-row identical to batch
-  * [[Ewma.ewma]] over the union — the recurrence is sequential, so
-  * the only requirement is ordered arrival across batches, exactly
-  * the ordering a partitioned log (kafka per-key ordering) provides.
+  * (contrast the [[NearDupStream]]/[[AsofStream]] rings). Rows apply
+  * in (ts, eventId) order; the step is [[Ewma.step]], so parity with
+  * [[Ewma.ewma]] is the [[graft.operators.SeriesFold]] contract.
   */
 object EwmaStream {
 
@@ -29,26 +21,15 @@ object EwmaStream {
 
   final case class EwmaOut(userId: Long, rn: Long, eventId: Long, xq: Long, ewma: Long)
 
-  /** (sequence ordinal so far, current smoothed state). */
-  final case class UserState(rn: Long, s: Long)
+  type UserState = Ewma.UserState
+  val UserState = Ewma.UserState
 
   def smoothed(in: Dataset[EwmaIn]): Dataset[EwmaOut] = {
     val spark = in.sparkSession
     import spark.implicits._
-    in.groupByKey(_.userId)
-      .flatMapGroupsWithState[UserState, EwmaOut](
-        OutputMode.Append(), GroupStateTimeout.NoTimeout()) {
-        (u: Long, rows: Iterator[EwmaIn], state: GroupState[UserState]) =>
-          var st = state.getOption.getOrElse(UserState(0L, 0L))
-          val out = rows.toSeq.sortBy(r => (r.ts, r.eventId)).map { r =>
-            val s =
-              if (st.rn == 0L) r.xq
-              else st.s + LogReg.fdiv(r.xq - st.s, Ewma.AlphaDen)
-            st = UserState(st.rn + 1L, s)
-            EwmaOut(u, st.rn, r.eventId, r.xq, s)
-          }
-          state.update(st)
-          out.iterator
-      }
+    SeriesFold.stream(in)(_.userId, r => (r.ts, r.eventId), Ewma.Start) { (u, st, r) =>
+      val s = Ewma.step(st, r.xq)
+      (s, EwmaOut(u, s.rn, r.eventId, r.xq, s.s))
+    }
   }
 }

@@ -1,7 +1,8 @@
 package graft.streaming
 
 import org.apache.spark.sql.Dataset
-import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
+
+import graft.operators.{Holt, SeriesFold}
 
 /** Streaming shape of [[graft.operators.Holt.smooth]]: per-key
   * double-exponential (level + trend) smoothing carried across
@@ -13,11 +14,9 @@ import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode
   *
   * State per key is (level, trend, seen) — exact fdiv integer fixed
   * point, O(keys) total, exactly the batch operator's fold state.
-  * Parity contract (the [[EwmaStream]] discipline, spec-pinned):
-  * rows apply in (day, eventId) order within each micro-batch; under
-  * ordered arrival the streamed trajectory is BIT-EQUAL to the batch
-  * [[graft.operators.Holt.smooth]] fold over the union — all-integer
-  * state, zero drift to tolerate.
+  * Rows apply in (day, eventId) order; the step is [[Holt.step]], so
+  * parity with [[Holt.smooth]] is the [[graft.operators.SeriesFold]]
+  * contract.
   */
 object HoltStream {
 
@@ -27,8 +26,8 @@ object HoltStream {
       key: String, day: Long, xq: Long, level: Long, trend: Long,
       forecast: Long)
 
-  /** (level, trend, any-observation-seen). */
-  final case class HState(l: Long, b: Long, seen: Boolean)
+  type HState = Holt.HState
+  val HState = Holt.HState
 
   def smooth(
       in: Dataset[HIn],
@@ -37,24 +36,9 @@ object HoltStream {
     require(alphaDen >= 1L && betaDen >= 1L)
     val spark = in.sparkSession
     import spark.implicits._
-    in.groupByKey(_.key)
-      .flatMapGroupsWithState[HState, HOut](
-        OutputMode.Append(), GroupStateTimeout.NoTimeout()) {
-        (k: String, rows: Iterator[HIn], state: GroupState[HState]) =>
-          var st = state.getOption.getOrElse(HState(0L, 0L, seen = false))
-          val out = rows.toSeq.sortBy(r => (r.day, r.eventId)).map { r =>
-            if (!st.seen) st = HState(r.xq, 0L, seen = true)
-            else {
-              val d = graft.operators.LogReg.fdiv(
-                r.xq - st.l - st.b, alphaDen)
-              val l = st.l + st.b + d
-              st = HState(l, st.b + graft.operators.LogReg.fdiv(d, betaDen),
-                seen = true)
-            }
-            HOut(k, r.day, r.xq, st.l, st.b, st.l + st.b)
-          }
-          state.update(st)
-          out.iterator
-      }
+    SeriesFold.stream(in)(_.key, r => (r.day, r.eventId), Holt.Start) { (k, st, r) =>
+      val s = Holt.step(alphaDen, betaDen)(st, r.xq)
+      (s, HOut(k, r.day, r.xq, s.l, s.b, s.l + s.b))
+    }
   }
 }

@@ -101,7 +101,9 @@ object IncrementalIndex {
         only, new StructType, chunkSchema, None, new ParquetFileFormat, Map.empty)(spark))
       Inference.embedChunks(batch.as[Chunk], embedder, batchSize)
         .coalesce(outputFiles(batch))
-        .write.mode("overwrite").parquet(s"$indexDir/batch=$n")
+        // commit/N is the sync's completion record: no _SUCCESS marker
+        .write.mode("overwrite").option("mapreduce.fileoutputcommitter.marksuccessfuljobs", "false")
+        .parquet(s"$indexDir/batch=$n")
       publish("commit", n, Nil)
     }
   }

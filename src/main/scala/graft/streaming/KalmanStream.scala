@@ -1,7 +1,8 @@
 package graft.streaming
 
 import org.apache.spark.sql.Dataset
-import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
+
+import graft.operators.{Kalman, SeriesFold}
 
 /** Streaming shape of [[graft.operators.Kalman.localLevel]]: the
   * per-key local-level filter recurrence carried across micro-batches
@@ -13,16 +14,12 @@ import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode
   * the right tool for MILLIONS of keys.
   *
   * State per key is (level, p, seen) — integer fixed point, O(keys)
-  * total, exactly the batch operator's state. Parity contract (the
-  * [[EwmaStream]] discipline, spec-pinned): rows apply in
-  * (day, eventId) order within each micro-batch; under ordered
-  * arrival the streamed trajectory is BIT-EQUAL to the batch
-  * [[graft.operators.Kalman.localLevel]] fold over the union —
-  * the state is all-integer, so there is no drift to tolerate.
+  * total, exactly the batch operator's state. Rows apply in
+  * (day, eventId) order; the step is [[Kalman.step]], so parity with
+  * [[Kalman.localLevel]] is the [[graft.operators.SeriesFold]]
+  * contract.
   */
 object KalmanStream {
-
-  import graft.operators.Kalman.{P0, Q, R}
 
   final case class KIn(key: String, eventId: Long, day: Long, xq: Long)
 
@@ -30,35 +27,15 @@ object KalmanStream {
       key: String, day: Long, xq: Long, level: Long, resid: Long,
       k_micro: Long)
 
-  /** (level, variance, any-observation-seen). */
-  final case class KState(l: Long, p: Long, seen: Boolean)
+  type KState = Kalman.KState
+  val KState = Kalman.KState
 
   def levels(in: Dataset[KIn]): Dataset[KOut] = {
     val spark = in.sparkSession
     import spark.implicits._
-    in.groupByKey(_.key)
-      .flatMapGroupsWithState[KState, KOut](
-        OutputMode.Append(), GroupStateTimeout.NoTimeout()) {
-        (k: String, rows: Iterator[KIn], state: GroupState[KState]) =>
-          var st = state.getOption.getOrElse(KState(0L, P0, seen = false))
-          val out = rows.toSeq.sortBy(r => (r.day, r.eventId)).map { r =>
-            if (!st.seen) {
-              st = KState(r.xq, P0, seen = true)
-              KOut(k, r.day, r.xq, st.l, 0L, 0L)
-            } else {
-              val pPred = st.p + Q
-              val kg = (2L * pPred * 1000000L + (pPred + R)) /
-                (2L * (pPred + R))
-              val l = st.l + math.floor(
-                (kg * (r.xq - st.l)).toDouble / 1000000.0 + 0.5).toLong
-              val p = (2L * (1000000L - kg) * pPred + 1000000L) /
-                (2L * 1000000L)
-              st = KState(l, p, seen = true)
-              KOut(k, r.day, r.xq, l, r.xq - l, kg)
-            }
-          }
-          state.update(st)
-          out.iterator
-      }
+    SeriesFold.stream(in)(_.key, r => (r.day, r.eventId), Kalman.Start) { (k, st, r) =>
+      val (s, gain) = Kalman.step(st, r.xq)
+      (s, KOut(k, r.day, r.xq, s.l, r.xq - s.l, gain))
+    }
   }
 }

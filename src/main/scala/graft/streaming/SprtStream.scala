@@ -1,7 +1,8 @@
 package graft.streaming
 
 import org.apache.spark.sql.Dataset
-import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
+
+import graft.operators.SeriesFold
 
 /** Streaming shape of [[graft.operators.Sprt]]: the sequential
   * probability ratio walk carried across micro-batches — the live
@@ -14,12 +15,12 @@ import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode
   * Same integer micro-nat literals as the batch operator; with the
   * same trial order the emitted first-crossing state is bit-equal to
   * `Sprt.decide`'s (spec-pinned, including crossings that happen
-  * mid-batch and decisions frozen across batch boundaries).
+  * mid-batch and decisions frozen across batch boundaries). The batch
+  * side is a distributed prefix-sum scan, not this step; the carry is
+  * the [[graft.operators.SeriesFold]] streaming driver.
   *
   * State per arm is three longs + a flag — O(arms) total, the
-  * [[EwmaStream]] minimal-carry class; rows apply in `rn` order
-  * within each batch, ordered arrival across batches is the usual
-  * partitioned-log contract.
+  * [[EwmaStream]] minimal-carry class; rows apply in `rn` order.
   */
 object SprtStream {
 
@@ -37,25 +38,17 @@ object SprtStream {
       : Dataset[SprtOut] = {
     val spark = in.sparkSession
     import spark.implicits._
-    in.groupByKey(_.arm)
-      .flatMapGroupsWithState[SprtState, SprtOut](
-        OutputMode.Append(), GroupStateTimeout.NoTimeout()) {
-        (arm: String, rows: Iterator[SprtIn], state: GroupState[SprtState]) =>
-          var st = state.getOption.getOrElse(SprtState(0L, 0L, "continue"))
-          val out = rows.toSeq.sortBy(_.rn).map { r =>
-            if (st.decided == "continue") {
-              val llr = st.llr + (if (r.succ) stepMicro else -stepMicro)
-              val n = st.n + 1
-              val dec =
-                if (llr >= thresholdMicro) "accept_h1"
-                else if (llr <= -thresholdMicro) "accept_h0"
-                else "continue"
-              st = SprtState(n, llr, dec)
-            }
-            SprtOut(arm, r.rn, st.n, st.llr, st.decided)
-          }
-          state.update(st)
-          out.iterator
-      }
+    SeriesFold.stream(in)(_.arm, _.rn, SprtState(0L, 0L, "continue")) { (arm, st, r) =>
+      val s =
+        if (st.decided != "continue") st
+        else {
+          val llr = st.llr + (if (r.succ) stepMicro else -stepMicro)
+          SprtState(st.n + 1, llr,
+            if (llr >= thresholdMicro) "accept_h1"
+            else if (llr <= -thresholdMicro) "accept_h0"
+            else "continue")
+        }
+      (s, SprtOut(arm, r.rn, s.n, s.llr, s.decided))
+    }
   }
 }

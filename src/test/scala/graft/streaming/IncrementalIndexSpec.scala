@@ -243,6 +243,22 @@ class IncrementalIndexSpec extends SparkSpec {
     assert(started.get === 0, "a sync started a streaming query")
   }
 
+  test("sync: a batch write leaves no _SUCCESS marker; commit/N records it") {
+    val base = Files.createTempDirectory("graft-sync-marker")
+    val (chunksDir, indexDir, ckpt) = (s"$base/chunks", s"$base/index", s"$base/ckpt")
+    val e = HashingEmbedder(dim = 16)
+    chunkFile(base.resolve("chunks/a.parquet"), Seq("a0", "a1"))
+    IncrementalIndex.syncOnce(spark, chunksDir, indexDir, ckpt, e)
+    chunkFile(base.resolve("chunks/b.parquet"), Seq("b0"))
+    IncrementalIndex.syncOnce(spark, chunksDir, indexDir, ckpt, e)
+    assert(batches(indexDir) === Seq("batch=0", "batch=1"))
+    Seq(0, 1).foreach { n =>
+      assert(!Files.exists(Paths.get(indexDir, s"batch=$n", "_SUCCESS")), s"batch=$n")
+      assert(Files.exists(Paths.get(ckpt, "commit", n.toString)), s"commit/$n")
+    }
+    assert(indexed(indexDir) === Seq("a0", "a1", "b0"))
+  }
+
   test("sync: odd file names round-trip, hidden entries are never read") {
     val base = Files.createTempDirectory("graft-sync-paths")
     val (chunksDir, indexDir, ckpt) = (s"$base/chunks", s"$base/index", s"$base/ckpt")
