@@ -27,6 +27,15 @@ object Graft {
     * skew-join splitting), shuffle partitions sized to cores (not the
     * 200 default), UTC. On a real cluster pass `master = null` and
     * let spark-submit supply the master/resource config.
+    *
+    * The `file:` scheme is served by [[sources.InProcessLocalFs]],
+    * which sets a created file's or directory's permission in the JVM
+    * where Hadoop without its native library forks a `chmod` for every
+    * file, `.crc` file and directory a write creates. Hadoop
+    * caches file systems JVM-wide, keyed without the class, so the
+    * first `file:` file system created in a JVM decides the class: a
+    * session that existed before this call keeps Hadoop's default,
+    * with the same results at the old speed.
     */
   def session(
       master: String = s"local[${Runtime.getRuntime.availableProcessors()}]",
@@ -39,6 +48,7 @@ object Graft {
       .config("spark.sql.shuffle.partitions", parts.toString)
       .config("spark.sql.adaptive.enabled", "true")
       .config("spark.sql.session.timeZone", "UTC")
+      .config("spark.hadoop.fs.file.impl", classOf[sources.InProcessLocalFs].getName)
     val preExisting = SparkSession.getActiveSession.orElse(SparkSession.getDefaultSession)
     val spark = (if (master != null) b.master(master) else b).getOrCreate()
     // getOrCreate() silently ignores builder configs when a session

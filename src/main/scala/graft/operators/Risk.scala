@@ -153,9 +153,12 @@ object Risk {
       .orderBy(col(dayCol))
 
   /** The [[durbinWatson]] OLS line of `ys` against its 1-based day
-    * rank t: (St, Stt, slope_milli, intercept_milli), the moments
-    * exact and the slope ONE double division of exact BigInts. */
-  private def olsMilli(ys: Array[Long]): (Long, Long, Long, Long) = {
+    * rank t: (St, Stt, (slope_milli, intercept_milli)), the moments
+    * exact and the slope ONE double division of exact BigInts. The
+    * line is None on a one-day series, whose den = n·Stt − St² is 0:
+    * the oracle's double division by zero is NULL there, and so is
+    * everything computed from the line. */
+  private def olsMilli(ys: Array[Long]): (Long, Long, Option[(Long, Long)]) = {
     val n = ys.length.toLong
     var st, sy, stt = 0L
     var sty = BigInt(0)
@@ -167,8 +170,11 @@ object Risk {
     val den = BigInt(n) * stt - BigInt(st) * st
     // one double division (operands < 2^63 at oracle scales →
     // engine-identical double images), THEN the 1e3 scale + floor
-    val slope = math.floor(num.toDouble / den.toDouble * 1000L).toLong
-    (st, stt, slope, LogReg.fdiv(1000L * sy - slope * st, n))
+    val line = Option.when(den != 0) {
+      val slope = math.floor(num.toDouble / den.toDouble * 1000L).toLong
+      (slope, LogReg.fdiv(1000L * sy - slope * st, n))
+    }
+    (st, stt, line)
   }
 
   /** Huber-weighted IRLS trend of the day-ordered series — the
@@ -193,55 +199,64 @@ object Risk {
     *
     * One row out: (n, slope0_milli, slope_milli, intercept_milli,
     * sum_w_milli). Day-count-bounded single-task fold (the
-    * [[durbinWatson]] class).
+    * [[durbinWatson]] class). On one day the OLS start is undefined
+    * and every column but n is NULL, as in the oracle.
     */
   def huberTrend(series: DataFrame, dayCol: String, valCol: String): DataFrame =
     SeriesFold.series(series, dayCol, valCol) { rows =>
       val ys = rows.map(_._2)
       val n = ys.length.toLong
-      val (_, _, slope0, inter0) = olsMilli(ys)
-      var slope = slope0
-      var inter = inter0
-      var sumW = 0L
-      for (_ <- 1 to 2) {
-        val es = Array.tabulate(ys.length) { i =>
-          1000L * ys(i) - inter - slope * (i + 1L)
-        }
-        val abs = es.map(math.abs).sorted
-        val m = abs.length
-        val pos = 0.5 * (m - 1)
-        val lo = math.floor(pos).toInt
-        val med =
-          if (lo + 1 < m) abs(lo) + (pos - lo) * (abs(lo + 1) - abs(lo)).toDouble
-          else abs(lo).toDouble
-        val th = math.floor(2.0 * med + 0.5).toLong
-        var sw, swt, swy = BigInt(0)
-        var swtt, swty = BigInt(0)
-        var i = 0
-        sumW = 0L
-        while (i < ys.length) {
-          val ae = math.abs(es(i))
-          val w = if (ae <= th) 1000L else LogReg.fdiv(1000L * th, ae)
-          sumW += w
-          val ti = i + 1L
-          sw += w; swt += BigInt(w) * ti; swy += BigInt(w) * ys(i)
-          swtt += BigInt(w) * ti * ti; swty += BigInt(w) * ti * ys(i)
-          i += 1
-        }
-        val num = sw * swty - swt * swy
-        val den = sw * swtt - swt * swt
-        val sign = if ((num < 0) != (den < 0)) -1L else 1L
-        slope = sign *
-          ((num.abs * 2000 + den.abs) / (den.abs * 2)).toLong
-        inter = math.floor(
-          (BigInt(1000L) * swy - BigInt(slope) * swt).toDouble
-            / sw.toDouble).toLong
+      olsMilli(ys)._3 match {
+        case None => Iterator.single(HuberRow(n, None, None, None, None))
+        case Some((slope0, inter0)) =>
+          // with two or more days, every day whose |e| is at most the
+          // median keeps weight 1000 — at least two distinct t — so the
+          // weighted den below is never 0
+          var slope = slope0
+          var inter = inter0
+          var sumW = 0L
+          for (_ <- 1 to 2) {
+            val es = Array.tabulate(ys.length) { i =>
+              1000L * ys(i) - inter - slope * (i + 1L)
+            }
+            val abs = es.map(math.abs).sorted
+            val m = abs.length
+            val pos = 0.5 * (m - 1)
+            val lo = math.floor(pos).toInt
+            val med =
+              if (lo + 1 < m) abs(lo) + (pos - lo) * (abs(lo + 1) - abs(lo)).toDouble
+              else abs(lo).toDouble
+            val th = math.floor(2.0 * med + 0.5).toLong
+            var sw, swt, swy = BigInt(0)
+            var swtt, swty = BigInt(0)
+            var i = 0
+            sumW = 0L
+            while (i < ys.length) {
+              val ae = math.abs(es(i))
+              val w = if (ae <= th) 1000L else LogReg.fdiv(1000L * th, ae)
+              sumW += w
+              val ti = i + 1L
+              sw += w; swt += BigInt(w) * ti; swy += BigInt(w) * ys(i)
+              swtt += BigInt(w) * ti * ti; swty += BigInt(w) * ti * ys(i)
+              i += 1
+            }
+            val num = sw * swty - swt * swy
+            val den = sw * swtt - swt * swt
+            val sign = if ((num < 0) != (den < 0)) -1L else 1L
+            slope = sign *
+              ((num.abs * 2000 + den.abs) / (den.abs * 2)).toLong
+            inter = math.floor(
+              (BigInt(1000L) * swy - BigInt(slope) * swt).toDouble
+                / sw.toDouble).toLong
+          }
+          Iterator.single(HuberRow(n, Some(slope0), Some(slope), Some(inter), Some(sumW)))
       }
-      Iterator.single((n, slope0, slope, inter, sumW))
-    }(Encoders.tuple(Encoders.scalaLong, Encoders.scalaLong,
-      Encoders.scalaLong, Encoders.scalaLong, Encoders.scalaLong))
-      .toDF("n", "slope0_milli", "slope_milli", "intercept_milli",
-        "sum_w_milli")
+    }(Encoders.product[HuberRow]).toDF()
+
+  /** Row shape of [[huberTrend]]. */
+  final case class HuberRow(
+      n: Long, slope0_milli: Option[Long], slope_milli: Option[Long],
+      intercept_milli: Option[Long], sum_w_milli: Option[Long])
 
   /** Durbin–Watson statistic of the residuals from the OLS line of
     * the day-ordered series against its 1-based day rank: one row
@@ -266,31 +281,38 @@ object Risk {
     *    floor division — (2·1e6·Σd² + Σe²) div (2·Σe²) ≡
     *    floor(1e6·Σd²/Σe² + 0.5) — so no >2^63 value is ever cast to
     *    double on either engine (HUGEINT `//` on positives is floor).
+    *
+    * Undefined divisions are NULL where the oracle's are: on one day
+    * the line (and so dw_micro), on a series the line fits exactly
+    * (Σe² = 0) dw_micro alone.
     */
   def durbinWatson(series: DataFrame, dayCol: String, valCol: String): DataFrame =
     SeriesFold.series(series, dayCol, valCol) { rows =>
       val ys = rows.map(_._2)
-      val n = ys.length.toLong
-      val (_, _, slopeMilli, interMilli) = olsMilli(ys)
-      var prevE = 0L
-      var first = true
-      var sumDiff2, sumE2 = BigInt(0)
-      var t = 0L
-      ys.foreach { y =>
-        t += 1
-        val e = 1000L * y - interMilli - slopeMilli * t
-        if (!first) sumDiff2 += BigInt(e - prevE) * (e - prevE)
-        sumE2 += BigInt(e) * e
-        prevE = e; first = false
+      val line = olsMilli(ys)._3
+      val dwMicro = line.flatMap { case (slopeMilli, interMilli) =>
+        var prevE = 0L
+        var first = true
+        var sumDiff2, sumE2 = BigInt(0)
+        var t = 0L
+        ys.foreach { y =>
+          t += 1
+          val e = 1000L * y - interMilli - slopeMilli * t
+          if (!first) sumDiff2 += BigInt(e - prevE) * (e - prevE)
+          sumE2 += BigInt(e) * e
+          prevE = e; first = false
+        }
+        // floor(1e6·Σd²/Σe² + 0.5) as exact integer floor division —
+        // both operands positive, so BigInt `/` (truncation) is floor
+        Option.when(sumE2 != 0)(((sumDiff2 * 2000000L + sumE2) / (sumE2 * 2)).toLong)
       }
-      // floor(1e6·Σd²/Σe² + 0.5) as exact integer floor division —
-      // both operands positive, so BigInt `/` (truncation) is floor
-      val dwMicro =
-        ((sumDiff2 * 2000000L + sumE2) / (sumE2 * 2)).toLong
-      Iterator.single((n, slopeMilli, interMilli, dwMicro))
-    }(Encoders.tuple(Encoders.scalaLong, Encoders.scalaLong,
-      Encoders.scalaLong, Encoders.scalaLong))
-      .toDF("n", "slope_milli", "intercept_milli", "dw_micro")
+      Iterator.single(DwRow(ys.length.toLong, line.map(_._1), line.map(_._2), dwMicro))
+    }(Encoders.product[DwRow]).toDF()
+
+  /** Row shape of [[durbinWatson]]. */
+  final case class DwRow(
+      n: Long, slope_milli: Option[Long], intercept_milli: Option[Long],
+      dw_micro: Option[Long])
 
   /** Per-day regression influence diagnostics for the [[durbinWatson]]
     * OLS trend fit: leverage h_t = 1/n + (t−t̄)²/Sxx and Cook's
@@ -302,24 +324,28 @@ object Risk {
     * double (the q267 HUGEINT→DOUBLE discipline); h and the final
     * Cook chain are ONE double sequence each, micro-snapped. The
     * influence flag D > 4/n is an exact integer cross-multiplication.
-    * Returns (day, xq, e_milli, h_micro, cook_micro, influential).
+    * Returns (day, xq, e_milli, h_micro, cook_micro, influential); on
+    * one day, with no line and Sxx = 0, e_milli and h_micro are NULL,
+    * as in the oracle.
     */
   final case class CookRow(
-      day: Date, xq: Long, e_milli: Long, h_micro: Long,
+      day: Date, xq: Long, e_milli: Option[Long], h_micro: Option[Long],
       cook_micro: Long, influential: Boolean)
 
   def cooksDistance(series: DataFrame, dayCol: String, valCol: String): DataFrame =
     SeriesFold.series(series, dayCol, valCol) { rows =>
       val ys = rows.map(_._2)
       val n = ys.length.toLong
-      val (st, stt, slopeMilli, interMilli) = olsMilli(ys)
+      val (st, stt, line) = olsMilli(ys)
       var sumE2 = BigInt(0)
       var t = 0L
       val es = ys.map { y =>
         t += 1
-        val e = 1000L * y - interMilli - slopeMilli * t
-        sumE2 += BigInt(e) * e
-        e
+        line.map { case (slopeMilli, interMilli) =>
+          val e = 1000L * y - interMilli - slopeMilli * t
+          sumE2 += BigInt(e) * e
+          e
+        }
       }
       val s2q = if (n > 2) sumE2 / BigInt(n - 2) else BigInt(0)
       val nd = n.toDouble
@@ -328,16 +354,17 @@ object Risk {
       t = 0L
       rows.iterator.zip(es.iterator).map { case ((day, y), e) =>
         t += 1
-        val h = 1.0 / nd + (t.toDouble - tbar) * (t.toDouble - tbar) / sxx
-        val hMicro = math.floor(h * 1000000.0 + 0.5).toLong
-        val cookMicro =
-          if (s2q == BigInt(0)) 0L
-          else {
+        val h = Option.when(sxx != 0.0)(
+          1.0 / nd + (t.toDouble - tbar) * (t.toDouble - tbar) / sxx)
+        val cookMicro = (e, h) match {
+          case (Some(e), Some(h)) if s2q != BigInt(0) =>
             val r2q = (BigInt(e) * e * 1000000L) / s2q
             math.floor(r2q.toDouble / 1000000.0 * h
               / (2.0 * (1.0 - h) * (1.0 - h)) * 1000000.0 + 0.5).toLong
-          }
-        CookRow(day, y, e, hMicro, cookMicro, cookMicro * n > 4000000L)
+          case _ => 0L
+        }
+        CookRow(day, y, e, h.map(h => math.floor(h * 1000000.0 + 0.5).toLong),
+          cookMicro, cookMicro * n > 4000000L)
       }
     }(Encoders.product[CookRow])
       .toDF(dayCol, valCol, "e_milli", "h_micro", "cook_micro",

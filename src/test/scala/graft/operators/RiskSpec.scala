@@ -3,7 +3,7 @@ package graft.operators
 import java.sql.Date
 
 import graft.SparkSpec
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.{DataFrame, Row}
 
 /** Financial-risk primitives (operators.Risk): hand-computed drawdown
   * trajectory, VaR/ES tail semantics on a known delta set, the DW ≈ 2
@@ -124,6 +124,18 @@ class RiskSpec extends SparkSpec {
       .select($"n", $"dw_micro").as[(Long, Long)].head()
     assert(out._1 == 40L)
     assert(out._2 > 3500000L && out._2 <= 4100000L, s"got $out")
+  }
+
+  test("durbinWatson / huberTrend on an exact line: NULL DW, Huber defined, as in the oracle") {
+    import spark.implicits._
+    // xq = 500 + 100·t: every OLS residual is 0, so Σe² = 0 and the
+    // q267 SQL's integer division yields NULL in DuckDB; q287 gives
+    // these values (both SQL texts run in DuckDB on this series)
+    val line = (1 to 10).map(t => (d(t), 500L + 100L * t)).toDF("day", "xq")
+    assert(Risk.durbinWatson(line, "day", "xq").collect().toSeq ===
+      Seq(Row(10L, 100000L, 500000L, null)))
+    assert(Risk.huberTrend(line, "day", "xq").collect().toSeq ===
+      Seq(Row(10L, 100000L, 100000L, 500000L, 10000L)))
   }
 
   test("xmrChart: hand-computed centre, limits, and flags") {
