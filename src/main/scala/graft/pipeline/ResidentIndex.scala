@@ -3,13 +3,14 @@ package graft.pipeline
 import scala.collection.mutable
 import scala.jdk.CollectionConverters._
 
-import org.apache.hadoop.fs.Path
-import org.apache.spark.sql.{DataFrame, GraftSqlBridge, GraftSqlShim, SparkSession}
-import org.apache.spark.sql.catalyst.InternalRow
+import org.apache.spark.sql.{DataFrame, GraftSqlShim, SparkSession}
+import org.apache.spark.sql.catalyst.{FileSourceOptions, InternalRow}
 import org.apache.spark.sql.catalyst.expressions._
 import org.apache.spark.sql.catalyst.plans.logical.LocalRelation
-import org.apache.spark.sql.execution.datasources.{FileIndex, FileStatusWithMetadata, HadoopFsRelation, LogicalRelation, PartitionDirectory}
-import org.apache.spark.sql.functions.col
+import org.apache.spark.sql.catalyst.util.CaseInsensitiveMap
+import org.apache.spark.sql.execution.PartitionedFileUtil
+import org.apache.spark.sql.execution.datasources.{FileFormat, FileStatusWithMetadata, HadoopFsRelation, LogicalRelation, PartitionDirectory}
+import org.apache.spark.sql.internal.SQLConf
 import org.apache.spark.sql.types._
 
 import graft.functions.CosineSimilarity
@@ -26,8 +27,10 @@ import graft.functions.CosineSimilarity
   * and the file list comes from the relation's own `FileIndex`, which
   * `spark.read` has already listed. A search therefore:
   *  - reuses the rows of every file it has seen;
-  *  - loads the unseen ones (only after a refresh) in ONE scan job over
-  *    exactly those files, each with its listed partition values;
+  *  - reads the unseen ones (only after a refresh) on the driver, each
+  *    whole, with its listed partition values, through the reader the
+  *    relation's `FileFormat` builds for the scan — no job; a relation
+  *    whose scan would skip corrupt or missing files is declined;
   *  - forgets files the listing no longer carries (an overwritten
   *    batch directory drops its old rows);
   *  - scores every row with [[CosineSimilarity]]'s interpreted `eval`
@@ -80,9 +83,7 @@ private[pipeline] object ResidentIndex {
             if CosineSimilarity.accepts(l.output(e).dataType)
             id <- ordinal(idCol)
             if RowOrdering.isOrderable(l.output(id).dataType)
-            // withColumn would replace an existing `sim`; the metadata
-            // column that keys loaded rows to files must not be shadowed
-            if ordinal("sim").isEmpty && !l.output.exists(_.name.equalsIgnoreCase("_metadata"))
+            if ordinal("sim").isEmpty // withColumn would replace an existing `sim`
           } yield (e, id)
           for {
             (e, id) <- servable
@@ -147,37 +148,38 @@ private[pipeline] object ResidentIndex {
       }
     }
 
-  /** The path renders as `_metadata.file_path` does (a Path re-parsed
-    * from its string form, as a URI: `file:/x`, not `file:///x`). */
   private def fileKey(f: FileStatusWithMetadata): FileKey =
-    FileKey(new Path(f.getPath.toString).toUri.toString, f.getLen, f.getModificationTime)
+    FileKey(f.getPath.toString, f.getLen, f.getModificationTime)
 
-  /** One scan job over exactly `dirs`' files, rows grouped by the file
-    * they came from (`_metadata.file_path`); None if a row names a file
-    * outside `dirs`. */
+  /** `dirs`' files read on the driver, each whole, by the relation's
+    * own format reader (the scan's decoder, with no job), rows in
+    * `l.output` order. None where the scan would skip files this read
+    * cannot: `FileScanRDD` implements `ignoreCorruptFiles` and
+    * `ignoreMissingFiles`. */
   private def load(
       l: LogicalRelation,
       fs: HadoopFsRelation,
       dirs: Seq[PartitionDirectory]): Option[Map[FileKey, Array[UnsafeRow]]] = {
-    val only = new FileIndex {
-      override def rootPaths: Seq[Path] = fs.location.rootPaths
-      override def listFiles(p: Seq[Expression], d: Seq[Expression]): Seq[PartitionDirectory] = dirs
-      override def inputFiles: Array[String] = dirs.flatMap(_.files.map(_.getPath.toString)).toArray
-      override def refresh(): Unit = ()
-      override def sizeInBytes: Long = dirs.flatMap(_.files).map(_.getLen).sum
-      override def partitionSchema: StructType = fs.partitionSchema
+    val spark = fs.sparkSession
+    val conf = spark.sessionState.conf
+    val skips = SQLConf.withExistingConf(conf)(new FileSourceOptions(CaseInsensitiveMap(fs.options)))
+    if (skips.ignoreCorruptFiles || skips.ignoreMissingFiles) None
+    else {
+      // as FileSourceStrategy reads: a partition value wins over a
+      // data column of the same name
+      val required = StructType(fs.dataSchema.filterNot(f =>
+        fs.partitionSchema.exists(p => conf.resolver(p.name, f.name))))
+      val read = fs.fileFormat.buildReaderWithPartitionValues(spark, fs.dataSchema,
+        fs.partitionSchema, required, Nil, fs.options + (FileFormat.OPTION_RETURNING_BATCH -> "false"),
+        spark.sessionState.newHadoopConfWithOptions(fs.options))
+      val fields = required ++ fs.partitionSchema
+      val project = UnsafeProjection.create(l.output.map { a =>
+        BoundReference(fields.indexWhere(f => conf.resolver(f.name, a.name)), a.dataType, a.nullable)
+      })
+      Some(dirs.flatMap(d => d.files.map { f =>
+        val file = PartitionedFileUtil.getPartitionedFile(f, f.getPath, d.values, 0, f.getLen)
+        fileKey(f) -> read(file).map(r => project(r).copy()).toArray
+      }).toMap)
     }
-    val scan = l.copy(relation = fs.copy(location = only)(fs.sparkSession))
-    val n = l.output.size
-    val df = GraftSqlShim.ofRows(fs.sparkSession, scan)
-      .select(l.output.map(GraftSqlBridge.column) :+ col("_metadata.file_path"): _*)
-    val strip = UnsafeProjection.create(
-      l.output.zipWithIndex.map { case (a, i) => BoundReference(i, a.dataType, a.nullable) })
-    val byPath = GraftSqlShim.collectInternal(df).groupBy(_.getUTF8String(n).toString)
-    val keys = dirs.flatMap(_.files.map(fileKey))
-    if (!byPath.keySet.subsetOf(keys.map(_.path).toSet)) None
-    else Some(keys.map { f =>
-      f -> byPath.getOrElse(f.path, Array.empty[InternalRow]).map(r => strip(r).copy())
-    }.toMap)
   }
 }

@@ -18,7 +18,8 @@ import graft.functions.GraftFunctions.cosine_sim
   *    `spark.sql.autoBroadcastJoinThreshold`) is answered from rows the
   *    driver keeps per data file ([[ResidentIndex]]), scored and ranked
   *    at call time: the result is a local relation, so collecting it
-  *    runs no job, and a refresh costs one job over the new files only;
+  *    runs no job, and after a refresh the new files are read on the
+  *    driver, so that search runs none either;
   *  - anything else (filtered or joined frames, in-memory Datasets,
   *    ANN candidates, large indexes) stays lazy and distributed —
   *    Catalyst plans it as TakeOrderedAndProject over a scan: no
