@@ -1,6 +1,6 @@
 package graft.operators
 
-import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
+import org.apache.spark.sql.{DataFrame, Dataset}
 import org.apache.spark.sql.functions._
 
 /** Byte-pair-encoding TOKENIZER TRAINING (Sennrich, Haddow, Birch —
@@ -68,7 +68,7 @@ object Bpe {
     require(numMerges >= 0)
 
     // corpus-scale step: ONE shuffle into the word-frequency table
-    var words: Dataset[(Array[String], Long)] =
+    val words: Dataset[(Array[String], Long)] =
       graft.Par.spread(docs.select(col(textCol)))
         .select(explode(graft.functions.TextFunctions.tokens(col(textCol))).as("w"))
         .groupBy($"w").agg(count(lit(1)).as("n"))

@@ -505,8 +505,6 @@ object GraphOps {
       seedMod: Long = 97L,
       hops: Int = 4): DataFrame = {
     require(hops >= 2)
-    val spark = edges.sparkSession
-    import spark.implicits._
     // multiplicity-preserving symmetrization (σ counts walk edges, so
     // no dedup here): stationary persisted layout, the Iterate shape
     val dir = edges.select(col(aCol).cast("long").as("src"),

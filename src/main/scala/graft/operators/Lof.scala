@@ -47,7 +47,6 @@ object Lof {
       blockCol: String,
       k: Int = 5): DataFrame = {
     require(k >= 1, "k >= 1")
-    val spark = embs.sparkSession
     import graft.functions.GraftFunctions.cosine_sim
 
     val base = embs.select(col(idCol).cast("long").as("id"),

@@ -1,7 +1,7 @@
 package graft.operators
 
 import graft.functions.TextFunctions
-import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 /** Lexical (keyword) retrieval — the BM25 side of a retrieval stack

@@ -4,7 +4,6 @@ import java.nio.file.{Files, Paths}
 import scala.util.Try
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
-import org.apache.spark.sql.functions._
 
 /** Binary-document acquisition, the engine-side form of the
   * reference's `get_pdf_content` download UDF

@@ -304,7 +304,7 @@ object Jbig2 {
   private val Tdy = Array(T0dy, T1dy, T2dy, T3dy)
 
   private def ctxAt(px: Array[Byte], w: Int, h: Int, x: Int, y: Int,
-      template: Int = 0): Int = {
+      template: Int): Int = {
     val dxs = Tdx(template)
     val dys = Tdy(template)
     var cx = 0
@@ -358,7 +358,7 @@ object Jbig2 {
     * codes no pixels. */
   private def decodeGeneric(
       data: Array[Byte], start: Int, end: Int, w: Int, h: Int,
-      tpgdon: Boolean, template: Int = 0): Array[Byte] =
+      tpgdon: Boolean, template: Int): Array[Byte] =
     decodeGenericWith(new MqDecoder(data, start, end), pooledContexts(),
       w, h, tpgdon, template)
 
@@ -1055,8 +1055,8 @@ object Jbig2 {
       data: Array[Byte], start: Int, end: Int,
       numNew: Int, numEx: Int,
       input: IndexedSeq[Bitmap],
-      refAgg: Boolean = false,
-      rtemplate: Int = 1): Option[IndexedSeq[Bitmap]] = {
+      refAgg: Boolean,
+      rtemplate: Int): Option[IndexedSeq[Bitmap]] = {
     if (numNew < 0 || numNew > 4096 || numEx < 0 || numEx > 8192) return None
     val mq = new MqDecoder(data, start, end)
     val gb = pooledContexts()
@@ -1184,7 +1184,7 @@ object Jbig2 {
   private def encodeSymbolDictRef(
       syms: Seq[(Bitmap, Int, Bitmap, Int, Int)],
       inputCount: Int,
-      rtemplate: Int = 1): Array[Byte] = {
+      rtemplate: Int): Array[Byte] = {
     require(syms.map(_._1.h) == syms.map(_._1.h).sorted,
       "refined symbols must be pre-sorted by height (wire order)")
     val mq = new MqEncoder
@@ -1351,8 +1351,8 @@ object Jbig2 {
     * BMSIZE = B.1. Exports all. */
   private def encodeSymbolDictHuff(
       syms: Seq[Bitmap], mmr: Boolean,
-      dhTab0: HuffTable = null, dwTab0: HuffTable = null,
-      bmTab0: HuffTable = null): Array[Byte] = {
+      dhTab0: HuffTable, dwTab0: HuffTable,
+      bmTab0: HuffTable): Array[Byte] = {
     val w = new BitWriter
     val dhTab = if (dhTab0 != null) dhTab0 else StdTables(4)
     val dwTab = if (dwTab0 != null) dwTab0 else StdTables(2)
@@ -1579,7 +1579,7 @@ object Jbig2 {
       numInstances: Int, logStrips: Int, refCorner: Int, dsOffset: Int,
       syms: IndexedSeq[Bitmap],
       transposed: Boolean, combOp: Int, defPixel: Int,
-      refine: Boolean = false, rtemplate: Int = 1): Option[Array[Byte]] = {
+      refine: Boolean, rtemplate: Int): Option[Array[Byte]] = {
     if (syms.isEmpty) return None
     decodeTextRegionWith(
       new MqDecoder(data, start, end), pooledIaContexts(),
@@ -1792,8 +1792,8 @@ object Jbig2 {
   private def encodeTextRegionDataHuff(
       syms: Seq[Bitmap], placements: Seq[(Int, Int, Int)],
       logStrips: Int, refCorner: Int,
-      fsTab0: HuffTable = null, dsTab0: HuffTable = null,
-      dtTab0: HuffTable = null): Array[Byte] = {
+      fsTab0: HuffTable, dsTab0: HuffTable,
+      dtTab0: HuffTable): Array[Byte] = {
     val symCodeLen = symCodeLenOf(syms.size)
     require(symCodeLen <= MaxSymCodeLen, s"too many symbols: ${syms.size}")
     val strips = 1 << logStrips

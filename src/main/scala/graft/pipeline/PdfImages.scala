@@ -1273,7 +1273,7 @@ final case class PdfRasterCodec() extends Multimodal.MediaCodec {
     val grid = math.sqrt(dim.toDouble).toInt
     require(grid * grid == dim, s"PdfRasterCodec pools square grids, dim $dim")
     firstPoolable(content) match {
-      case Some((im, g)) if g.length == dim => g
+      case Some((_, g)) if g.length == dim => g
       case Some((im, _)) =>
         PdfImages.lumaGrid(im, grid).getOrElse(new Array[Float](dim))
       case None => new Array[Float](dim)

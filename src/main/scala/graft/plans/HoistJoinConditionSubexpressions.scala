@@ -123,7 +123,6 @@ object HoistJoinConditionSubexpressions extends Rule[LogicalPlan] {
       case (ByteType | ShortType | IntegerType | LongType | FloatType, DoubleType) => true
       case (ByteType | ShortType | IntegerType, LongType) => true
       case (ByteType | ShortType, IntegerType) => true
-      case (FloatType, DoubleType) => true
       case _ => false
     }
   }

@@ -893,8 +893,6 @@ object ClusterQueries {
       },
       Some {
         // the same cofactor text, regenerated (not transcribed)
-        def cRef(i: Int, j: Int) =
-          if (i <= j) s"c$i$j" else s"c$j$i"
         val dets =
           s"(c11 * (c22 * c33 - c23 * c32_) - c12 * (c21_ * c33 - c23 * c31_)" +
             s" + c13 * (c21_ * c32_ - c22 * c31_))"

@@ -565,7 +565,6 @@ object DedupQueries {
     QueryDef(
       "q77_dup_triangles",
       (s, d) => {
-        import s.implicits._
         graft.operators.GraphOps.triangleStats(
           jaccardPairsArtifact(s, d), "id_a", "id_b")
       },

@@ -2,7 +2,6 @@ package graft.queries
 
 import graft.{QueryDef, Tables}
 import graft.operators.{FuzzyJoin, Linkage, RangeJoin}
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
 /** Non-equi matching operators: interval-overlap range join (grid-

@@ -107,7 +107,7 @@ object PipelineQueries {
     QueryDef(
       "q16_chunks",
       (s, d) => {
-        import org.apache.spark.sql.functions.{col, length}
+        import org.apache.spark.sql.functions.col
         Inference.chunkDocuments(s, Tables.documents(s, d))
           .toDF()
           .select(col("doc_id"), col("chunk_idx").cast("bigint").as("chunk_idx"),

@@ -1130,7 +1130,6 @@ object ScaleQueries {
     QueryDef(
       "q80_grouping_sets",
       (s, d) => {
-        import s.implicits._
         Tables.orders(s, d).createOrReplaceTempView("orders_gs")
         s.sql("""
           |SELECT o_orderpriority, o_orderstatus,

@@ -2,7 +2,6 @@ package graft.streaming
 
 import graft.functions.TextFunctions
 import org.apache.spark.sql.Dataset
-import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
 
 /** Stateful streaming BM25 maintenance — the lexical-retrieval
   * counterpart of [[IncrementalIndex]] (which maintains the DENSE
@@ -43,9 +42,9 @@ import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode
   *
   * SINGLE-TASK CEILING (shared with the registry family —
   * PageRankStream, CentralityStream, SsspStream): the global coupling
-  * above forces `groupByKey(_ => 0)`, so ALL state and the full
-  * per-batch re-score of every tracked document serialize onto ONE
-  * task — O(maxDocs·|query|) work per tick on a single executor core.
+  * above forces one group key (`GraphRegistry.single`), so ALL state
+  * and the full per-batch re-score of every tracked document serialize
+  * onto ONE task — O(maxDocs·|query|) work per tick on a single executor core.
   * That is the correct shape for a standing query over a BOUNDED
   * recent corpus (the alerting use-case), and exactly wrong for
   * corpus-scale retrieval: do not raise `maxDocs` past what one core
@@ -80,9 +79,7 @@ object Bm25Stream extends Serializable {
     import spark.implicits._
     val terms = query.toSet
 
-    def fn(key: Int, it: Iterator[Doc],
-        state: GroupState[Registry]): Iterator[Hit] = {
-      val st = state.getOption.getOrElse(Registry(Map.empty, Map.empty, Map.empty, 0L))
+    GraphRegistry.single(docs, Registry(Map.empty, Map.empty, Map.empty, 0L)) { (st, it) =>
       val lens = scala.collection.mutable.HashMap.from(st.lens)
       val tfs = scala.collection.mutable.HashMap.from(st.tfs)
       val touch = scala.collection.mutable.HashMap.from(st.touch)
@@ -143,12 +140,7 @@ object Bm25Stream extends Serializable {
           .map { case ((id, score, nHit), i) => Hit(tick, i + 1, id, score, nHit) }
       }
 
-      state.update(Registry(lens.toMap, tfs.toMap, touch.toMap, tick))
-      out.iterator
+      (Registry(lens.toMap, tfs.toMap, touch.toMap, tick), out.iterator)
     }
-
-    docs.groupByKey(_ => 0)
-      .flatMapGroupsWithState(
-        OutputMode.Append(), GroupStateTimeout.NoTimeout())(fn)
   }
 }

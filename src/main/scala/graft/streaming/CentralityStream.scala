@@ -1,16 +1,14 @@
 package graft.streaming
 
 import org.apache.spark.sql.Dataset
-import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
 
 /** Stateful streaming EIGENVECTOR and HITS maintenance — the
   * incremental counterparts of `GraphOps.eigenvectorCentrality`
   * (q319's normalized power method) and `GraphOps.hits` (q210's
   * hub/authority half-steps), completing the centrality family's
-  * batch/stream pairing next to [[PageRankStream]] (whose registry /
-  * evict-before-recurrence / None-tombstone discipline this reuses
-  * verbatim — see its scaladoc for the shape-honesty and state-cap
-  * arguments, which apply unchanged).
+  * batch/stream pairing next to [[PageRankStream]], in the same
+  * [[GraphRegistry]] frame: evict before the recurrence, `None`
+  * tombstones.
   *
   * Parity discipline: each batch folds new edges into the tracked
   * adjacency, then re-runs the SAME fixed-iteration recurrence with
@@ -65,47 +63,6 @@ object CentralityStream extends Serializable {
   private val QE = 1073741824L       // 2^30, the batch eigenvector quantum
   private val QH = 1099511627776L    // 2^40, the batch HITS quantum
 
-  /** Evict whole least-recently-touched connected components of the
-    * UNDIRECTED view until `nodes.size <= maxNodes` (the
-    * PageRankStream scan, verbatim): returns the evicted node set.
-    * `und` must contain EVERY tracked node as a key (possibly with an
-    * empty neighbor seq).
-    */
-  private def evictComponents(
-      und: scala.collection.mutable.HashMap[Long, scala.collection.mutable.HashSet[Long]],
-      touch: scala.collection.mutable.HashMap[Long, Long],
-      maxNodes: Int): scala.collection.mutable.HashSet[Long] = {
-    val evicted = scala.collection.mutable.HashSet.empty[Long]
-    if (und.size > maxNodes) {
-      val seen = scala.collection.mutable.HashSet.empty[Long]
-      val comps = scala.collection.mutable.ArrayBuffer.empty[(Long, Seq[Long])]
-      und.keys.foreach { s =>
-        if (!seen.contains(s)) {
-          val comp = scala.collection.mutable.ArrayBuffer(s)
-          seen += s
-          var i = 0
-          while (i < comp.length) {
-            und(comp(i)).foreach { w =>
-              if (!seen.contains(w)) { seen += w; comp += w }
-            }
-            i += 1
-          }
-          val recency = comp.iterator.map(touch.getOrElse(_, 0L)).max
-          comps += ((recency, comp.toSeq))
-        }
-      }
-      comps.sortInPlaceBy { case (recency, comp) => (recency, comp.min) }
-      var ci = 0
-      while (und.size > maxNodes && ci < comps.length) {
-        comps(ci)._2.foreach { v =>
-          und.remove(v); touch.remove(v); evicted += v
-        }
-        ci += 1
-      }
-    }
-    evicted
-  }
-
   /** Streaming eigenvector centrality: upsert rows (id, eig) for every
     * value change; eig = None tombstones for evicted previously-emitted
     * ids. Arithmetic ≡ `GraphOps.eigenvectorCentrality(_, _, _,
@@ -119,70 +76,36 @@ object CentralityStream extends Serializable {
     val spark = edges.sparkSession
     import spark.implicits._
 
-    def fn(key: Int, it: Iterator[Edge],
-        state: GroupState[EigRegistry]): Iterator[EigRow] = {
-      val st = state.getOption.getOrElse(
-        EigRegistry(Map.empty, Map.empty, Map.empty, 0L))
-      val adj = scala.collection.mutable.HashMap.from(
-        st.adj.view.mapValues(scala.collection.mutable.HashSet.from(_)))
-      val touch = scala.collection.mutable.HashMap.from(st.touch)
-      val tick = st.tick + 1
-
-      it.foreach { e =>
-        if (e.u != e.v) {            // orient: self-loops dropped
-          val a = adj.getOrElseUpdate(e.u, scala.collection.mutable.HashSet.empty)
-          val b = adj.getOrElseUpdate(e.v, scala.collection.mutable.HashSet.empty)
-          a += e.v; b += e.u
-          touch(e.u) = tick; touch(e.v) = tick
-        }
-      }
-
-      val evicted = evictComponents(adj, touch, maxNodes)
-
-      // the batch recurrence, verbatim arithmetic: x init 1.0; per
-      // round c(w) = Σ_{u~w} floor(x_u·2³⁰) exact longs, global sum
-      // as BigInt (the decimal(38,0) mirror), x ← c/Σc·n
-      val n = adj.size.toLong
-      val newEigs: Map[Long, Double] =
-        if (n == 0L) Map.empty
-        else {
-          var x = scala.collection.mutable.HashMap.from(
-            adj.view.mapValues(_ => 1.0))
-          for (_ <- 1 to iterations) {
-            val c = scala.collection.mutable.HashMap.empty[Long, Long]
-            adj.foreach { case (u, nbrs) =>
-              val qc = math.floor(x(u) * QE).toLong
-              nbrs.foreach { w => c(w) = c.getOrElse(w, 0L) + qc }
-            }
-            var sTot = BigInt(0)
-            c.valuesIterator.foreach(sTot += _)
-            val sD = sTot.toDouble
-            val next = scala.collection.mutable.HashMap.empty[Long, Double]
-            c.foreach { case (v, cv) =>
-              next(v) = cv.toDouble / sD * n.toDouble
-            }
-            x = next
-          }
-          x.toMap
-        }
-
-      val changed = newEigs.iterator.filter { case (v, p) =>
-        !st.eigs.get(v).contains(p)
-      }.toSeq
-      val tombstones = evicted.iterator
-        .filter(st.eigs.contains).toSeq.sorted
-        .map(id => EigRow(id, None))
-
-      state.update(EigRegistry(
-        adj.view.mapValues(_.toSeq.sorted).toMap,
-        newEigs, touch.toMap, tick))
-      (tombstones ++
-        changed.sortBy(_._1).map { case (id, p) => EigRow(id, Some(p)) }).iterator
+    GraphRegistry.single(edges, EigRegistry(Map.empty, Map.empty, Map.empty, 0L)) { (st, it) =>
+      val g = new GraphRegistry.Tracked(st.adj, st.touch, st.tick).fold(it.map(e => (e.u, e.v)))
+      val evicted = GraphRegistry.evict(g.adj, g.touch, maxNodes)
+      val now = eigs(g.adj, iterations)
+      (EigRegistry(g.sortedAdj, now, g.recency, g.tick),
+        GraphRegistry.emissions(evicted, st.eigs, now)(EigRow).iterator)
     }
+  }
 
-    edges.groupByKey(_ => 0)
-      .flatMapGroupsWithState(
-        OutputMode.Append(), GroupStateTimeout.NoTimeout())(fn)
+  /** The batch recurrence, verbatim arithmetic: x init 1.0; per round
+    * c(w) = Σ_{u~w} floor(x_u·2³⁰) exact longs, global sum as BigInt
+    * (the decimal(38,0) mirror), x ← c/Σc·n. */
+  private def eigs(adj: collection.Map[Long, collection.Set[Long]],
+      iterations: Int): Map[Long, Double] = {
+    val n = adj.size.toDouble
+    var x = scala.collection.mutable.HashMap.from(adj.view.mapValues(_ => 1.0))
+    for (_ <- 1 to iterations) {
+      val c = scala.collection.mutable.HashMap.empty[Long, Long]
+      adj.foreach { case (u, nbrs) =>
+        val qc = math.floor(x(u) * QE).toLong
+        nbrs.foreach { w => c(w) = c.getOrElse(w, 0L) + qc }
+      }
+      var sTot = BigInt(0)
+      c.valuesIterator.foreach(sTot += _)
+      val sD = sTot.toDouble
+      val next = scala.collection.mutable.HashMap.empty[Long, Double]
+      c.foreach { case (v, cv) => next(v) = cv.toDouble / sD * n }
+      x = next
+    }
+    x.toMap
   }
 
   /** `katz = Some(score)` upserts, `katz = None` RETRACTS. */
@@ -207,63 +130,29 @@ object CentralityStream extends Serializable {
     val spark = edges.sparkSession
     import spark.implicits._
 
-    def fn(key: Int, it: Iterator[Edge],
-        state: GroupState[EigRegistry]): Iterator[KatzRow] = {
-      val st = state.getOption.getOrElse(
-        EigRegistry(Map.empty, Map.empty, Map.empty, 0L))
-      val adj = scala.collection.mutable.HashMap.from(
-        st.adj.view.mapValues(scala.collection.mutable.HashSet.from(_)))
-      val touch = scala.collection.mutable.HashMap.from(st.touch)
-      val tick = st.tick + 1
-
-      it.foreach { e =>
-        if (e.u != e.v) {            // orient: self-loops dropped
-          val a = adj.getOrElseUpdate(e.u, scala.collection.mutable.HashSet.empty)
-          val b = adj.getOrElseUpdate(e.v, scala.collection.mutable.HashSet.empty)
-          a += e.v; b += e.u
-          touch(e.u) = tick; touch(e.v) = tick
-        }
-      }
-
-      val evicted = evictComponents(adj, touch, maxNodes)
-
-      val newVals: Map[Long, Double] =
-        if (adj.isEmpty) Map.empty
-        else {
-          var x = scala.collection.mutable.HashMap.from(
-            adj.view.mapValues(_ => 1.0))
-          for (_ <- 1 to iterations) {
-            val c = scala.collection.mutable.HashMap.empty[Long, Long]
-            adj.foreach { case (u, nbrs) =>
-              val qc = math.floor(x(u) * QH).toLong
-              nbrs.foreach { w => c(w) = c.getOrElse(w, 0L) + qc }
-            }
-            val next = scala.collection.mutable.HashMap.empty[Long, Double]
-            c.foreach { case (v, cv) =>
-              next(v) = 1.0 + alpha * (cv.toDouble / QH)
-            }
-            x = next
-          }
-          x.toMap
-        }
-
-      val changed = newVals.iterator.filter { case (v, p) =>
-        !st.eigs.get(v).contains(p)
-      }.toSeq
-      val tombstones = evicted.iterator
-        .filter(st.eigs.contains).toSeq.sorted
-        .map(id => KatzRow(id, None))
-
-      state.update(EigRegistry(
-        adj.view.mapValues(_.toSeq.sorted).toMap,
-        newVals, touch.toMap, tick))
-      (tombstones ++
-        changed.sortBy(_._1).map { case (id, p) => KatzRow(id, Some(p)) }).iterator
+    GraphRegistry.single(edges, EigRegistry(Map.empty, Map.empty, Map.empty, 0L)) { (st, it) =>
+      val g = new GraphRegistry.Tracked(st.adj, st.touch, st.tick).fold(it.map(e => (e.u, e.v)))
+      val evicted = GraphRegistry.evict(g.adj, g.touch, maxNodes)
+      val now = katz(g.adj, iterations, alpha)
+      (EigRegistry(g.sortedAdj, now, g.recency, g.tick),
+        GraphRegistry.emissions(evicted, st.eigs, now)(KatzRow).iterator)
     }
+  }
 
-    edges.groupByKey(_ => 0)
-      .flatMapGroupsWithState(
-        OutputMode.Append(), GroupStateTimeout.NoTimeout())(fn)
+  private def katz(adj: collection.Map[Long, collection.Set[Long]],
+      iterations: Int, alpha: Double): Map[Long, Double] = {
+    var x = scala.collection.mutable.HashMap.from(adj.view.mapValues(_ => 1.0))
+    for (_ <- 1 to iterations) {
+      val c = scala.collection.mutable.HashMap.empty[Long, Long]
+      adj.foreach { case (u, nbrs) =>
+        val qc = math.floor(x(u) * QH).toLong
+        nbrs.foreach { w => c(w) = c.getOrElse(w, 0L) + qc }
+      }
+      val next = scala.collection.mutable.HashMap.empty[Long, Double]
+      c.foreach { case (v, cv) => next(v) = 1.0 + alpha * (cv.toDouble / QH) }
+      x = next
+    }
+    x.toMap
   }
 
   /** Streaming HITS: upsert rows (side, id, v) for every value change
@@ -279,94 +168,65 @@ object CentralityStream extends Serializable {
     val spark = arcs.sparkSession
     import spark.implicits._
 
-    def fn(key: Int, it: Iterator[Arc],
-        state: GroupState[HitsRegistry]): Iterator[HitsRow] = {
-      val st = state.getOption.getOrElse(
-        HitsRegistry(Map.empty, Map.empty, Map.empty, Map.empty, 0L))
-      val out = scala.collection.mutable.HashMap.from(
-        st.out.view.mapValues(scala.collection.mutable.HashSet.from(_)))
-      val touch = scala.collection.mutable.HashMap.from(st.touch)
-      val tick = st.tick + 1
-
+    GraphRegistry.single(arcs, HitsRegistry(Map.empty, Map.empty, Map.empty, Map.empty, 0L)) { (st, it) =>
+      val g = new GraphRegistry.Tracked(st.out, st.touch, st.tick)
       it.foreach { a =>                // distinct() only: self-loops kept
-        val dsts = out.getOrElseUpdate(a.src, scala.collection.mutable.HashSet.empty)
-        dsts += a.dst
-        touch(a.src) = tick; touch(a.dst) = tick
+        g.adj.getOrElseUpdate(a.src, scala.collection.mutable.HashSet.empty) += a.dst
+        g.touch(a.src) = g.tick; g.touch(a.dst) = g.tick
       }
-
       // eviction runs on the undirected VIEW (every endpoint a key),
       // then arcs of evicted components vanish with their src keys —
       // a surviving src can't point at an evicted dst because the arc
       // puts both endpoints in the same component
-      val und = scala.collection.mutable.HashMap.empty[Long, scala.collection.mutable.HashSet[Long]]
-      out.foreach { case (u, dsts) =>
-        val uu = und.getOrElseUpdate(u, scala.collection.mutable.HashSet.empty)
-        dsts.foreach { d =>
-          if (d != u) {
-            uu += d
-            und.getOrElseUpdate(d, scala.collection.mutable.HashSet.empty) += u
-          } else und.getOrElseUpdate(d, scala.collection.mutable.HashSet.empty)
-        }
-      }
-      val evicted = evictComponents(und, touch, maxNodes)
-      evicted.foreach(out.remove)
+      val evicted = GraphRegistry.evict(GraphRegistry.undirected(g.adj), g.touch, maxNodes)
+      evicted.foreach(g.adj.remove)
+      val (hubs, auths) = hubsAuths(g.adj, iterations)
+      // per side: tombstones, then upserts; all tombstones lead, by (id, side)
+      val (hubGone, hubUp) = GraphRegistry.emissions(evicted, st.hubs, hubs)(
+        HitsRow("hub", _, _)).partition(_.v.isEmpty)
+      val (authGone, authUp) = GraphRegistry.emissions(evicted, st.auths, auths)(
+        HitsRow("auth", _, _)).partition(_.v.isEmpty)
+      (HitsRegistry(g.sortedAdj, hubs, auths, g.recency, g.tick),
+        ((hubGone ++ authGone).sortBy(r => (r.id, r.side)) ++ hubUp ++ authUp).iterator)
+    }
+  }
 
-      // the batch half-steps, verbatim arithmetic (qsum = Σ floor(v·2⁴⁰)
-      // exact longs, then /2⁴⁰ as double; L1 renormalize by the
-      // identically-quantized global sum)
-      def qsumTo(acc: scala.collection.mutable.HashMap[Long, Long],
-          k: Long, v: Double): Unit =
-        acc(k) = acc.getOrElse(k, 0L) + math.floor(v * QH).toLong
-      def normalized(rawQ: scala.collection.mutable.HashMap[Long, Long])
-          : scala.collection.mutable.HashMap[Long, Double] = {
-        val raw = rawQ.map { case (k, q) => k -> q.toDouble / QH }
-        var sQ = 0L
-        raw.valuesIterator.foreach(v => sQ += math.floor(v * QH).toLong)
-        val s = sQ.toDouble / QH
-        raw.map { case (k, v) => k -> v / s }
-      }
-
-      var (newHubs, newAuths): (Map[Long, Double], Map[Long, Double]) =
-        (Map.empty, Map.empty)
-      if (out.nonEmpty) {
-        val h = out.size.toLong
-        var hub = scala.collection.mutable.HashMap.from(
-          out.view.mapValues(_ => 1.0 / h))
-        var auth = scala.collection.mutable.HashMap.empty[Long, Double]
-        for (_ <- 1 to iterations) {
-          val aRaw = scala.collection.mutable.HashMap.empty[Long, Long]
-          out.foreach { case (u, dsts) =>
-            val hv = hub(u)
-            dsts.foreach(d => qsumTo(aRaw, d, hv))
-          }
-          auth = normalized(aRaw)
-          val hRaw = scala.collection.mutable.HashMap.empty[Long, Long]
-          out.foreach { case (u, dsts) =>
-            dsts.foreach(d => qsumTo(hRaw, u, auth(d)))
-          }
-          hub = normalized(hRaw)
-        }
-        newHubs = hub.toMap; newAuths = auth.toMap
-      }
-
-      def deltas(side: String, now: Map[Long, Double],
-          before: Map[Long, Double]): Seq[HitsRow] =
-        now.iterator.filter { case (v, p) => !before.get(v).contains(p) }
-          .toSeq.sortBy(_._1).map { case (id, p) => HitsRow(side, id, Some(p)) }
-      val tombstones = evicted.iterator.flatMap { id =>
-        (if (st.hubs.contains(id)) Seq(HitsRow("hub", id, None)) else Nil) ++
-          (if (st.auths.contains(id)) Seq(HitsRow("auth", id, None)) else Nil)
-      }.toSeq.sortBy(r => (r.id, r.side))
-
-      state.update(HitsRegistry(
-        out.view.mapValues(_.toSeq.sorted).toMap,
-        newHubs, newAuths, touch.toMap, tick))
-      (tombstones ++ deltas("hub", newHubs, st.hubs) ++
-        deltas("auth", newAuths, st.auths)).iterator
+  /** The batch half-steps, verbatim arithmetic (qsum = Σ floor(v·2⁴⁰)
+    * exact longs, then /2⁴⁰ as double; L1 renormalize by the
+    * identically-quantized global sum). */
+  private def hubsAuths(out: collection.Map[Long, collection.Set[Long]],
+      iterations: Int): (Map[Long, Double], Map[Long, Double]) = {
+    def qsumTo(acc: scala.collection.mutable.HashMap[Long, Long],
+        k: Long, v: Double): Unit =
+      acc(k) = acc.getOrElse(k, 0L) + math.floor(v * QH).toLong
+    def normalized(rawQ: scala.collection.mutable.HashMap[Long, Long])
+        : scala.collection.mutable.HashMap[Long, Double] = {
+      val raw = rawQ.map { case (k, q) => k -> q.toDouble / QH }
+      var sQ = 0L
+      raw.valuesIterator.foreach(v => sQ += math.floor(v * QH).toLong)
+      val s = sQ.toDouble / QH
+      raw.map { case (k, v) => k -> v / s }
     }
 
-    arcs.groupByKey(_ => 0)
-      .flatMapGroupsWithState(
-        OutputMode.Append(), GroupStateTimeout.NoTimeout())(fn)
+    if (out.isEmpty) (Map.empty, Map.empty)
+    else {
+      val h = out.size.toLong
+      var hub = scala.collection.mutable.HashMap.from(out.view.mapValues(_ => 1.0 / h))
+      var auth = scala.collection.mutable.HashMap.empty[Long, Double]
+      for (_ <- 1 to iterations) {
+        val aRaw = scala.collection.mutable.HashMap.empty[Long, Long]
+        out.foreach { case (u, dsts) =>
+          val hv = hub(u)
+          dsts.foreach(d => qsumTo(aRaw, d, hv))
+        }
+        auth = normalized(aRaw)
+        val hRaw = scala.collection.mutable.HashMap.empty[Long, Long]
+        out.foreach { case (u, dsts) =>
+          dsts.foreach(d => qsumTo(hRaw, u, auth(d)))
+        }
+        hub = normalized(hRaw)
+      }
+      (hub.toMap, auth.toMap)
+    }
   }
 }

@@ -1,7 +1,8 @@
 package graft.streaming
 
+import scala.collection.mutable
+
 import org.apache.spark.sql.Dataset
-import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
 
 /** Stateful streaming CONNECTED COMPONENTS — the incremental
   * counterpart of `Dedup.connectedComponents` (q51's batch label
@@ -68,13 +69,10 @@ object ComponentStream {
     val spark = pairs.sparkSession
     import spark.implicits._
 
-    def fn(key: Int, it: Iterator[Pair],
-        state: GroupState[Registry]): Iterator[Assign] = {
-      val st = state.getOption.getOrElse(Registry(Map.empty, Map.empty, Map.empty, 0L))
-      val parent = scala.collection.mutable.HashMap.from(st.parent)
-      val members = scala.collection.mutable.HashMap.from(
-        st.members.view.mapValues(scala.collection.mutable.ArrayBuffer.from(_)))
-      val touch = scala.collection.mutable.HashMap.from(st.touch)
+    GraphRegistry.single(pairs, Registry(Map.empty, Map.empty, Map.empty, 0L)) { (st, it) =>
+      val parent = mutable.HashMap.from(st.parent)
+      val members = mutable.HashMap.from(st.members.view.mapValues(mutable.ArrayBuffer.from(_)))
+      val touch = mutable.HashMap.from(st.touch)
       val tick = st.tick + 1
 
       def find(x: Long): Long = {
@@ -88,13 +86,13 @@ object ComponentStream {
         if (parent.contains(x)) find(x)
         else {
           parent(x) = x
-          members(x) = scala.collection.mutable.ArrayBuffer(x)
+          members(x) = mutable.ArrayBuffer(x)
           x
         }
 
       // changed(id) = rep after this batch, for exactly the ids the
       // emission contract owes: batch-touched nodes + re-rooted members
-      val changed = scala.collection.mutable.HashMap.empty[Long, Long]
+      val changed = mutable.HashMap.empty[Long, Long]
       it.foreach { p =>
         val ra = ensure(p.id_a); val rb = ensure(p.id_b)
         val (lo, hi) = if (ra < rb) (ra, rb) else (rb, ra)
@@ -109,29 +107,16 @@ object ComponentStream {
         changed(p.id_a) = lo; changed(p.id_b) = lo
       }
 
-      // cap: evict whole least-recently-touched components until the
-      // node count fits — never split a live component
-      if (parent.size > maxNodes) {
-        val order = touch.toSeq.sortBy { case (root, t) => (t, root) }
-        var i = 0
-        while (parent.size > maxNodes && i < order.length) {
-          val root = order(i)._1
-          members.remove(root).foreach(_.foreach(parent.remove))
-          touch.remove(root)
-          i += 1
-        }
-      }
+      // cap, AFTER the emissions are fixed: evict whole
+      // least-recently-touched components (a root is its component's
+      // min id and carries its recency) — never split a live one
+      if (parent.size > maxNodes)
+        GraphRegistry.dropOldest(
+          touch.map { case (root, t) => (t, root, members.getOrElse(root, Nil)) },
+          maxNodes)(parent.size) { v => parent.remove(v); members.remove(v); touch.remove(v) }
 
-      state.update(Registry(
-        parent.toMap,
-        members.view.mapValues(_.toSeq).toMap,
-        touch.toMap, tick))
-      changed.iterator.map { case (id, rep) => Assign(id, rep) }.toSeq
-        .sortBy(_.id).iterator
+      (Registry(parent.toMap, members.view.mapValues(_.toSeq).toMap, touch.toMap, tick),
+        changed.toSeq.sortBy(_._1).iterator.map { case (id, rep) => Assign(id, rep) })
     }
-
-    pairs.groupByKey(_ => 0)
-      .flatMapGroupsWithState(
-        OutputMode.Append(), GroupStateTimeout.NoTimeout())(fn)
   }
 }

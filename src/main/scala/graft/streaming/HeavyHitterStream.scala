@@ -1,7 +1,6 @@
 package graft.streaming
 
 import org.apache.spark.sql.Dataset
-import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
 
 /** Stateful streaming heavy hitters — the SpaceSaving summary
   * (Metwally, Agrawal & El Abbadi 2005) carried across micro-batches:
@@ -51,9 +50,7 @@ object HeavyHitterStream {
     val spark = items.sparkSession
     import spark.implicits._
 
-    def fn(key: Int, it: Iterator[String],
-        state: GroupState[Summary]): Iterator[Hit] = {
-      val st = state.getOption.getOrElse(Summary(Map.empty, Map.empty, 0L))
+    GraphRegistry.single(items, Summary(Map.empty, Map.empty, 0L)) { (st, it) =>
       val counts = scala.collection.mutable.HashMap.from(st.counts)
       val errs = scala.collection.mutable.HashMap.from(st.errs)
       // (count, item) ordered mirror of `counts`: head is the eviction
@@ -78,13 +75,9 @@ object HeavyHitterStream {
             order.add((mCount + 1, x))
         }
       }
-      state.update(Summary(counts.toMap, errs.toMap, tick))
-      counts.toSeq.sortBy { case (k, v) => (-v, k) }
-        .map { case (k, v) => Hit(tick, k, v, errs(k)) }.iterator
+      (Summary(counts.toMap, errs.toMap, tick),
+        counts.toSeq.sortBy { case (k, v) => (-v, k) }
+          .map { case (k, v) => Hit(tick, k, v, errs(k)) }.iterator)
     }
-
-    items.groupByKey(_ => 0)
-      .flatMapGroupsWithState(
-        OutputMode.Append(), GroupStateTimeout.NoTimeout())(fn)
   }
 }

@@ -1,7 +1,6 @@
 package graft.streaming
 
 import org.apache.spark.sql.Dataset
-import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
 
 /** Stateful streaming K-CORE maintenance — the incremental counterpart
   * of `GraphOps.kCore` (q209's batch peel), extending the batch≡stream
@@ -23,25 +22,12 @@ import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode
   * EXACTLY the batch `GraphOps.kCore` labeling after any split/order
   * of the edge stream — pinned bit-for-bit in KCoreStreamSpec.
   *
-  * Shape honesty (the [[ComponentStream]] argument, same trade): core
-  * maintenance is inherently global — one arriving edge can tip a
-  * long pendant chain into or out of degree-k reach across the whole
-  * graph — so the registry lives under ONE group key. That is the
-  * low-latency regime's tool: the input is an EDGE stream (already
-  * pair-reduced, orders of magnitude sparser than the raw event
-  * stream), and at an edge rate where one core saturates the
-  * re-peel, run the distributed batch peel (`GraphOps.kCore`) on a
-  * schedule instead — exactly the incremental-index-between-batch-
-  * rebuilds convention the reference establishes.
-  *
-  * State discipline (the family's capped rule, by COMPONENT): the
-  * adjacency holds ≤ `maxNodes` nodes; past the cap, whole
-  * least-recently-touched connected components are evicted (never
-  * split — k-core(G) = ∪ k-core(component), so evicting whole
-  * components keeps every retained answer exact). An evicted
-  * component's rows are final in the upsert sink; its ids start fresh
-  * if edges re-touch them — the same recall trade every capped stream
-  * in this family documents.
+  * Registry, shape and state cap: the [[GraphRegistry]] frame. K-core
+  * is insert-only, so the batch's rows are computed and emitted FIRST
+  * and whole least-recently-touched components evicted after (never
+  * split — k-core(G) = ∪ k-core(component), so every retained answer
+  * stays exact). An evicted component's rows are final in the upsert
+  * sink; its ids start fresh if edges re-touch them.
   */
 object KCoreStream {
 
@@ -67,95 +53,40 @@ object KCoreStream {
     val spark = edges.sparkSession
     import spark.implicits._
 
-    def fn(key: Int, it: Iterator[Edge],
-        state: GroupState[Registry]): Iterator[CoreRow] = {
-      val st = state.getOption.getOrElse(Registry(Map.empty, Map.empty, Map.empty, 0L))
-      val adj = scala.collection.mutable.HashMap.from(
-        st.adj.view.mapValues(scala.collection.mutable.HashSet.from(_)))
-      val touch = scala.collection.mutable.HashMap.from(st.touch)
-      val tick = st.tick + 1
-
-      // fold the batch: dedup + drop self-loops (idempotent under
-      // duplicated delivery — a replayed edge is a no-op)
-      it.foreach { e =>
-        if (e.u != e.v) {
-          val a = adj.getOrElseUpdate(e.u, scala.collection.mutable.HashSet.empty)
-          val b = adj.getOrElseUpdate(e.v, scala.collection.mutable.HashSet.empty)
-          a += e.v; b += e.u
-          touch(e.u) = tick; touch(e.v) = tick
-        }
-      }
-
-      // peel to fixpoint: queue-based Matula–Beck style, O(V+E) on the
-      // tracked subgraph; deterministic because the surviving SET (and
-      // each survivor's in-core degree) is peel-order independent
-      val deg = scala.collection.mutable.HashMap.from(
-        adj.view.mapValues(_.size))
-      val queue = scala.collection.mutable.ArrayDeque.from(
-        deg.collect { case (v, d) if d < k => v })
-      val dead = scala.collection.mutable.HashSet.empty[Long]
-      while (queue.nonEmpty) {
-        val v = queue.removeHead()
-        if (!dead.contains(v) && deg(v) < k) {
-          dead += v
-          adj(v).foreach { w =>
-            if (!dead.contains(w)) {
-              val d = deg(w) - 1
-              deg(w) = d
-              if (d < k) queue += w
-            }
-          }
-        }
-      }
-      val newCore: Map[Long, Long] = deg.collect {
-        case (v, d) if !dead.contains(v) && d >= k => (v, d.toLong)
-      }.toMap
-
+    GraphRegistry.single(edges, Registry(Map.empty, Map.empty, Map.empty, 0L)) { (st, it) =>
+      val g = new GraphRegistry.Tracked(st.adj, st.touch, st.tick).fold(it.map(e => (e.u, e.v)))
+      val now = core(g.adj, k)
       // emissions: exactly the rows the upsert sink is owed — members
       // whose in-core degree changed (insert-only arrival makes these
       // monotone upserts; membership never retracts)
-      val changed = newCore.iterator.filter { case (v, d) =>
-        !st.core.get(v).contains(d)
-      }.toSeq
+      val rows = GraphRegistry.changed(st.core, now).map { case (id, d) => CoreRow(id, d) }
+      GraphRegistry.evict(g.adj, g.touch, maxNodes)
+      (Registry(g.sortedAdj, now.view.filterKeys(g.adj.contains).toMap, g.recency, g.tick),
+        rows.iterator)
+    }
+  }
 
-      // cap: evict whole least-recently-touched components (BFS over
-      // the tracked adjacency; eviction is the rare path, so the scan
-      // cost is accepted) — never split a live component
-      if (adj.size > maxNodes) {
-        val seen = scala.collection.mutable.HashSet.empty[Long]
-        val comps = scala.collection.mutable.ArrayBuffer.empty[(Long, Seq[Long])]
-        adj.keys.foreach { s =>
-          if (!seen.contains(s)) {
-            val comp = scala.collection.mutable.ArrayBuffer(s)
-            seen += s
-            var i = 0
-            while (i < comp.length) {
-              adj(comp(i)).foreach { w =>
-                if (!seen.contains(w)) { seen += w; comp += w }
-              }
-              i += 1
-            }
-            val recency = comp.iterator.map(touch.getOrElse(_, 0L)).max
-            comps += ((recency, comp.toSeq))
+  /** Peel to fixpoint: queue-based Matula–Beck style, O(V+E) on the
+    * tracked subgraph; deterministic because the surviving SET (and
+    * each survivor's in-core degree) is peel-order independent. */
+  private def core(adj: collection.Map[Long, collection.Set[Long]], k: Int): Map[Long, Long] = {
+    val deg = scala.collection.mutable.HashMap.from(adj.view.mapValues(_.size))
+    val queue = scala.collection.mutable.ArrayDeque.from(
+      deg.collect { case (v, d) if d < k => v })
+    val dead = scala.collection.mutable.HashSet.empty[Long]
+    while (queue.nonEmpty) {
+      val v = queue.removeHead()
+      if (!dead.contains(v) && deg(v) < k) {
+        dead += v
+        adj(v).foreach { w =>
+          if (!dead.contains(w)) {
+            val d = deg(w) - 1
+            deg(w) = d
+            if (d < k) queue += w
           }
         }
-        comps.sortInPlaceBy { case (recency, comp) => (recency, comp.min) }
-        var ci = 0
-        while (adj.size > maxNodes && ci < comps.length) {
-          comps(ci)._2.foreach { v => adj.remove(v); touch.remove(v) }
-          ci += 1
-        }
       }
-
-      state.update(Registry(
-        adj.view.mapValues(_.toSeq.sorted).toMap,
-        newCore.view.filterKeys(adj.contains).toMap,
-        touch.toMap, tick))
-      changed.sortBy(_._1).iterator.map { case (id, d) => CoreRow(id, d) }
     }
-
-    edges.groupByKey(_ => 0)
-      .flatMapGroupsWithState(
-        OutputMode.Append(), GroupStateTimeout.NoTimeout())(fn)
+    deg.collect { case (v, d) if !dead.contains(v) && d >= k => (v, d.toLong) }.toMap
   }
 }

@@ -1,7 +1,6 @@
 package graft.streaming
 
 import org.apache.spark.sql.Dataset
-import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
 
 /** Stateful streaming LABEL-PROPAGATION COMMUNITIES — the incremental
   * counterpart of `GraphOps.labelPropagation` (q198's batch
@@ -21,15 +20,6 @@ import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode
   * `labelPropagation` over the same edges bit-for-bit — pinned in
   * LpaStreamSpec at every growth stage.
   *
-  * Shape honesty (the [[PageRankStream]] argument): synchronous LPA
-  * is global (one new edge can flip labels across the graph through
-  * the fixed rounds), so the registry lives under ONE group key and
-  * re-iterates the tracked subgraph per batch — O(iterations·E) work
-  * on one core. The input is an EDGE stream (already pair-reduced);
-  * at a rate where one core saturates, run the distributed batch
-  * `labelPropagation` on a schedule and keep this for the low-latency
-  * window — the incremental-index-between-batch-rebuilds convention.
-  *
   * Emission contract (upsert-convergent): every batch emits (id,
   * Some(community)) for each id whose converged label CHANGED vs the
   * last emission, plus type-visible `None` TOMBSTONES (NULL in the
@@ -38,11 +28,9 @@ import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode
   * sink therefore always holds exactly the tracked graph's current
   * communities.
   *
-  * State cap (the family's rule): past `maxNodes`, whole
-  * least-recently-touched connected components are evicted BEFORE the
-  * batch's recurrence runs (a community is a subset of a component,
-  * so evicting whole components never splits one), keeping retained
-  * answers exact for the tracked graph.
+  * Registry, shape and state cap: the [[GraphRegistry]] frame, evicting
+  * BEFORE the recurrence runs (a community is a subset of a component,
+  * so evicting whole components never splits one).
   */
 object LpaStream {
 
@@ -69,97 +57,40 @@ object LpaStream {
     val spark = edges.sparkSession
     import spark.implicits._
 
-    def fn(key: Int, it: Iterator[Edge],
-        state: GroupState[Registry]): Iterator[LabelRow] = {
-      val st = state.getOption.getOrElse(Registry(Map.empty, Map.empty, Map.empty, 0L))
-      val adj = scala.collection.mutable.HashMap.from(
-        st.adj.view.mapValues(scala.collection.mutable.HashSet.from(_)))
-      val touch = scala.collection.mutable.HashMap.from(st.touch)
-      val tick = st.tick + 1
-
-      it.foreach { e =>
-        if (e.u != e.v) {
-          val a = adj.getOrElseUpdate(e.u, scala.collection.mutable.HashSet.empty)
-          val b = adj.getOrElseUpdate(e.v, scala.collection.mutable.HashSet.empty)
-          a += e.v; b += e.u
-          touch(e.u) = tick; touch(e.v) = tick
-        }
-      }
-
-      // cap FIRST: evict whole least-recently-touched components (the
-      // family's evict-before-recurrence rule), so every emission this
-      // batch is computed over exactly the surviving tracked graph
-      val evicted = scala.collection.mutable.HashSet.empty[Long]
-      if (adj.size > maxNodes) {
-        val seen = scala.collection.mutable.HashSet.empty[Long]
-        val comps = scala.collection.mutable.ArrayBuffer.empty[(Long, Seq[Long])]
-        adj.keys.foreach { s =>
-          if (!seen.contains(s)) {
-            val comp = scala.collection.mutable.ArrayBuffer(s)
-            seen += s
-            var i = 0
-            while (i < comp.length) {
-              adj(comp(i)).foreach { w =>
-                if (!seen.contains(w)) { seen += w; comp += w }
-              }
-              i += 1
-            }
-            val recency = comp.iterator.map(touch.getOrElse(_, 0L)).max
-            comps += ((recency, comp.toSeq))
-          }
-        }
-        comps.sortInPlaceBy { case (recency, comp) => (recency, comp.min) }
-        var ci = 0
-        while (adj.size > maxNodes && ci < comps.length) {
-          comps(ci)._2.foreach { v =>
-            adj.remove(v); touch.remove(v); evicted += v
-          }
-          ci += 1
-        }
-      }
-
-      // the batch recurrence, verbatim: labels = own id; per round,
-      // relabel every node with the most frequent neighbor label,
-      // argmax by (count, then MIN label) — pure integer arithmetic,
-      // so stream ≡ batch needs no quantization argument at all
-      var lbl = scala.collection.mutable.HashMap.from(
-        adj.keysIterator.map(v => v -> v))
-      for (_ <- 1 to iterations) {
-        val next = scala.collection.mutable.HashMap.empty[Long, Long]
-        adj.foreach { case (v, nbrs) =>
-          val counts = scala.collection.mutable.HashMap.empty[Long, Long]
-          nbrs.foreach { w =>
-            val l = lbl(w)
-            counts(l) = counts.getOrElse(l, 0L) + 1L
-          }
-          // max count, ties to MIN label (deterministic, the batch
-          // operator's lexicographic (c, −label) argmax)
-          var bestL = Long.MaxValue; var bestC = 0L
-          counts.foreach { case (l, c) =>
-            if (c > bestC || (c == bestC && l < bestL)) { bestC = c; bestL = l }
-          }
-          next(v) = bestL
-        }
-        lbl = next
-      }
-
-      val changed = lbl.iterator.filter { case (v, l) =>
-        !st.labels.get(v).contains(l)
-      }.toSeq
-      val tombstones = evicted.iterator
-        .filter(st.labels.contains).toSeq.sorted
-        .map(id => LabelRow(id, None))
-
-      state.update(Registry(
-        adj.view.mapValues(_.toSeq.sorted).toMap,
-        lbl.toMap,
-        touch.toMap, tick))
-      (tombstones ++
-        changed.sortBy(_._1).map { case (id, l) => LabelRow(id, Some(l)) }).iterator
+    GraphRegistry.single(edges, Registry(Map.empty, Map.empty, Map.empty, 0L)) { (st, it) =>
+      val g = new GraphRegistry.Tracked(st.adj, st.touch, st.tick).fold(it.map(e => (e.u, e.v)))
+      val evicted = GraphRegistry.evict(g.adj, g.touch, maxNodes)
+      val now = labels(g.adj, iterations)
+      (Registry(g.sortedAdj, now, g.recency, g.tick),
+        GraphRegistry.emissions(evicted, st.labels, now)(LabelRow).iterator)
     }
+  }
 
-    edges.groupByKey(_ => 0)
-      .flatMapGroupsWithState(
-        OutputMode.Append(), GroupStateTimeout.NoTimeout())(fn)
+  /** The batch recurrence, verbatim: labels = own id; per round,
+    * relabel every node with the most frequent neighbor label, argmax
+    * by (count, then MIN label) — pure integer arithmetic, so stream ≡
+    * batch needs no quantization argument at all. */
+  private def labels(adj: collection.Map[Long, collection.Set[Long]],
+      iterations: Int): Map[Long, Long] = {
+    var lbl = scala.collection.mutable.HashMap.from(adj.keysIterator.map(v => v -> v))
+    for (_ <- 1 to iterations) {
+      val next = scala.collection.mutable.HashMap.empty[Long, Long]
+      adj.foreach { case (v, nbrs) =>
+        val counts = scala.collection.mutable.HashMap.empty[Long, Long]
+        nbrs.foreach { w =>
+          val l = lbl(w)
+          counts(l) = counts.getOrElse(l, 0L) + 1L
+        }
+        // max count, ties to MIN label (deterministic, the batch
+        // operator's lexicographic (c, −label) argmax)
+        var bestL = Long.MaxValue; var bestC = 0L
+        counts.foreach { case (l, c) =>
+          if (c > bestC || (c == bestC && l < bestL)) { bestC = c; bestL = l }
+        }
+        next(v) = bestL
+      }
+      lbl = next
+    }
+    lbl.toMap
   }
 }

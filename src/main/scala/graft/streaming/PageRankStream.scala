@@ -1,7 +1,6 @@
 package graft.streaming
 
 import org.apache.spark.sql.Dataset
-import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
 
 /** Stateful streaming PAGERANK maintenance — the incremental
   * counterpart of `GraphOps.pageRank` (q99's batch power iteration),
@@ -27,25 +26,15 @@ import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode
   * grow-only ones; the changed set is usually component-local because
   * unaffected doubles reproduce identically.
   *
-  * Shape honesty (the [[ComponentStream]] argument): the recurrence
-  * is global (n sits in every rank), so the registry lives under ONE
-  * group key and re-iterates the tracked subgraph per batch —
-  * O(iterations·E) in memory, millions of edges/sec on one core. The
-  * input is an EDGE stream (already pair-reduced); at a rate where
-  * one core saturates, run the distributed batch `pageRank` on a
-  * schedule and keep this for the low-latency window — the
-  * incremental-index-between-batch-rebuilds convention.
-  *
-  * State cap (the family's rule): past `maxNodes`, whole
-  * least-recently-touched connected components are evicted BEFORE the
-  * batch's recurrence runs, so every emitted rank is computed over
-  * exactly the surviving tracked graph — retained answers stay exact
-  * for the TRACKED graph, the same recall trade every capped stream
-  * documents. Evicted ids whose ranks were previously emitted get a
-  * TOMBSTONE row — TYPE-VISIBLE as `pr = None` (NULL in the sink
-  * schema), so a retraction can never be mistaken for a value and an
-  * id-keyed upsert sink drops NULL-rank rows; the registry family
-  * (CentralityStream's three operators) shares this emission shape.
+  * Registry, shape and state cap: the [[GraphRegistry]] frame. Past
+  * `maxNodes`, whole least-recently-touched components are evicted
+  * BEFORE the recurrence runs, so every emitted rank is computed over
+  * exactly the surviving tracked graph. Evicted ids whose ranks were
+  * previously emitted get a TOMBSTONE row — TYPE-VISIBLE as `pr = None`
+  * (NULL in the sink schema), so a retraction can never be mistaken for
+  * a value and an id-keyed upsert sink drops NULL-rank rows; the
+  * registry family (CentralityStream's three operators) shares this
+  * emission shape.
   */
 object PageRankStream {
 
@@ -74,105 +63,38 @@ object PageRankStream {
     val spark = edges.sparkSession
     import spark.implicits._
 
-    def fn(key: Int, it: Iterator[Edge],
-        state: GroupState[Registry]): Iterator[RankRow] = {
-      val st = state.getOption.getOrElse(Registry(Map.empty, Map.empty, Map.empty, 0L))
-      val adj = scala.collection.mutable.HashMap.from(
-        st.adj.view.mapValues(scala.collection.mutable.HashSet.from(_)))
-      val touch = scala.collection.mutable.HashMap.from(st.touch)
-      val tick = st.tick + 1
-
-      it.foreach { e =>
-        if (e.u != e.v) {
-          val a = adj.getOrElseUpdate(e.u, scala.collection.mutable.HashSet.empty)
-          val b = adj.getOrElseUpdate(e.v, scala.collection.mutable.HashSet.empty)
-          a += e.v; b += e.u
-          touch(e.u) = tick; touch(e.v) = tick
-        }
-      }
-
-      // cap FIRST: evict whole least-recently-touched components (the
-      // KCoreStream scan; eviction is the rare path), so the
-      // recurrence below — and therefore every emission this batch —
-      // runs over exactly the surviving tracked graph
-      val evicted = scala.collection.mutable.HashSet.empty[Long]
-      if (adj.size > maxNodes) {
-        val seen = scala.collection.mutable.HashSet.empty[Long]
-        val comps = scala.collection.mutable.ArrayBuffer.empty[(Long, Seq[Long])]
-        adj.keys.foreach { s =>
-          if (!seen.contains(s)) {
-            val comp = scala.collection.mutable.ArrayBuffer(s)
-            seen += s
-            var i = 0
-            while (i < comp.length) {
-              adj(comp(i)).foreach { w =>
-                if (!seen.contains(w)) { seen += w; comp += w }
-              }
-              i += 1
-            }
-            val recency = comp.iterator.map(touch.getOrElse(_, 0L)).max
-            comps += ((recency, comp.toSeq))
-          }
-        }
-        comps.sortInPlaceBy { case (recency, comp) => (recency, comp.min) }
-        var ci = 0
-        while (adj.size > maxNodes && ci < comps.length) {
-          comps(ci)._2.foreach { v =>
-            adj.remove(v); touch.remove(v); evicted += v
-          }
-          ci += 1
-        }
-      }
-
-      // the batch recurrence, verbatim arithmetic
-      val n = adj.size.toLong
-      val newRanks: Map[Long, Double] =
-        if (n == 0L) Map.empty
-        else {
-          val base = (1.0 - damping) / n
-          var pr = scala.collection.mutable.HashMap.from(
-            adj.view.mapValues(_ => 1.0 / n))
-          for (_ <- 1 to iterations) {
-            // cv = p / deg per node (deg ≥ 1: every tracked node has
-            // an edge), then exact integer contribution sums
-            val contrib = scala.collection.mutable.HashMap.empty[Long, Long]
-            adj.foreach { case (u, nbrs) =>
-              val cv = pr(u) / nbrs.size
-              val qc = math.floor(cv * Q).toLong
-              nbrs.foreach { w =>
-                contrib(w) = contrib.getOrElse(w, 0L) + qc
-              }
-            }
-            val next = scala.collection.mutable.HashMap.empty[Long, Double]
-            adj.keys.foreach { v =>
-              next(v) = base +
-                damping * (contrib.getOrElse(v, 0L).toDouble / Q)
-            }
-            pr = next
-          }
-          pr.toMap
-        }
-
-      val changed = newRanks.iterator.filter { case (v, p) =>
-        !st.ranks.get(v).contains(p)
-      }.toSeq
-      // tombstones: evicted ids whose rank was previously emitted —
-      // pr = None (NULL downstream) tells an id-keyed upsert sink to
-      // DROP the row, so untracked nodes never linger as stale ranks
-      val tombstones = evicted.iterator
-        .filter(st.ranks.contains).toSeq.sorted
-        .map(id => RankRow(id, None))
-
-      state.update(Registry(
-        adj.view.mapValues(_.toSeq.sorted).toMap,
-        newRanks,
-        touch.toMap, tick))
-      (tombstones ++
-        changed.sortBy(_._1).map { case (id, p) => RankRow(id, Some(p)) }).iterator
+    GraphRegistry.single(edges, Registry(Map.empty, Map.empty, Map.empty, 0L)) { (st, it) =>
+      val g = new GraphRegistry.Tracked(st.adj, st.touch, st.tick).fold(it.map(e => (e.u, e.v)))
+      val evicted = GraphRegistry.evict(g.adj, g.touch, maxNodes)
+      val now = ranks(g.adj, iterations, damping)
+      (Registry(g.sortedAdj, now, g.recency, g.tick),
+        GraphRegistry.emissions(evicted, st.ranks, now)(RankRow).iterator)
     }
+  }
 
-    edges.groupByKey(_ => 0)
-      .flatMapGroupsWithState(
-        OutputMode.Append(), GroupStateTimeout.NoTimeout())(fn)
+  /** The batch recurrence, verbatim arithmetic. */
+  private def ranks(adj: collection.Map[Long, collection.Set[Long]],
+      iterations: Int, damping: Double): Map[Long, Double] = {
+    val n = adj.size.toLong
+    if (n == 0L) Map.empty
+    else {
+      val base = (1.0 - damping) / n
+      var pr = scala.collection.mutable.HashMap.from(adj.view.mapValues(_ => 1.0 / n))
+      for (_ <- 1 to iterations) {
+        // cv = p / deg per node (deg ≥ 1: every tracked node has an
+        // edge), then exact integer contribution sums
+        val contrib = scala.collection.mutable.HashMap.empty[Long, Long]
+        adj.foreach { case (u, nbrs) =>
+          val qc = math.floor(pr(u) / nbrs.size * Q).toLong
+          nbrs.foreach { w => contrib(w) = contrib.getOrElse(w, 0L) + qc }
+        }
+        val next = scala.collection.mutable.HashMap.empty[Long, Double]
+        adj.keys.foreach { v =>
+          next(v) = base + damping * (contrib.getOrElse(v, 0L).toDouble / Q)
+        }
+        pr = next
+      }
+      pr.toMap
+    }
   }
 }

@@ -1,7 +1,8 @@
 package graft.streaming
 
+import scala.collection.mutable
+
 import org.apache.spark.sql.Dataset
-import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
 
 /** Stateful streaming WEIGHTED-SSSP maintenance — the incremental
   * counterpart of `GraphOps.bellmanFord` (q292's round-bounded
@@ -32,10 +33,10 @@ import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode
   * is handled by the same component-wise eviction, which removes the
   * whole component.
   *
-  * State cap (the family's rule): past `maxNodes`, whole
-  * least-recently-touched weakly-connected components are evicted
-  * BEFORE the relaxation runs, so every emitted distance is computed
-  * over exactly the surviving tracked graph.
+  * Registry, shape and state cap: the [[GraphRegistry]] frame; whole
+  * weakly-connected components are evicted BEFORE the relaxation runs,
+  * so every emitted distance is computed over exactly the surviving
+  * tracked graph.
   */
 object SsspStream extends Serializable {
 
@@ -80,111 +81,51 @@ object SsspStream extends Serializable {
     val spark = arcs.sparkSession
     import spark.implicits._
 
-    def fn(key: Int, it: Iterator[WArc],
-        state: GroupState[Registry]): Iterator[DistRow] = {
-      val st = state.getOption.getOrElse(
-        Registry(Map.empty, Map.empty, Map.empty, 0L))
+    GraphRegistry.single(arcs, Registry(Map.empty, Map.empty, Map.empty, 0L)) { (st, it) =>
       // unpack: src -> (dst -> min cost)
-      val adj = scala.collection.mutable.HashMap.empty[Long,
-        scala.collection.mutable.HashMap[Long, Long]]
-      st.adj.foreach { case (u, packed) =>
-        val m = scala.collection.mutable.HashMap.empty[Long, Long]
-        var k = 0
-        while (k + 1 < packed.length) { m(packed(k)) = packed(k + 1); k += 2 }
-        adj(u) = m
-      }
-      val touch = scala.collection.mutable.HashMap.from(st.touch)
+      val adj = mutable.HashMap.from(st.adj.view.mapValues(packed =>
+        mutable.HashMap.from(packed.grouped(2).collect { case Seq(d, c) => d -> c })))
+      val touch = mutable.HashMap.from(st.touch)
       val tick = st.tick + 1
-
       it.foreach { a =>
         if (a.cost >= 0L) {          // negative arcs are out of contract
-          val m = adj.getOrElseUpdate(a.src,
-            scala.collection.mutable.HashMap.empty[Long, Long])
+          val m = adj.getOrElseUpdate(a.src, mutable.HashMap.empty[Long, Long])
           m(a.dst) = math.min(m.getOrElse(a.dst, Long.MaxValue), a.cost)
           touch(a.src) = tick; touch(a.dst) = tick
         }
       }
-
-      // undirected VIEW for component-wise LRU eviction (every
-      // endpoint a key, including dst-only nodes)
-      val und = scala.collection.mutable.HashMap.empty[Long,
-        scala.collection.mutable.HashSet[Long]]
-      adj.foreach { case (u, m) =>
-        val uu = und.getOrElseUpdate(u, scala.collection.mutable.HashSet.empty)
-        m.keysIterator.foreach { d =>
-          if (d != u) {
-            uu += d
-            und.getOrElseUpdate(d, scala.collection.mutable.HashSet.empty) += u
-          } else und.getOrElseUpdate(d, scala.collection.mutable.HashSet.empty)
-        }
-      }
-      val evicted = scala.collection.mutable.HashSet.empty[Long]
-      if (und.size > maxNodes) {
-        val seen = scala.collection.mutable.HashSet.empty[Long]
-        val comps = scala.collection.mutable.ArrayBuffer.empty[(Long, Seq[Long])]
-        und.keys.foreach { s =>
-          if (!seen.contains(s)) {
-            val comp = scala.collection.mutable.ArrayBuffer(s)
-            seen += s
-            var i = 0
-            while (i < comp.length) {
-              und(comp(i)).foreach { w =>
-                if (!seen.contains(w)) { seen += w; comp += w }
-              }
-              i += 1
-            }
-            val recency = comp.iterator.map(touch.getOrElse(_, 0L)).max
-            comps += ((recency, comp.toSeq))
-          }
-        }
-        comps.sortInPlaceBy { case (recency, comp) => (recency, comp.min) }
-        var ci = 0
-        while (und.size > maxNodes && ci < comps.length) {
-          comps(ci)._2.foreach { v =>
-            und.remove(v); touch.remove(v); adj.remove(v); evicted += v
-          }
-          ci += 1
-        }
-      }
-
-      // the batch recurrence, verbatim: seeds = out-degree>0 nodes
-      // with id % seedMod == 0 at dist 0; `rounds` relaxations, each
-      // extending the min-cost-over-≤r-arc-paths invariant by one arc
-      // (pure Long arithmetic — order-free, bit-exact)
-      val dist = scala.collection.mutable.HashMap.empty[Long, Long]
-      adj.keysIterator.filter(v => math.floorMod(v, seedMod) == 0L)
-        .foreach(dist(_) = 0L)
-      for (_ <- 1 to rounds) {
-        val cand = scala.collection.mutable.HashMap.empty[Long, Long]
-        dist.foreach { case (u, du) =>
-          adj.get(u).foreach(_.foreach { case (w, c) =>
-            val nd = du + c
-            if (nd < cand.getOrElse(w, Long.MaxValue)) cand(w) = nd
-          })
-        }
-        cand.foreach { case (v, d) =>
-          if (d < dist.getOrElse(v, Long.MaxValue)) dist(v) = d
-        }
-      }
-      val newDists = dist.toMap
-
-      val changed = newDists.iterator.filter { case (v, d) =>
-        !st.dists.get(v).contains(d)
-      }.toSeq
-      val tombstones = evicted.iterator
-        .filter(st.dists.contains).toSeq.sorted
-        .map(id => DistRow(id, Tombstone))
-
-      state.update(Registry(
-        adj.view.mapValues(m =>
-          m.toSeq.sortBy(_._1).flatMap { case (d, c) => Seq(d, c) }).toMap,
-        newDists, touch.toMap, tick))
-      (tombstones ++
-        changed.sortBy(_._1).map { case (id, d) => DistRow(id, d) }).iterator
+      val evicted = GraphRegistry.evict(
+        GraphRegistry.undirected(adj.view.mapValues(_.keys)), touch, maxNodes)
+      evicted.foreach(adj.remove)
+      val now = distances(adj, seedMod, rounds)
+      (Registry(
+        adj.view.mapValues(_.toSeq.sortBy(_._1).flatMap { case (d, c) => Seq(d, c) }).toMap,
+        now, touch.toMap, tick),
+        GraphRegistry.emissions(evicted, st.dists, now)(
+          (id, d) => DistRow(id, d.getOrElse(Tombstone))).iterator)
     }
+  }
 
-    arcs.groupByKey(_ => 0)
-      .flatMapGroupsWithState(
-        OutputMode.Append(), GroupStateTimeout.NoTimeout())(fn)
+  /** The batch recurrence, verbatim: seeds = out-degree>0 nodes with
+    * id % seedMod == 0 at dist 0; `rounds` relaxations, each extending
+    * the min-cost-over-≤r-arc-paths invariant by one arc (pure Long
+    * arithmetic — order-free, bit-exact). */
+  private def distances(adj: collection.Map[Long, collection.Map[Long, Long]],
+      seedMod: Long, rounds: Int): Map[Long, Long] = {
+    val dist = mutable.HashMap.empty[Long, Long]
+    adj.keysIterator.filter(v => math.floorMod(v, seedMod) == 0L).foreach(dist(_) = 0L)
+    for (_ <- 1 to rounds) {
+      val cand = mutable.HashMap.empty[Long, Long]
+      dist.foreach { case (u, du) =>
+        adj.get(u).foreach(_.foreach { case (w, c) =>
+          val nd = du + c
+          if (nd < cand.getOrElse(w, Long.MaxValue)) cand(w) = nd
+        })
+      }
+      cand.foreach { case (v, d) =>
+        if (d < dist.getOrElse(v, Long.MaxValue)) dist(v) = d
+      }
+    }
+    dist.toMap
   }
 }

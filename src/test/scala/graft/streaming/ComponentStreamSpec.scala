@@ -122,4 +122,24 @@ class ComponentStreamSpec extends SparkSpec {
       assert(live(2L) === 2L && live(3L) === 2L) // fresh component, min 2
     } finally q.stop()
   }
+
+  test("a batch whose own component overflows the cap emits first, then evicts") {
+    import spark.implicits._
+    implicit val sqlCtx = spark.sqlContext
+    val mem = MemoryStream[Pair]
+    // cap 2 nodes, and one batch builds {1,2,3}: its labels are emitted
+    // (final in the sink) and only then is the component evicted, so a
+    // later pair (3,4) starts a fresh component with rep 3, not 1
+    val q = ComponentStream.assignments(mem.toDS(), maxNodes = 2)
+      .writeStream.format("memory").queryName("cc_overflow")
+      .outputMode(OutputMode.Append).trigger(Trigger.ProcessingTime(0)).start()
+    try {
+      mem.addData(Pair(1L, 2L), Pair(2L, 3L)); q.processAllAvailable()
+      val first = spark.table("cc_overflow").as[Assign].collect().toSeq
+      assert(first === Seq(Assign(1L, 1L), Assign(2L, 1L), Assign(3L, 1L)))
+      mem.addData(Pair(3L, 4L)); q.processAllAvailable()
+      val second = spark.table("cc_overflow").as[Assign].collect().toSeq.drop(first.size)
+      assert(second === Seq(Assign(3L, 3L), Assign(4L, 3L)))
+    } finally q.stop()
+  }
 }

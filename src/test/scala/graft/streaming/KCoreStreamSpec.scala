@@ -108,4 +108,15 @@ class KCoreStreamSpec extends SparkSpec {
     assert(live === Map(1L -> 2L, 2L -> 2L, 3L -> 2L,
       10L -> 2L, 11L -> 2L, 12L -> 2L))
   }
+
+  test("a batch whose own component overflows the cap emits first, then evicts") {
+    // cap 2 nodes, and one batch holds the triangle {1,2,3}: its 2-core
+    // rows are emitted (final in the sink) before the triangle is
+    // evicted. The next batch's triangle {1,2,4} then starts fresh:
+    // retained state would have given 1 and 2 in-core degree 3
+    val rows = drive(Seq(Seq((1L, 2L), (2L, 3L), (3L, 1L)),
+      Seq((1L, 2L), (2L, 4L), (4L, 1L))), 2, maxNodes = 2)
+    assert(rows === Seq(CoreRow(1L, 2L), CoreRow(2L, 2L), CoreRow(3L, 2L),
+      CoreRow(1L, 2L), CoreRow(2L, 2L), CoreRow(4L, 2L)))
+  }
 }
